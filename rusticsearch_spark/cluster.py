@@ -179,8 +179,10 @@ class Cluster:
         doc_id, then one row-group-pruned read of that job's docs dir
         fetches the stored row.  Falls back to the Spark scan when a
         deletion list is pending (the logical-delete window), the
-        sidecar is incomplete (legacy index), or the key column is
-        not a string."""
+        sidecar is incomplete (legacy index), or the key column or
+        the key is not a string.  Both paths return the same keys:
+        every column of the engine's docs frame, None where the
+        document's job did not store it."""
         eng = self.engine(index)
         if eng.deletions is None:
             row = self._get_document_driver(eng, key)
@@ -200,6 +202,10 @@ class Cluster:
         import pyarrow.dataset as ds
 
         from .index.doc_index import lookup_key_driver
+        if not (isinstance(key, str) and eng.key_is_string):
+            # kbucket is Spark's hash of the native key type, which
+            # the driver's string hash does not reproduce
+            return NotImplemented
         hits = lookup_key_driver(eng.layout, eng.config, eng._jobs, key)
         if hits is None:
             return NotImplemented
@@ -213,9 +219,10 @@ class Cluster:
             return NotImplemented
         row = {c: tbl.column(c)[0].as_py() for c in tbl.column_names}
         # match the Spark path's Row.asDict exactly: the basePath
-        # partition column rides along, and binary cells surface as
-        # bytearray
+        # partition column rides along, columns this job did not
+        # store read as None, and binary cells surface as bytearray
         row["job"] = job
+        row = {c: row.get(c) for c in eng.docs.columns}
         return {k: (bytearray(v) if isinstance(v, bytes) else v)
                 for k, v in row.items()}
 

@@ -23,7 +23,7 @@ declarative Spark pipeline:
    65,536-doc segment, so no reducer ever sees more than 65,536
    postings for one key.  Groups are delta+varbyte encoded
    (``index.codec``) with per-block ``(df_block, max_tf, min_len)``
-   block-max metadata for WAND pruning.
+   metadata; only ``df_block`` has a reader.
 4. **layout shuffle** — the (small, compressed) block table is
    range-partitioned by term and written under ``tbucket=`` Hive
    partitions sorted by term: queries prune by directory, then by

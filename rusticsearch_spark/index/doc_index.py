@@ -129,15 +129,33 @@ def xxhash64_str(s: str, seed: int = 42) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
+def key_is_string(layout: IndexLayout, config: IndexConfig,
+                  jobs: List[int]) -> bool:
+    """True iff the key column is stored as a string, read from one
+    doc_index parquet footer on the driver (no Spark job).  Only then
+    does ``xxhash64_str`` reproduce the kbucket Spark computed over
+    the native key type.  False when no sidecar file exists."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    for j in jobs:
+        for root, _, files in os.walk(layout.job_dir("doc_index", j)):
+            for f in sorted(files):
+                if f.endswith(".parquet"):
+                    t = pq.read_schema(os.path.join(root, f)) \
+                        .field(config.key_col).type
+                    return pa.types.is_string(t) or pa.types.is_large_string(t)
+    return False
+
+
 def lookup_key_driver(layout: IndexLayout, config: IndexConfig,
                       jobs: List[int], key: str):
     """Driver-side point lookup: key → list of (job, doc_id), reading
     ONE ``kbucket`` partition dir of each job's doc_index sidecar with
     pyarrow — zero Spark jobs (the reference's O(1) ``k<doc_key>``
-    RocksDB get, document_index.rs:71-91).  Returns None when the
-    driver path cannot serve (incomplete sidecar or a non-string key
-    column, whose kbucket Spark hashes over the native type) — the
-    caller falls back to the Spark scan."""
+    RocksDB get, document_index.rs:71-91).  Serves string key columns
+    only: the caller checks :func:`key_is_string` once per index and
+    sends other keys to the Spark scan.  Returns None when the sidecar
+    is incomplete — the caller falls back to the Spark scan."""
     import pyarrow.dataset as ds
     if not _sidecar_complete(layout, jobs):
         return None
@@ -148,12 +166,8 @@ def lookup_key_driver(layout: IndexLayout, config: IndexConfig,
                             f"kbucket={bucket}")
         if not os.path.isdir(part):
             continue
-        d = ds.dataset(part, format="parquet")
-        ktype = d.schema.field(config.key_col).type
-        if not (str(ktype) in ("string", "large_string")):
-            return None
-        tbl = d.to_table(filter=ds.field(config.key_col) == key,
-                         columns=["doc_id"])
+        tbl = ds.dataset(part, format="parquet").to_table(
+            filter=ds.field(config.key_col) == key, columns=["doc_id"])
         out.extend((j, int(x)) for x in tbl.column("doc_id").to_pylist())
     return out
 

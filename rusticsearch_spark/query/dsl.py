@@ -200,20 +200,7 @@ def boost(q: Query, factor: float) -> Query:
 def inner_hits_nodes(q: Query) -> List["Nested"]:
     """Every Nested node in the tree with an inner_hits request, in
     depth-first order (hits() attaches one result set per node)."""
-    out: List[Nested] = []
-    if isinstance(q, Nested):
-        if q.inner_hits is not None:
-            out.append(q)
-        out.extend(inner_hits_nodes(q.query))
-    elif isinstance(q, (Conjunction, Disjunction, DisjunctionMax)):
-        for c in q.queries:
-            out.extend(inner_hits_nodes(c))
-    elif isinstance(q, Filter):
-        out.extend(inner_hits_nodes(q.query))
-        out.extend(inner_hits_nodes(q.filter))
-    elif isinstance(q, Exclude):
-        out.extend(inner_hits_nodes(q.query))
-        out.extend(inner_hits_nodes(q.exclude))
+    out = _inner_hits_walk(q)
     names = [n.inner_hits[0] for n in out]
     if len(set(names)) != len(names):
         # ES rejects duplicate inner_hits names (the default name is
@@ -224,6 +211,19 @@ def inner_hits_nodes(q: Query) -> List["Nested"]:
             f"duplicate inner_hits name(s): {dup} — give each "
             f"inner_hits request a distinct 'name'")
     return out
+
+
+def _inner_hits_walk(q: Query) -> List["Nested"]:
+    if isinstance(q, Nested):
+        out = [q] if q.inner_hits is not None else []
+        return out + _inner_hits_walk(q.query)
+    if isinstance(q, (Conjunction, Disjunction, DisjunctionMax)):
+        return [n for c in q.queries for n in _inner_hits_walk(c)]
+    if isinstance(q, Filter):
+        return _inner_hits_walk(q.query) + _inner_hits_walk(q.filter)
+    if isinstance(q, Exclude):
+        return _inner_hits_walk(q.query) + _inner_hits_walk(q.exclude)
+    return []
 
 
 # ---------------------------------------------------------------------------

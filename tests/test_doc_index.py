@@ -242,3 +242,64 @@ def test_get_document_zero_spark_jobs(spark, webtext, tmp_path):
     assert after == before, "get_document launched a Spark job"
     assert missing is None
     assert got == want
+
+
+def test_get_document_non_string_key(spark, tmp_path):
+    """A long key column is kbucketed by Spark's hash of the native
+    type, which the driver's string hash cannot reproduce: GET must
+    go straight to the Spark scan and find every document, whether
+    the key arrives as an int or as its string form — including keys
+    whose string-hash bucket holds no sidecar partition at all."""
+    from rusticsearch_spark.cluster import Cluster
+    from rusticsearch_spark.index.doc_index import xxhash64_str
+    c = Cluster(spark, str(tmp_path / "intkey_cluster"))
+    c.create_index("nums", {"properties": {"text": {"type": "string"}}},
+                   key_col="id")
+    rows = [(i, f"document number {i}") for i in range(1, 9)]
+    c.bulk("nums", spark.createDataFrame(rows, "id long, text string"),
+           key_col="id", n_buckets=2, tbuckets=2, shuffle_partitions=2)
+    eng = c.engine("nums")
+    assert not eng.key_is_string
+    present = {int(d.split("=")[1]) for j in eng._jobs
+               for d in os.listdir(eng.layout.job_dir("doc_index", j))
+               if d.startswith("kbucket=")}
+    assert any(xxhash64_str(str(i)) % eng.config.kbuckets not in present
+               for i, _ in rows)
+    for i, text in rows:
+        for key in (i, str(i)):
+            got = c.get_document("nums", key)
+            assert got is not None, key
+            assert (got["id"], got["text"]) == (i, text)
+    assert c.get_document("nums", 99) is None
+
+
+def test_get_document_same_keys_across_job_schemas(spark, tmp_path):
+    """Two jobs with different stored columns (a stored field added
+    between streamed batches): the driver GET returns exactly the
+    Spark scan's row — the same keys (the docs frame's columns, None
+    where a job did not store one) and values."""
+    from rusticsearch_spark.cluster import Cluster
+    from rusticsearch_spark.index.layout import IndexLayout
+    from rusticsearch_spark.streaming.ingest import StreamingIngester
+    c = Cluster(spark, str(tmp_path / "schema_cluster"))
+    c.create_index("pages", {"properties": {"text": {"type": "string"}}},
+                   key_col="url")
+    StreamingIngester(spark, c._dir("pages"), _cfg()).process_batch(
+        spark.createDataFrame(
+            [("https://a.example/1", "first job text", "en")],
+            "url string, text string, lang string"), 0)
+    layout = IndexLayout(c._dir("pages"))
+    cfg = layout.read_config()
+    cfg.stored = list(cfg.stored) + ["author"]
+    layout.write_config(cfg)
+    StreamingIngester(spark, c._dir("pages")).process_batch(
+        spark.createDataFrame(
+            [("https://b.example/2", "second job text", "fr", "ann")],
+            "url string, text string, lang string, author string"), 1)
+    eng = c.engine("pages")
+    assert eng.key_is_string
+    for key in ("https://a.example/1", "https://b.example/2"):
+        want = eng.docs.where(F.col("url") == key).limit(1).collect()
+        got = c.get_document("pages", key)
+        assert want and got == want[0].asDict(), key
+        assert list(got) == eng.docs.columns

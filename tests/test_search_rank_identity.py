@@ -73,17 +73,6 @@ def test_missing_term_empty(engine, oracle):
     assert engine.count(q) == 0
 
 
-def test_wand_pruning_matches_full_eval(engine):
-    """Block-max WAND (single-term fast path) must equal the unpruned
-    evaluation exactly — pruning is answer-preserving."""
-    q = {"term": {"text": "table"}}
-    pruned = [(r.doc_id, r.score) for r in
-              engine.search(q, size=10, wand=True).collect()]
-    full = [(r.doc_id, r.score) for r in
-            engine.search(q, size=10, wand=False).collect()]
-    assert pruned == full
-
-
 def test_hits_join_keys(engine):
     hits = engine.hits({"match": {"text": "merge"}}, size=3)
     assert len(hits) == 3
@@ -92,15 +81,17 @@ def test_hits_join_keys(engine):
         assert h["score"] > 0
 
 
-def test_wand_pruning_engages_on_many_blocks(spark, webtext, tmp_path):
-    """With n_buckets=40 every common term spans ~40 posting blocks
-    (> 2×probe_blocks), so the two-pass bounded-θ pruning path
-    actually executes; results must equal the unpruned evaluation."""
+def test_many_block_topk_matches_oracle(spark, webtext, tmp_path):
+    """With n_buckets=40 every common term spans dozens of posting
+    blocks, so each top-k decodes and merges scores across many
+    blocks.  Ranked ids and f32 scores must still equal the oracle's
+    for every query at a k below and above the page size."""
     import shutil
     from rusticsearch_spark.index.build import build_index
     from rusticsearch_spark.index.layout import IndexConfig
+    from rusticsearch_spark.oracle.engine import OracleIndex
     from rusticsearch_spark.query.engine import SearchEngine
-    path = str(tmp_path / "wand_idx")
+    path = str(tmp_path / "many_block_idx")
     shutil.rmtree(path, ignore_errors=True)
     build_index(spark, webtext, path,
                 IndexConfig(key_col="url",
@@ -108,88 +99,22 @@ def test_wand_pruning_engages_on_many_blocks(spark, webtext, tmp_path):
                             n_buckets=40, tbuckets=2,
                             shuffle_partitions=4), jobs=1)
     eng = SearchEngine(spark, path)
-    eng.prune_min_postings = 0   # force the gate open at toy scale
-    engaged = 0
-    for q in [{"term": {"text": "the"}}, {"term": {"text": "data"}}]:
-        blocks = eng._term_blocks("text", q["term"]["text"])
-        if blocks.count() <= 32:
-            continue   # term too rare in this corpus slice
-        a = [(r.doc_id, r.score) for r in
-             eng.search(q, size=7, wand=True).collect()]
-        if eng._wand_pruned:
-            engaged += 1
-        b = [(r.doc_id, r.score) for r in
-             eng.search(q, size=7, wand=False).collect()]
-        assert a == b and len(a) > 0
-    assert engaged >= 1   # the pruning path actually executed
-
-
-def test_fused_multiterm_pruning_matches_full_eval(spark, webtext,
-                                                   tmp_path):
-    """Block-max pruning for fused match/multi_match/dis_max top-k:
-    with n_buckets=40 the per-term block counts exceed the engage
-    threshold; pruned results must equal the unpruned path exactly
-    (doc ids AND f32 scores)."""
-    import shutil
-    from rusticsearch_spark.index.build import build_index
-    from rusticsearch_spark.index.layout import IndexConfig
-    from rusticsearch_spark.query.engine import SearchEngine
-    path = str(tmp_path / "wand_multi_idx")
-    shutil.rmtree(path, ignore_errors=True)
-    build_index(spark, webtext, path,
-                IndexConfig(key_col="url",
-                            fields={"text": "standard", "lang": None},
-                            n_buckets=40, tbuckets=2,
-                            shuffle_partitions=4), jobs=1)
-    eng = SearchEngine(spark, path)
-    eng.prune_min_postings = 0   # force the gate open at toy scale
-    queries = [
-        {"match": {"text": "the data with for"}},
-        {"match": {"text": {"query": "the data", "operator": "and"}}},
-        {"multi_match": {"query": "the data", "fields": ["text", "lang"]}},
-    ]
-    engaged = 0
-    for q in queries:
-        parsed = eng.parse(q)
-        mode = ("and" if parsed.__class__.__name__ == "Conjunction" else
-                "max" if parsed.__class__.__name__ == "DisjunctionMax"
-                else "or")
-        if eng._fusable(parsed.queries):
-            eng._fused_topk(parsed.queries, mode, 7, probe_blocks=4)
-            if eng._fused_pruned:
-                engaged += 1
+    assert eng._term_blocks("text", "the").count() > 32
+    oracle = OracleIndex({"text": "standard", "lang": None})
+    for r in sorted(eng.docs.select("doc_id", "text", "lang").collect(),
+                    key=lambda r: r.doc_id):
+        oracle.add(r.doc_id, {"text": r.text, "lang": r.lang})
+    for name, query in QUERIES:
         for size in (5, 11):
-            a = [(r.doc_id, r.score) for r in
-                 eng.search(q, size=size, wand=True).collect()]
-            b = [(r.doc_id, r.score) for r in
-                 eng.search(q, size=size, wand=False).collect()]
-            assert a == b, (q, size)
-    assert engaged >= 2   # pruning path actually exercised
-
-
-def test_prune_gate_is_parallelism_aware(engine):
-    """The block-max prune trades a distributed full decode
-    (wall ~ Σdf / task slots) for 2-3 SEQUENTIAL driver round-trips,
-    so its engage gate must scale with parallelism: below ~5M
-    postings per slot the one-job cached decode measured 3-5× faster
-    (BENCH/APPENDIX_r5_experiments.md).  Pin: the threshold scales
-    with defaultParallelism, 0 still forces the gate open (the
-    parity tests above), and a toy corpus never engages under the
-    default gate."""
-    eng = engine
-    slots = eng.spark.sparkContext.defaultParallelism
-    assert eng._prune_threshold(0) == 0
-    assert (eng._prune_threshold(eng.PRUNE_MIN_POSTINGS)
-            == eng.PRUNE_POSTINGS_PER_SLOT * slots)
-    # a threshold already above the per-slot floor passes through
-    big = eng.PRUNE_POSTINGS_PER_SLOT * slots * 10
-    assert eng._prune_threshold(big) == big
-    # default gate: toy corpus decodes in full, no two-pass prune
-    eng.search({"term": {"text": "the"}}, size=5, wand=True).collect()
-    assert not eng._wand_pruned
-    eng.search({"match": {"text": "the data"}}, size=5,
-               wand=True).collect()
-    assert not eng._fused_pruned
+            got = [(r.doc_id, r.score) for r in
+                   eng.search(query, size=size).collect()]
+            want = oracle.search(eng.parse(query), k=size)
+            assert [g[0] for g in got] == [w[0] for w in want], \
+                f"{name}@{size}: doc rank mismatch\n got={got}\nwant={want}"
+            if want:
+                np.testing.assert_allclose(
+                    [g[1] for g in got], [w[1] for w in want],
+                    rtol=2e-6, atol=1e-7, err_msg=f"{name}@{size}")
 
 
 def test_nested_fused_combine_matches_generic(engine):
