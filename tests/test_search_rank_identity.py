@@ -81,40 +81,107 @@ def test_hits_join_keys(engine):
         assert h["score"] > 0
 
 
-def test_many_block_topk_matches_oracle(spark, webtext, tmp_path):
-    """With n_buckets=40 every common term spans dozens of posting
-    blocks, so each top-k decodes and merges scores across many
-    blocks.  Ranked ids and f32 scores must still equal the oracle's
-    for every query at a k below and above the page size."""
-    import shutil
+def _ranked(eng, query, size):
+    return [(r.doc_id, r.score) for r in
+            eng.search(query, size=size).collect()]
+
+
+def _assert_matches_oracle(got, want, label):
+    assert [g[0] for g in got] == [w[0] for w in want], \
+        f"{label}: doc rank mismatch\n got={got}\nwant={want}"
+    if want:
+        np.testing.assert_allclose(
+            [g[1] for g in got], [w[1] for w in want],
+            rtol=2e-6, atol=1e-7, err_msg=label)
+
+
+@pytest.fixture(scope="module")
+def many_block(spark, webtext, tmp_path_factory):
+    """An n_buckets=40 index: every common term spans dozens of
+    posting blocks, so each top-k decodes and merges scores across
+    many blocks.  Returns (engine, oracle) over the same documents."""
     from rusticsearch_spark.index.build import build_index
     from rusticsearch_spark.index.layout import IndexConfig
     from rusticsearch_spark.oracle.engine import OracleIndex
     from rusticsearch_spark.query.engine import SearchEngine
-    path = str(tmp_path / "many_block_idx")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path_factory.mktemp("many_block") / "idx")
     build_index(spark, webtext, path,
                 IndexConfig(key_col="url",
                             fields={"text": "standard", "lang": None},
                             n_buckets=40, tbuckets=2,
                             shuffle_partitions=4), jobs=1)
     eng = SearchEngine(spark, path)
-    assert eng._term_blocks("text", "the").count() > 32
     oracle = OracleIndex({"text": "standard", "lang": None})
     for r in sorted(eng.docs.select("doc_id", "text", "lang").collect(),
                     key=lambda r: r.doc_id):
         oracle.add(r.doc_id, {"text": r.text, "lang": r.lang})
+    return eng, oracle
+
+
+def test_wand_pruning_matches_full_eval(engine, oracle):
+    """A single-term top-k is answer-preserving: the size-10 page
+    equals the head of the full ranking and the oracle's top 10.
+    (Every top-k runs one full-decode plan; no pruned variant
+    exists, so the full ranking is the reference.)"""
+    q = {"term": {"text": "table"}}
+    top = _ranked(engine, q, 10)
+    full = _ranked(engine, q, len(oracle.doc_ids))
+    assert len(top) > 0
+    assert top == full[:10]
+    _assert_matches_oracle(top, oracle.search(engine.parse(q), k=10),
+                           "term:table")
+
+
+def test_wand_pruning_engages_on_many_blocks(many_block):
+    """Single-term top-k over terms that span more than 32 posting
+    blocks equals the head of the full ranking and the oracle."""
+    eng, oracle = many_block
+    many = 0
+    for q in [{"term": {"text": "the"}}, {"term": {"text": "data"}}]:
+        if eng._term_blocks("text", q["term"]["text"]).count() <= 32:
+            continue   # term too rare in this corpus slice
+        many += 1
+        top = _ranked(eng, q, 7)
+        full = _ranked(eng, q, len(oracle.doc_ids))
+        assert len(top) > 0 and top == full[:7]
+        _assert_matches_oracle(top, oracle.search(eng.parse(q), k=7),
+                               str(q))
+    assert many >= 1   # the many-block case actually ran
+
+
+def test_fused_multiterm_pruning_matches_full_eval(many_block):
+    """Fused match / multi_match top-k over many-block terms equals
+    the head of the full ranking and the oracle (ids AND f32 scores)
+    at a k below and above the page size."""
+    eng, oracle = many_block
+    queries = [
+        {"match": {"text": "the data with for"}},
+        {"match": {"text": {"query": "the data", "operator": "and"}}},
+        {"multi_match": {"query": "the data", "fields": ["text", "lang"]}},
+    ]
+    fused = 0
+    for q in queries:
+        if eng._fusable(eng.parse(q).queries):
+            fused += 1
+        full = _ranked(eng, q, len(oracle.doc_ids))
+        for size in (5, 11):
+            top = _ranked(eng, q, size)
+            assert top == full[:size], (q, size)
+            _assert_matches_oracle(
+                top, oracle.search(eng.parse(q), k=size), f"{q}@{size}")
+    assert fused >= 2   # the fused decode path actually ran
+
+
+def test_many_block_topk_matches_oracle(many_block):
+    """Every rank-identity query on the many-block index: ranked ids
+    and f32 scores equal the oracle's at k=5 and k=11."""
+    eng, oracle = many_block
+    assert eng._term_blocks("text", "the").count() > 32
     for name, query in QUERIES:
         for size in (5, 11):
-            got = [(r.doc_id, r.score) for r in
-                   eng.search(query, size=size).collect()]
-            want = oracle.search(eng.parse(query), k=size)
-            assert [g[0] for g in got] == [w[0] for w in want], \
-                f"{name}@{size}: doc rank mismatch\n got={got}\nwant={want}"
-            if want:
-                np.testing.assert_allclose(
-                    [g[1] for g in got], [w[1] for w in want],
-                    rtol=2e-6, atol=1e-7, err_msg=f"{name}@{size}")
+            _assert_matches_oracle(
+                _ranked(eng, query, size),
+                oracle.search(eng.parse(query), k=size), f"{name}@{size}")
 
 
 def test_nested_fused_combine_matches_generic(engine):
