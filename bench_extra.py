@@ -32,6 +32,20 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 RUNS = int(os.environ.get("SPARK_GRAFT_QUERY_RUNS", "5"))
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for this host: half its RAM, at most
+    bench.py's 24g and at least 1g (24g on a 15 GB host would let the
+    driver heap grow past the machine).  ``SPARK_GRAFT_DRIVER_MEM``
+    overrides it."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "4g"
+    return f"{max(1, min(24, kb // (2 << 20)))}g"
+
+
 BENCH_QUERIES = [
     ("term", {"term": {"text": "merge"}}),
     ("match_or", {"match": {"text": "spark query data"}}),
@@ -79,7 +93,8 @@ def main() -> None:
              .config("spark.buffer.pageSize",
                      os.environ.get("SPARK_GRAFT_PAGE", "1m"))
              .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+                     os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                    default_driver_memory()))
              .config("spark.scheduler.mode", "FAIR")
              .config("spark.ui.enabled", "false")
              .getOrCreate())

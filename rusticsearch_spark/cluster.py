@@ -177,20 +177,19 @@ class Cluster:
         reference's O(1) ``k<doc_key>`` lookup
         (document_index.rs:71-91): one kbucket partition resolves the
         doc_id, then one row-group-pruned read of that job's docs dir
-        fetches the stored row.  Falls back to the Spark scan when a
-        deletion list is pending (the logical-delete window), the
-        sidecar is incomplete (legacy index), or the key column or
-        the key is not a string.  Both paths return the same keys:
-        every column of the engine's docs frame, None where the
-        document's job did not store it."""
+        fetches the stored row.  While deletions are pending, the hits
+        are checked against the engine's deletion lists (read once,
+        on the driver): an upserted key has two hits until the merge,
+        and only the live one is returned.  Falls back to the Spark
+        scan when the sidecar is incomplete (legacy index), or the
+        key column or the key is not a string.  Both paths return the
+        same keys: every column of the engine's docs frame, None
+        where the document's job did not store it."""
         eng = self.engine(index)
-        if eng.deletions is None:
-            row = self._get_document_driver(eng, key)
-            if row is not NotImplemented:
-                return row
-        frame = eng.docs.where(F.col(eng.config.key_col) == key)
-        if eng.deletions is not None:
-            frame = frame.join(eng.deletions, "doc_id", "left_anti")
+        row = self._get_document_driver(eng, key)
+        if row is not NotImplemented:
+            return row
+        frame = eng._live(eng.docs.where(F.col(eng.config.key_col) == key))
         row = frame.limit(1).collect()
         return row[0].asDict() if row else None
 
@@ -209,6 +208,8 @@ class Cluster:
         hits = lookup_key_driver(eng.layout, eng.config, eng._jobs, key)
         if hits is None:
             return NotImplemented
+        if eng.deletions is not None:
+            hits = [h for h in hits if not eng.is_deleted(h[1])]
         if not hits:
             return None
         job, doc_id = hits[0]

@@ -17,17 +17,19 @@ declarative Spark pipeline:
    computes (term, tf) pairs + the quantized length byte *inside the
    map stage*, so raw token occurrences never shuffle (map-side
    combine of the reference's per-doc TermVector build).
-3. **posting encode** — one shuffle on ``(field, term, segment)``.
+3. **posting encode** — ONE shuffle on ``(field, term, segment)``.
    The *segment* component is the explicit skew salt: a head term
    ("the") appearing in every document splits into one group per
    65,536-doc segment, so no reducer ever sees more than 65,536
    postings for one key.  Groups are delta+varbyte encoded
    (``index.codec``) with per-block ``(df_block, max_tf, min_len)``
    metadata; only ``df_block`` has a reader.
-4. **layout shuffle** — the (small, compressed) block table is
-   range-partitioned by term and written under ``tbucket=`` Hive
-   partitions sorted by term: queries prune by directory, then by
-   parquet min/max on ``term``.
+4. **layout** — the within-partition sort leads with the term's
+   tbucket, so the encoded blocks stream out already clustered for
+   the ``tbucket=`` Hive partitions and term-sorted in every file:
+   queries prune by directory, then by parquet min/max on ``term``.
+   The merge (``index.merge``) re-encodes through this same step
+   (``write_postings``).
 5. **commit** — per-job lineage row written last (atomic activate,
    mirroring segment_ops.rs:216-235).
 
@@ -41,7 +43,7 @@ from __future__ import annotations
 import os
 import sys
 import time
-from typing import Dict, Iterator, List, Optional
+from typing import Dict, List, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -50,10 +52,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..analysis.analyzers import Analyzer, AnalyzerRegistry, parse_analysis_settings
-from .codec import (BUCKET_SHIFT, LOCAL_MASK, SEGMENT_BITS, encode_block,
+from .codec import (BUCKET_SHIFT, LOCAL_MASK, SEGMENT_BITS,
                     varbyte_encode_offsets)
-from .layout import (IndexConfig, IndexLayout, qname, term_bucket,
-                     term_bucket_col)
+from .layout import IndexConfig, IndexLayout, qname, term_bucket_col
 
 POSTINGS_SCHEMA = T.StructType([
     T.StructField("field", T.StringType()),
@@ -184,74 +185,6 @@ def assign_doc_ids(docs: DataFrame, key_col: str, n_buckets: int,
             .withColumn("doc_id", F.shiftleft(F.col("_bucket"), BUCKET_SHIFT)
                         + F.col("_ord"))
             .drop("_ord"))
-
-
-def _encode_partitions(tbuckets: int, pre_counted: bool = False):
-    """mapInPandas body: encode sorted (field, term, segment, doc_id)
-    runs into posting blocks, carrying group tails across Arrow
-    batches (a group may straddle batch boundaries).
-
-    ``pre_counted=False`` (build): rows are raw token occurrences —
-    duplicate doc_ids within a group ARE the term frequency, counted
-    here with one ``np.unique`` per group (group-at-a-time map-side
-    combine; raw occurrences never re-shuffle).
-    ``pre_counted=True`` (merge): rows carry an explicit ``tf``.
-    """
-
-    def _encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        f = pdf["field"].to_numpy(dtype=object)
-        t = pdf["term"].to_numpy(dtype=object)
-        s = pdf["segment"].to_numpy(dtype=np.int64)
-        doc = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tf_col = (pdf["tf"].to_numpy(dtype=np.int64)
-                  if pre_counted else None)
-        lb = pdf["len_byte"].to_numpy(dtype=np.int64)
-        n = len(pdf)
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        change[1:] = (f[1:] != f[:-1]) | (t[1:] != t[:-1]) | (s[1:] != s[:-1])
-        starts = np.nonzero(change)[0]
-        ends = np.append(starts[1:], n)
-        rows = []
-        for st, en in zip(starts, ends):
-            if pre_counted:
-                udoc, tf, ulb = doc[st:en], tf_col[st:en], lb[st:en]
-            else:
-                udoc, idx, tf = np.unique(doc[st:en], return_index=True,
-                                          return_counts=True)
-                ulb = lb[st:en][idx]
-            doc_b, tf_b, len_b = encode_block(udoc, tf, ulb)
-            rows.append((
-                f[st], t[st], int(s[st]), term_bucket(t[st], tbuckets),
-                len(udoc), int(tf.sum()), int(tf.max()),
-                int(ulb.min()), doc_b, tf_b, len_b,
-            ))
-        return pd.DataFrame(rows, columns=[x.name for x in POSTINGS_SCHEMA])
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: Optional[pd.DataFrame] = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            lf = pdf["field"].iat[-1]
-            lt = pdf["term"].iat[-1]
-            ls = pdf["segment"].iat[-1]
-            not_last = ((pdf["field"].to_numpy(dtype=object) != lf)
-                        | (pdf["term"].to_numpy(dtype=object) != lt)
-                        | (pdf["segment"].to_numpy() != ls))
-            idx = np.nonzero(not_last)[0]
-            cut = int(idx[-1]) + 1 if idx.size else 0
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-            head = pdf.iloc[:cut]
-            if len(head):
-                yield _encode_groups(head)
-        if carry is not None and len(carry):
-            yield _encode_groups(carry)
-
-    return _run
 
 
 def _encode_partitions_arrow(field_names: List[str]):
@@ -488,36 +421,6 @@ def _posting_rows(ids: DataFrame, config: IndexConfig,
     return out.withColumn("tf", F.lit(1))
 
 
-def _field_stats(spark: SparkSession, ids: Optional[DataFrame],
-                 term_dict_dir: str, config: IndexConfig,
-                 doc_counts: Optional[Dict[str, int]] = None) -> List[dict]:
-    """Per-field (total_docs, total_tokens) — the reference's global
-    ``ftdoc``/``fttok`` statistics (segment_builder.rs:91-117 summed
-    across segments per rocksdb/search/statistics.rs:33-78).
-
-    ``total_docs`` = docs where the field is present.  The build path
-    passes it in via ``doc_counts`` — collected for free by an
-    ``observe()`` on the docs-write job (no extra scan/job); the
-    merge path passes ``ids`` and pays one columnar count over all
-    fields at once.  ``total_tokens`` and the lineage block count
-    come from the already-aggregated term_dict sidecar
-    (``sum(sum_tf)`` / ``sum(n_blocks)`` per field) — the postings
-    metadata is never re-scanned.  Returns ``(stats_rows, n_blocks)``.
-    """
-    if doc_counts is None:
-        row = ids.agg(*[F.count(F.col(qname(f))).alias(f"f{i}")
-                        for i, f in enumerate(config.fields)]).collect()[0]
-        doc_counts = {f: int(row[f"f{i}"])
-                      for i, f in enumerate(config.fields)}
-    tok_rows = (spark.read.parquet(term_dict_dir)
-                .groupBy("field").agg(F.sum("sum_tf").alias("t"),
-                                      F.sum("n_blocks").alias("b")).collect())
-    tok = {r.field: int(r.t) for r in tok_rows}
-    n_blocks = sum(int(r.b) for r in tok_rows)
-    return [{"field": f, "total_docs": int(doc_counts[f]),
-             "total_tokens": tok.get(f, 0)} for f in config.fields], n_blocks
-
-
 def _write_field_stats(path: str, stats_rows: List[dict]) -> None:
     """field_stats sidecar: a handful of driver-resident rows —
     written without a Spark job (see layout.write_small_table)."""
@@ -625,63 +528,98 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
             "skipped_jobs": done, "config": config.__dict__}
 
 
-def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
-              config: IndexConfig, registry: AnalyzerRegistry, job: int,
-              extra: Optional[dict] = None) -> dict:
-    """Write one job's docs/postings/field_stats + the atomic lineage
-    commit.  ``ids`` must already carry a globally-unique ``doc_id``.
-    Shared by the batch builder and the streaming ingester."""
-    layout.clear_incomplete_job(job)
-    t0 = time.monotonic()
-    shuffle_p = (config.shuffle_partitions
-                 or int(spark.conf.get("spark.sql.shuffle.partitions")))
+class WrittenDocs(NamedTuple):
+    """A job's docs table on disk and what its write observed."""
 
-    _trace_on = os.environ.get("SPARK_GRAFT_TIMING")
-    _last = [time.monotonic()]
+    #: the written docs dir, re-read: downstream stages scan a pruned
+    #: columnar table instead of re-running the id computation
+    docs: DataFrame
+    n_docs: int
+    #: per-field presence counts (the ftdoc statistics)
+    doc_counts: Dict[str, int]
+
+
+def _stage_timer(job: int):
+    """``SPARK_GRAFT_TIMING=1``: per-step wall times of a job on
+    stderr."""
+    if not os.environ.get("SPARK_GRAFT_TIMING"):
+        return lambda step: None
+    last = [time.monotonic()]
 
     def _trace(step: str) -> None:
-        if _trace_on:
-            now = time.monotonic()
-            print(f"[build-trace] job={job} {step}: {now - _last[0]:.1f}s",
-                  file=sys.stderr, flush=True)
-            _last[0] = now
+        now = time.monotonic()
+        print(f"[build-trace] job={job} {step}: {now - last[0]:.1f}s",
+              file=sys.stderr, flush=True)
+        last[0] = now
 
-    # docs table first; re-read it so the id computation runs once and
-    # downstream stages read a pruned columnar scan.  The row count and
-    # per-field presence counts (the ftdoc statistics) ride on the SAME
-    # job as observe() metrics — zero extra jobs/scans for stats (the
-    # previous count() + field-agg jobs were a measurable slice of the
-    # build's Amdahl-serial share at high parallelism).
-    from pyspark.sql import Observation
-    obs = Observation(f"build_job_{job}")
-    doc_cols = ["doc_id", config.key_col] + [
+    return _trace
+
+
+def doc_columns(ids: DataFrame, config: IndexConfig) -> DataFrame:
+    """The docs-table projection of an id-assigned frame: doc_id, the
+    key, every indexed field and every stored column."""
+    cols = ["doc_id", config.key_col] + [
         c for c in dict.fromkeys(list(config.fields) + config.stored)
         if c != config.key_col]
+    return ids.select(*[F.col(qname(c)).alias(c) for c in cols])
+
+
+def write_docs(spark: SparkSession, docs: DataFrame, layout: IndexLayout,
+               config: IndexConfig, job: int) -> WrittenDocs:
+    """Write ``docs`` as job ``job``'s docs table — ONE Spark job.
+    The row count and the per-field presence counts ride the write as
+    observe() metrics (no count() job, no field-agg job), and the
+    re-read takes the written frame's schema (no schema-inference
+    job)."""
+    from pyspark.sql import Observation
+    obs = Observation()
     field_alias = {f: f"__fdocs_{i}" for i, f in enumerate(config.fields)}
-    ids.select(*[F.col(qname(c)).alias(c) for c in doc_cols]) \
-        .observe(obs, F.count(F.lit(1)).alias("__n_docs"),
+    docs.observe(obs, F.count(F.lit(1)).alias("__n_docs"),
                  *[F.count(F.col(qname(f))).alias(a)
                    for f, a in field_alias.items()]) \
-        .write.mode("overwrite").parquet(
-        layout.job_dir("docs", job))
+        .write.mode("overwrite").parquet(layout.job_dir("docs", job))
     metrics = obs.get
-    n_docs = int(metrics["__n_docs"])
-    doc_counts = {f: int(metrics[a]) for f, a in field_alias.items()}
-    _trace("docs_write")
-    ids = spark.read.parquet(layout.job_dir("docs", job))
+    return WrittenDocs(
+        spark.read.schema(docs.schema).parquet(layout.job_dir("docs", job)),
+        int(metrics["__n_docs"]),
+        {f: int(metrics[a]) for f, a in field_alias.items()})
+
+
+def write_postings(spark: SparkSession, rows: DataFrame, docs: DataFrame,
+                   layout: IndexLayout, config: IndexConfig, job: int,
+                   n_docs: int) -> Tuple[int, Dict[str, int]]:
+    """The index half of a job, shared by the build (``write_job``)
+    and the merge (``merge.merge_jobs``): three Spark jobs.
+
+    * the doc_index PK sidecar of ``docs``, on a helper thread so the
+      small job overlaps the postings job;
+    * ``rows`` — ``(field_ord, term, doc_id, len_byte, tf)`` posting
+      rows, duplicates allowed (their tf is summed) — through ONE
+      shuffle into encoded, tbucket-partitioned postings;
+    * the term_dict sidecar, whose job also observes the block count
+      and the per-field token totals (the fttok statistics).
+
+    Returns ``(n_blocks, total_tokens per field)``."""
+    shuffle_p = (config.shuffle_partitions
+                 or int(spark.conf.get("spark.sql.shuffle.partitions")))
+    _trace = _stage_timer(job)
 
     # PK sidecar: (key, doc_id) bucketed by a global key hash, so
     # upsert/delete point lookups prune to corpus/kbuckets instead of
-    # scanning every docs dir (document_index.rs:16-91 analogue).
-    # Submitted from a helper thread so the small sidecar job overlaps
-    # the heavy postings job below — it only has to be complete before
-    # the lineage commit, and both read the already-written docs dir.
+    # scanning every docs dir (document_index.rs:16-91 analogue).  It
+    # only has to be complete before the lineage commit.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     from .doc_index import write_doc_index
     _sidecar_pool = ThreadPoolExecutor(max_workers=1)
-    _sidecar = _sidecar_pool.submit(write_doc_index, ids, layout, config,
-                                    job, shuffle_p, n_docs)
+    # the helper thread inherits this thread's local properties (job
+    # group, scheduler pool), so the sidecar job is accounted and
+    # scheduled with the rest of the call
+    _sidecar = _sidecar_pool.submit(
+        inheritable_thread_target(spark)(write_doc_index), docs, layout,
+        config, job, shuffle_p, n_docs)
 
     def _join_sidecar() -> None:
         # always await the sidecar before leaving this frame — on a
@@ -698,18 +636,16 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
     # tbucket so the encoder streams blocks out already clustered for
     # the partitionBy(tbucket) layout AND term-sorted within every
     # file (parquet row-group min/max pruning on `term` stays tight).
-    # The previous layout used a second repartitionByRange over the
-    # encoded blocks — its range-boundary sampling job re-executed the
-    # whole sort+encode stage, and it re-shuffled every posting byte.
+    # A second repartitionByRange over the encoded blocks would cost a
+    # range-boundary sampling job that re-executes the whole
+    # sort+encode stage, and re-shuffle every posting byte.
     # segment/tbucket/gkey are derived columns computed AFTER the
     # exchange (the repartition hashes the segment *expression*), so
     # the shuffled row stays minimal: (field_ord, term, doc_id,
-    # len_byte) — every extra Tungsten field is 8 aligned bytes on
-    # the build's only wide shuffle.
+    # len_byte, tf) — every extra Tungsten field is 8 aligned bytes
+    # on the only wide shuffle.
     try:
-        flat = _posting_rows(ids, config, registry,
-                             precount=config.precount)
-        (flat
+        (rows
          .repartition(shuffle_p, "field_ord", "term",
                       F.shiftrightunsigned("doc_id", SEGMENT_BITS))
          .withColumn("segment", F.shiftrightunsigned("doc_id", SEGMENT_BITS))
@@ -730,11 +666,13 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
         # driver-side reader prunes parquet ROW GROUPS via term min/max
         # (hash repartition + per-file sort: row-group ranges stay tight
         # without repartitionByRange's sampling job, which would re-run
-        # the aggregate).  Per-field token totals + the block count (the
-        # fttok statistics) ride this SAME job as observe() metrics —
-        # write_job runs exactly four Spark jobs end to end.
-        tok_obs = Observation(f"build_tok_{job}")
-        dict_src = spark.read.parquet(layout.job_dir("postings", job)) \
+        # the aggregate).  Per-field token totals + the block count ride
+        # this SAME job as observe() metrics; the block table's schema
+        # is fixed, so its re-read runs no schema-inference job.
+        from pyspark.sql import Observation
+        tok_obs = Observation()
+        dict_src = spark.read.schema(POSTINGS_SCHEMA) \
+            .parquet(layout.job_dir("postings", job)) \
             .groupBy("field", "term", "tbucket") \
             .agg(F.sum("df_block").cast("long").alias("df"),
                  F.count("*").cast("int").alias("n_blocks"),
@@ -746,6 +684,7 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
                   *[F.sum(F.when(F.col("field") == f, F.col("sum_tf")))
                     .alias(a) for f, a in tok_alias.items()])
          .write.mode("overwrite").parquet(layout.job_dir("term_dict", job)))
+        _trace("term_dict")
     except BaseException:
         # the sidecar thread must not outlive a failed stage (an
         # orphan writer would race the retry's clear_incomplete_job);
@@ -758,24 +697,46 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
     _join_sidecar()            # doc_index must be on disk pre-commit
     _trace("doc_index_join")
     tok_m = tok_obs.get
-    n_blocks = int(tok_m["__n_blocks"] or 0)
-    stats_rows = [{"field": f, "total_docs": doc_counts[f],
-                   "total_tokens": int(tok_m[a] or 0)}
-                  for f, a in tok_alias.items()]
-    _trace("term_dict")
+    return (int(tok_m["__n_blocks"] or 0),
+            {f: int(tok_m[a] or 0) for f, a in tok_alias.items()})
 
-    # field stats: both halves were observed on jobs that already ran
-    # (doc counts on the docs write, token totals on the term_dict
-    # write) — zero extra jobs, zero extra scans
-    _write_field_stats(layout.job_dir("field_stats", job), stats_rows)
-    _trace("field_stats")
 
+def finish_job(spark: SparkSession, rows: DataFrame, written: WrittenDocs,
+               layout: IndexLayout, config: IndexConfig, job: int,
+               t0: float, extra: Optional[dict] = None) -> dict:
+    """Index a job whose docs table is written (``write_postings``),
+    then write its field stats and commit its lineage row LAST.  The
+    field stats cost no job: doc counts were observed on the docs
+    write, token totals on the term_dict write."""
+    n_blocks, tokens = write_postings(spark, rows, written.docs, layout,
+                                      config, job, written.n_docs)
+    _write_field_stats(layout.job_dir("field_stats", job),
+                       [{"field": f, "total_docs": written.doc_counts[f],
+                         "total_tokens": tokens[f]} for f in config.fields])
     row = {
         "job": job,
-        "n_docs": n_docs, "n_posting_blocks": n_blocks,
+        "n_docs": written.n_docs, "n_posting_blocks": n_blocks,
         "wall_sec": round(time.monotonic() - t0, 3),
         "status": "done", "finished_unix": int(time.time()),
         **(extra or {}),
     }
     layout.commit_job(spark, row)
     return row
+
+
+def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
+              config: IndexConfig, registry: AnalyzerRegistry, job: int,
+              extra: Optional[dict] = None) -> dict:
+    """Write one job's docs/postings/field_stats + the atomic lineage
+    commit.  ``ids`` must already carry a globally-unique ``doc_id``.
+    Four Spark jobs, each a write: the docs table, then
+    ``write_postings``' three."""
+    layout.clear_incomplete_job(job)
+    t0 = time.monotonic()
+    trace = _stage_timer(job)
+    written = write_docs(spark, doc_columns(ids, config), layout, config,
+                         job)
+    trace("docs_write")
+    rows = _posting_rows(written.docs, config, registry,
+                         precount=config.precount)
+    return finish_job(spark, rows, written, layout, config, job, t0, extra)

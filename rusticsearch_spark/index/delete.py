@@ -16,20 +16,80 @@ merge recomputes stats from live docs.
 
 from __future__ import annotations
 
+import shutil
 from typing import List, Optional
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .layout import IndexLayout
 
 
-def load_deletions(spark: SparkSession,
-                   layout: IndexLayout) -> Optional[DataFrame]:
-    dirs = layout.deletion_dirs()
+def load_deletions(spark: SparkSession, layout: IndexLayout,
+                   dirs: Optional[List[str]] = None) -> Optional[DataFrame]:
+    """The pending deletion lists (``dirs``, default: all of them) as
+    a distinct ``doc_id`` frame, or None.  The lists' schema is fixed,
+    so opening the frame runs no schema-inference job."""
+    if dirs is None:
+        dirs = layout.deletion_dirs()
     if not dirs:
         return None
-    return spark.read.parquet(*dirs).select("doc_id").distinct()
+    return (spark.read.schema("doc_id long").parquet(*dirs)
+            .select("doc_id").distinct())
+
+
+def deleted_doc_ids(dirs: List[str]) -> np.ndarray:
+    """Sorted distinct doc ids of the deletion lists ``dirs``, read on
+    the driver with pyarrow — zero Spark jobs."""
+    import pyarrow.parquet as pq
+    if not dirs:
+        return np.zeros(0, dtype=np.int64)
+    return np.unique(np.concatenate(
+        [pq.read_table(d, columns=["doc_id"]).column("doc_id")
+         .to_numpy().astype(np.int64) for d in dirs]))
+
+
+def write_deletions(layout: IndexLayout, target: DataFrame) -> int:
+    """Append ``target`` (a ``doc_id`` frame) as a new deletion list in
+    ONE Spark job: the row count rides the write as an observe()
+    metric, and a list that came out empty is removed again.  Returns
+    the number of doc ids written."""
+    from pyspark.sql import Observation
+    obs = Observation()
+    path = layout.next_deletion_dir()
+    (target.coalesce(1).observe(obs, F.count(F.lit(1)).alias("n"))
+     .write.mode("overwrite").parquet(path))
+    n = int(obs.get["n"])
+    if not n:
+        shutil.rmtree(path, ignore_errors=True)
+    return n
+
+
+def committed_docs(spark: SparkSession, layout: IndexLayout,
+                   jobs: List[int]) -> Optional[DataFrame]:
+    """The docs tables of the committed ``jobs``, or None if none
+    has one."""
+    dirs = layout.committed_dirs("docs", jobs=jobs)
+    if not dirs:
+        return None
+    return spark.read.option("basePath", layout.table("docs")).parquet(*dirs)
+
+
+def nested_children(docs: DataFrame, key_col: str,
+                    parent_keys: DataFrame) -> DataFrame:
+    """``doc_id`` of every nested child row (any depth) in ``docs`` of
+    the documents keyed ``parent_keys`` (a one-column frame named
+    ``key_col``) — the cascade of deleting or replacing a parent."""
+    # _nested_root reaches EVERY descendant level in one semi-join;
+    # pre-multilevel indexes only stored _nested_parent (equal to the
+    # root at depth 1)
+    rc = ("_nested_root" if "_nested_root" in docs.columns
+          else "_nested_parent")
+    return (docs.where(F.col("_nested_parent").isNotNull())
+            .join(parent_keys.select(F.col(key_col).cast("string")
+                                     .alias(rc)), rc, "left_semi")
+            .select("doc_id"))
 
 
 def delete_documents(spark: SparkSession, index_dir: str,
@@ -43,6 +103,7 @@ def delete_documents(spark: SparkSession, index_dir: str,
     """
     layout = IndexLayout(index_dir)
     config = layout.read_config()
+    jobs = layout.completed_jobs()        # the one lineage snapshot
     if keys is not None:
         # PK lookup through the doc_index sidecar: reads only the
         # kbucket partitions the keys hash into (document_index.rs
@@ -51,65 +112,41 @@ def delete_documents(spark: SparkSession, index_dir: str,
         # INDEXED key type before hashing so non-string keys (e.g. a
         # long PK) land in the right kbucket partitions.
         from .doc_index import resolve_keys
+        probe = [str(k) for k in keys]
         keys_df = spark.createDataFrame(
-            [(str(k),) for k in keys], f"{config.key_col} string")
-        resolved = resolve_keys(spark, layout, config, keys_df)
+            [(k,) for k in probe], f"{config.key_col} string")
+        resolved = resolve_keys(spark, layout, config, keys_df, jobs=jobs,
+                                key_values=probe)
         if resolved is None:
             return 0
         target = resolved.select("doc_id")
         if config.nested_paths:
             # cascade: a parent's child rows (nested-type array
-            # elements) die with it.  Resolved through the stored
-            # `_nested_parent` column — a two-column docs projection;
+            # elements) die with it — a two-column docs projection;
             # deletes are rare and off the query hot path (the same
-            # cost class as the merge that later applies them).
-            docs_dirs = layout.committed_dirs("docs", spark)
-            if docs_dirs:
-                docs = (spark.read
-                        .option("basePath", layout.table("docs"))
-                        .parquet(*docs_dirs))
-                # _nested_root reaches EVERY descendant level in one
-                # semi-join; pre-multilevel indexes only stored
-                # _nested_parent (equal to the root at depth 1)
-                rc = ("_nested_root" if "_nested_root" in docs.columns
-                      else "_nested_parent")
-                kids = (docs.where(F.col("_nested_parent").isNotNull())
-                        .join(keys_df.select(
-                            F.col(config.key_col).alias(rc)),
-                            rc, "left_semi")
-                        .select("doc_id"))
-                target = target.unionByName(kids)
+            # cost class as the merge that later applies them)
+            docs = committed_docs(spark, layout, jobs)
+            if docs is not None:
+                target = target.unionByName(
+                    nested_children(docs, config.key_col, keys_df))
     elif doc_ids is not None:
         target = spark.createDataFrame(
             [(int(d),) for d in doc_ids], "doc_id long")
-        if config.nested_paths:
+        docs = (committed_docs(spark, layout, jobs)
+                if config.nested_paths else None)
+        if docs is not None:
             # same cascade as the keys= path: a parent deleted by raw
             # doc_id must take its child rows with it, or they stay
             # live forever (and merges would re-encode orphans).
-            # Resolve the parents' KEYS from the docs table, then the
-            # children via `_nested_parent`.
-            docs_dirs = layout.committed_dirs("docs", spark)
-            if docs_dirs:
-                docs = (spark.read
-                        .option("basePath", layout.table("docs"))
-                        .parquet(*docs_dirs))
-                rc = ("_nested_root" if "_nested_root" in docs.columns
-                      else "_nested_parent")
-                pkeys = (docs.join(target, "doc_id", "left_semi")
-                         .where(F.col("_nested_parent").isNull())
-                         .select(F.col(config.key_col)
-                                 .cast("string").alias(rc)))
-                kids = (docs.where(F.col("_nested_parent").isNotNull())
-                        .join(pkeys, rc, "left_semi")
-                        .select("doc_id"))
-                target = target.unionByName(kids)
+            # Resolve the parents' KEYS from the docs table first.
+            pkeys = (docs.join(target, "doc_id", "left_semi")
+                     .where(F.col("_nested_parent").isNull())
+                     .select(config.key_col))
+            target = target.unionByName(
+                nested_children(docs, config.key_col, pkeys))
     target = target.distinct()
     already = load_deletions(spark, layout)
     if already is not None:
         # deleting a deleted doc is a no-op (document_index.rs:96-110)
         target = target.join(already, "doc_id", "left_anti")
-    n = target.count()
-    if n:
-        target.coalesce(1).write.mode("overwrite").parquet(
-            layout.next_deletion_dir())
-    return n
+    return write_deletions(layout, target)

@@ -21,10 +21,11 @@ table existed): correctness never depends on the sidecar.
 from __future__ import annotations
 
 import os
-from typing import List, Optional
+from typing import Iterable, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .layout import IndexConfig, IndexLayout
 
@@ -129,22 +130,48 @@ def xxhash64_str(s: str, seed: int = 42) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
+def key_arrow_type(layout: IndexLayout, config: IndexConfig,
+                   jobs: List[int], table: str = "doc_index"):
+    """Arrow type of the stored key column, read from one parquet
+    footer of ``table`` on the driver (no Spark job); None when the
+    jobs hold no such file."""
+    import pyarrow.parquet as pq
+    for j in jobs:
+        for root, _, files in os.walk(layout.job_dir(table, j)):
+            for f in sorted(files):
+                if f.endswith(".parquet"):
+                    return pq.read_schema(os.path.join(root, f)) \
+                        .field(config.key_col).type
+    return None
+
+
+def _is_string(arrow_type) -> bool:
+    import pyarrow as pa
+    return arrow_type is not None and (pa.types.is_string(arrow_type)
+                                       or pa.types.is_large_string(arrow_type))
+
+
 def key_is_string(layout: IndexLayout, config: IndexConfig,
                   jobs: List[int]) -> bool:
     """True iff the key column is stored as a string, read from one
     doc_index parquet footer on the driver (no Spark job).  Only then
     does ``xxhash64_str`` reproduce the kbucket Spark computed over
     the native key type.  False when no sidecar file exists."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    for j in jobs:
-        for root, _, files in os.walk(layout.job_dir("doc_index", j)):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    t = pq.read_schema(os.path.join(root, f)) \
-                        .field(config.key_col).type
-                    return pa.types.is_string(t) or pa.types.is_large_string(t)
-    return False
+    return _is_string(key_arrow_type(layout, config, jobs))
+
+
+def key_buckets(key_values: Iterable[Optional[str]],
+                kbuckets: int) -> List[int]:
+    """The kbuckets string keys hash into, on the driver.  Stops as
+    soon as every bucket is seen, so a large probe hashes only a few
+    hundred keys when the batch covers all buckets."""
+    out = set()
+    for v in key_values:
+        if v is not None:
+            out.add(xxhash64_str(v) % kbuckets)
+            if len(out) == kbuckets:
+                break
+    return sorted(out)
 
 
 def lookup_key_driver(layout: IndexLayout, config: IndexConfig,
@@ -183,37 +210,49 @@ def _sidecar_complete(layout: IndexLayout, jobs: List[int]) -> bool:
 
 
 def resolve_keys(spark: SparkSession, layout: IndexLayout,
-                 config: IndexConfig,
-                 keys: DataFrame) -> Optional[DataFrame]:
+                 config: IndexConfig, keys: DataFrame,
+                 jobs: Optional[List[int]] = None,
+                 key_values: Optional[Iterable[str]] = None
+                 ) -> Optional[DataFrame]:
     """(key, doc_id) rows for every indexed document whose key appears
     in ``keys`` (a one-column DataFrame named ``config.key_col``).
 
-    Reads only the kbucket partitions the wanted keys hash into: the
-    distinct-buckets aggregate collects ≤ kbuckets rows however large
-    the key batch, then partition pruning limits the scan.  Returns
-    None when the index has no committed docs at all.
+    Reads only the kbucket partitions the wanted keys hash into.
+    ``jobs`` is the caller's lineage snapshot (default: read it now).
+    ``key_values`` are the same keys as Python strings, when the
+    caller holds them on the driver: for a string key column their
+    kbuckets are hashed on the driver and the probe runs no Spark
+    job.  Otherwise a distinct-buckets aggregate collects ≤ kbuckets
+    rows.  Returns None when the index has no committed docs at all.
     """
-    jobs = layout.completed_jobs(spark)
-    docs_dirs = [layout.job_dir("docs", j) for j in jobs
-                 if os.path.isdir(layout.job_dir("docs", j))]
-    if not docs_dirs:
+    if jobs is None:
+        jobs = layout.completed_jobs()
+    docs_jobs = [j for j in jobs if os.path.isdir(layout.job_dir("docs", j))]
+    if not docs_jobs:
         return None
     # Cast the probe keys to the INDEXED key type before hashing: the
     # kbucket is xxhash64 over the natural column type, so a
     # string-typed probe against e.g. a long key column would hash to
-    # different buckets and silently match nothing.  Schema read is
-    # driver-side parquet-footer metadata — no Spark job.
-    key_type = (spark.read.option("basePath", layout.table("docs"))
-                .parquet(*docs_dirs).schema[config.key_col].dataType)
+    # different buckets and silently match nothing.  The type comes
+    # from one parquet footer on the driver — no Spark job.
+    from pyspark.sql.pandas.types import from_arrow_type
+    key_pa = key_arrow_type(layout, config, docs_jobs, "docs")
+    key_type = from_arrow_type(key_pa)
     keys = (keys.select(F.col(config.key_col).cast(key_type))
             .where(F.col(config.key_col).isNotNull()).distinct())
     if _sidecar_complete(layout, jobs):
-        idx_dirs = [layout.job_dir("doc_index", j) for j in jobs
-                    if os.path.isdir(layout.job_dir("doc_index", j))]
-        buckets = [r.b for r in keys.select(
-            key_bucket_col(F.col(config.key_col), config.kbuckets)
-            .alias("b")).distinct().collect()]
-        idx = (spark.read
+        idx_dirs = [layout.job_dir("doc_index", j) for j in docs_jobs]
+        if key_values is not None and _is_string(key_pa):
+            buckets = key_buckets(key_values, config.kbuckets)
+        else:
+            buckets = [r.b for r in keys.select(
+                key_bucket_col(F.col(config.key_col), config.kbuckets)
+                .alias("b")).distinct().collect()]
+        # the sidecar's schema is known: no schema-inference job
+        schema = T.StructType([T.StructField(config.key_col, key_type),
+                               T.StructField("doc_id", T.LongType()),
+                               T.StructField("kbucket", T.IntegerType())])
+        idx = (spark.read.schema(schema)
                .option("basePath", layout.table("doc_index"))
                .parquet(*idx_dirs)
                .where(F.col("kbucket").isin(buckets)))
@@ -221,6 +260,6 @@ def resolve_keys(spark: SparkSession, layout: IndexLayout,
                 .select(config.key_col, "doc_id"))
     # legacy index without a complete sidecar: full docs scan
     docs = (spark.read.option("basePath", layout.table("docs"))
-            .parquet(*docs_dirs))
+            .parquet(*[layout.job_dir("docs", j) for j in docs_jobs]))
     return (docs.join(keys, config.key_col, "left_semi")
             .select(config.key_col, "doc_id"))

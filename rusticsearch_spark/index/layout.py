@@ -29,9 +29,9 @@ import json
 import os
 import shutil
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def qname(col: str) -> str:
@@ -186,52 +186,73 @@ class IndexLayout:
             return IndexConfig.from_json(f.read())
 
     # -- lineage (checkpoint/commit) ---------------------------------
-    def completed_jobs(self, spark: SparkSession) -> List[int]:
-        path = self.table("lineage")
-        if not os.path.isdir(path) or not os.listdir(path):
-            return []
-        rows = spark.read.parquet(path).where("status = 'done'") \
-            .select("job").distinct().collect()
-        return sorted(r.job for r in rows)
+    def lineage(self) -> List[dict]:
+        """Committed lineage rows (``status == 'done'``), one per job,
+        sorted by job.  The table is one tiny file per job, so it is
+        read on the driver with pyarrow — zero Spark jobs.  The job id
+        comes from the ``job=K`` directory name; a directory that does
+        not read as parquet (a crash mid-write) is not committed.
 
-    def completed_jobs_local(self) -> List[int]:
-        """``completed_jobs`` without a SparkSession (pyarrow read) —
-        for LocalSearcher and other driver-side readers."""
+        Every lineage consumer goes through this one read, and each
+        write-path call (engine open, upsert batch, merge) takes ONE
+        snapshot of it: two reads could straddle a concurrent commit
+        and mix two index states."""
         import pyarrow.parquet as pq
         root = self.table("lineage")
         if not os.path.isdir(root):
             return []
-        out: List[int] = []
+        out: List[dict] = []
         for d in os.listdir(root):
             if not d.startswith("job="):
                 continue
-            path = os.path.join(root, d)
             try:
-                tbl = pq.read_table(path, columns=["status"])
-            except Exception:
+                rows = pq.read_table(os.path.join(root, d)).to_pylist()
+            except (OSError, ValueError):    # ArrowInvalid is a ValueError
                 continue
-            if "done" in tbl.column("status").to_pylist():
-                out.append(int(d.split("=", 1)[1]))
-        return sorted(out)
+            done = [r for r in rows if r.get("status") == "done"]
+            if done:
+                out.append({**done[0], "job": int(d.split("=", 1)[1])})
+        return sorted(out, key=lambda r: r["job"])
+
+    def completed_jobs(self, spark: Optional[SparkSession] = None
+                       ) -> List[int]:
+        """Committed job ids (``spark`` is accepted for older callers
+        and unused: lineage is read on the driver)."""
+        return [r["job"] for r in self.lineage()]
+
+    #: the same driver-side read, under the name LocalSearcher and the
+    #: scripts use
+    completed_jobs_local = completed_jobs
 
     def committed_dirs(self, name: str,
-                       spark: Optional[SparkSession] = None) -> List[str]:
+                       spark: Optional[SparkSession] = None,
+                       jobs: Optional[List[int]] = None) -> List[str]:
         """Data directories of COMMITTED jobs only.  Readers must
         resolve job dirs through lineage, never by globbing ``job=*``:
         during a partial merge the merged job's data lands on disk
         before its sources retire, and a crashed job may leave data
         with no lineage row — globbing would double-count or read
-        uncommitted docs."""
-        jobs = (self.completed_jobs(spark) if spark is not None
-                else self.completed_jobs_local())
+        uncommitted docs.  Pass ``jobs`` (a caller's lineage snapshot)
+        to resolve several tables against the same index state."""
+        if jobs is None:
+            jobs = self.completed_jobs()
         return [self.job_dir(name, j) for j in jobs
                 if os.path.isdir(self.job_dir(name, j))]
 
-    def lineage(self, spark: SparkSession) -> Optional[DataFrame]:
-        path = self.table("lineage")
-        if not os.path.isdir(path) or not os.listdir(path):
-            return None
-        return spark.read.parquet(path)
+    def field_stats(self, jobs: List[int]) -> Dict[str, Tuple[int, int]]:
+        """Index-wide ``field → (total_docs, total_tokens)``: the
+        ``jobs``' field_stats sidecars summed on the driver (a handful
+        of rows per job; pyarrow, zero Spark jobs)."""
+        import pyarrow.parquet as pq
+        out: Dict[str, Tuple[int, int]] = {}
+        for d in self.committed_dirs("field_stats", jobs=jobs):
+            t = pq.read_table(d, columns=["field", "total_docs",
+                                          "total_tokens"]).to_pydict()
+            for f, nd, nt in zip(t["field"], t["total_docs"],
+                                 t["total_tokens"]):
+                d0, t0 = out.get(f, (0, 0))
+                out[f] = (d0 + int(nd), t0 + int(nt))
+        return out
 
     def commit_job(self, spark: SparkSession, row: dict) -> None:
         """Atomically activate a job: the lineage row is written LAST,

@@ -9,7 +9,23 @@ are never remapped (they are already globally unique and dense per
 bucket), so unlike the reference's merge (which repacks u16 local id
 spaces, segment_ops.rs:240-268) ours is a pure re-grouping:
 
-    decode blocks → rows → shuffle on (field, term, segment) → re-encode
+    decode blocks → rows → the build's one-shuffle encoder
+
+The Spark job plan of a merge (each line one Spark job):
+
+1. the schema-merging read of the source docs tables;
+2. the broadcast of the pending deletion lists (only when any exist);
+3. the survivors' docs write (``build.write_docs``), observing the
+   doc count and per-field presence counts — no ``count()`` job, no
+   field-agg job;
+4-6. ``build.write_postings``, exactly as the build runs it: the
+   doc_index sidecar on a helper thread alongside ONE shuffle of the
+   decoded rows into tbucket-sorted encoded blocks, then the term_dict
+   write observing the block count and per-field token totals.
+
+The decode is one vectorized numpy pass per Arrow batch, and it drops
+deleted doc ids before the shuffle.  Lineage and deletion lists are
+read on the driver (pyarrow), once per call.
 
 Two-phase like the reference (segment_ops.rs:216-235): all data tables
 are written into the target first, the lineage commit row last.
@@ -23,49 +39,58 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from typing import Dict, Iterator, List, Optional
+from typing import Dict, List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from .build import (POSTINGS_SCHEMA, _encode_partitions, _field_stats,
-                    _write_field_stats)
-from .codec import decode_block
-from .layout import IndexConfig, IndexLayout
+from .build import POSTINGS_SCHEMA, finish_job, write_docs
+from .delete import deleted_doc_ids, load_deletions
+from .layout import IndexLayout
 
-_ROWS_SCHEMA = ("field string, term string, segment long, doc_id long, "
-                "tf int, len_byte int")
+_ROWS_SCHEMA = ("field_ord int, term string, doc_id long, len_byte int, "
+                "tf int")
 
 
-def _decode_to_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        fields: List[np.ndarray] = []
-        terms: List[np.ndarray] = []
-        segs: List[np.ndarray] = []
-        ids: List[np.ndarray] = []
-        tfs: List[np.ndarray] = []
-        lens: List[np.ndarray] = []
-        for row in pdf.itertuples(index=False):
-            doc_ids, tf, lb = decode_block(
-                row.segment, row.doc_bytes, row.tf_bytes, row.len_bytes)
-            n = len(doc_ids)
-            fields.append(np.full(n, row.field, dtype=object))
-            terms.append(np.full(n, row.term, dtype=object))
-            segs.append(np.full(n, row.segment, dtype=np.int64))
-            ids.append(doc_ids)
-            tfs.append(tf)
-            lens.append(lb)
-        if ids:
-            yield pd.DataFrame({
-                "field": np.concatenate(fields),
-                "term": np.concatenate(terms),
-                "segment": np.concatenate(segs),
-                "doc_id": np.concatenate(ids),
-                "tf": np.concatenate(tfs).astype(np.int32),
-                "len_byte": np.concatenate(lens).astype(np.int32),
-            })
+def _decode_rows(field_names: List[str], deleted):
+    """mapInArrow body: posting blocks → ``(field_ord, term, doc_id,
+    len_byte, tf)`` rows, the input of ``build.write_postings``.  Each
+    Arrow batch decodes in one numpy pass; doc ids in ``deleted`` (a
+    broadcast sorted int64 array) are dropped here, before the
+    shuffle."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    names = pa.array(field_names, type=pa.string())
+    out_schema = pa.schema([("field_ord", pa.int32()),
+                            ("term", pa.string()), ("doc_id", pa.int64()),
+                            ("len_byte", pa.int32()), ("tf", pa.int32())])
+
+    def _run(batches):
+        from ..query.engine import _batch_decode
+        gone = deleted.value
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            doc_ids, tfs, lens, counts = _batch_decode(rb)
+            block = np.repeat(np.arange(rb.num_rows), counts)
+            if gone.size:
+                pos = np.minimum(np.searchsorted(gone, doc_ids),
+                                 gone.size - 1)
+                keep = gone[pos] != doc_ids
+                doc_ids, tfs, lens, block = (
+                    doc_ids[keep], tfs[keep], lens[keep], block[keep])
+            ords = pc.index_in(rb.column("field"), value_set=names) \
+                .to_numpy(zero_copy_only=False)
+            yield pa.RecordBatch.from_arrays([
+                pa.array(ords[block].astype(np.int32)),
+                rb.column("term").take(pa.array(block)),
+                pa.array(doc_ids),
+                pa.array(lens.astype(np.int32)),
+                pa.array(tfs.astype(np.int32)),
+            ], schema=out_schema)
+
+    return _run
 
 
 def merge_jobs(spark: SparkSession, index_dir: str, out_dir: str,
@@ -74,73 +99,44 @@ def merge_jobs(spark: SparkSession, index_dir: str, out_dir: str,
     single-job ``out_dir``.  Logical index content is preserved."""
     layout = IndexLayout(index_dir)
     config = layout.read_config()
-    all_jobs = layout.completed_jobs(spark)
-    jobs = sorted(jobs) if jobs is not None else all_jobs
+    if jobs is None:
+        jobs = layout.completed_jobs()
     # empty-batch jobs commit lineage only — nothing to merge
-    jobs = [j for j in jobs if os.path.isdir(layout.job_dir("docs", j))]
+    jobs = [j for j in sorted(jobs)
+            if os.path.isdir(layout.job_dir("docs", j))]
     out = IndexLayout(out_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     out.write_config(config)
     t0 = time.monotonic()
-    shuffle_p = (config.shuffle_partitions
-                 or int(spark.conf.get("spark.sql.shuffle.partitions")))
 
-    from .delete import load_deletions
-    deletions = load_deletions(spark, layout)
-
-    docs = spark.read.option("basePath", layout.table("docs")).parquet(
-        *[layout.job_dir("docs", j) for j in jobs]).drop("job")
+    # physical cleanup: deleted docs vanish and statistics are
+    # recomputed from survivors (segment_ops.rs:157-206 semantics)
+    del_dirs = layout.deletion_dirs()
+    deletions = load_deletions(spark, layout, del_dirs)
+    # mergeSchema: a stored column that only later jobs carry (a
+    # mapping change between batches) survives the merge
+    docs = (spark.read.option("basePath", layout.table("docs"))
+            .option("mergeSchema", "true")
+            .parquet(*[layout.job_dir("docs", j) for j in jobs])
+            .drop("job"))
     if deletions is not None:
-        # physical cleanup: deleted docs vanish and statistics are
-        # recomputed from survivors (segment_ops.rs:157-206 semantics)
         docs = docs.join(deletions, "doc_id", "left_anti")
-    docs.write.mode("overwrite").parquet(out.job_dir("docs", 0))
-    n_docs = spark.read.parquet(out.job_dir("docs", 0)).count()
+    written = write_docs(spark, docs, out, config, 0)
 
-    from .doc_index import write_doc_index
-    write_doc_index(spark.read.parquet(out.job_dir("docs", 0)),
-                    out, config, 0, shuffle_p, n_rows=n_docs)
-
-    blocks = spark.read.option("basePath", layout.table("postings")) \
-        .parquet(*[layout.job_dir("postings", j) for j in jobs])
-    rows = blocks.select("field", "term", "segment", "doc_bytes",
-                         "tf_bytes", "len_bytes") \
-        .mapInPandas(_decode_to_rows, schema=_ROWS_SCHEMA)
-    if deletions is not None:
-        rows = rows.join(deletions, "doc_id", "left_anti")
-    merged = (rows
-              .repartition(shuffle_p, "field", "term", "segment")
-              .sortWithinPartitions("field", "term", "segment", "doc_id")
-              .mapInPandas(_encode_partitions(config.tbuckets,
-                                              pre_counted=True),
-                           schema=POSTINGS_SCHEMA))
-    (merged
-     .repartitionByRange(max(config.tbuckets, shuffle_p),
-                         "field", "term", "segment")
-     .sortWithinPartitions("tbucket", "field", "term", "segment")
-     .write.mode("overwrite").partitionBy("tbucket")
-     .parquet(out.job_dir("postings", 0)))
-
-    dict_src = spark.read.parquet(out.job_dir("postings", 0)) \
-        .groupBy("field", "term", "tbucket") \
-        .agg(F.sum("df_block").cast("long").alias("df"),
-             F.count("*").cast("int").alias("n_blocks"),
-             F.sum("sum_tf").cast("long").alias("sum_tf"))
-    (dict_src.repartition(max(1, shuffle_p // 4), "field", "term")
-     .sortWithinPartitions("field", "term")
-     .write.mode("overwrite").parquet(out.job_dir("term_dict", 0)))
-
-    ids = spark.read.parquet(out.job_dir("docs", 0))
-    stats, n_blocks = _field_stats(spark, ids,
-                                   out.job_dir("term_dict", 0), config)
-    _write_field_stats(out.job_dir("field_stats", 0), stats)
-
-    row = {"job": 0, "n_docs": n_docs, "n_posting_blocks": n_blocks,
-           "wall_sec": round(time.monotonic() - t0, 3), "status": "done",
-           "finished_unix": int(time.time()),
-           "merged_from": ",".join(str(j) for j in jobs)}
-    out.commit_job(spark, row)
-    return row
+    # the block table's schema is fixed: no schema-inference job
+    gone = spark.sparkContext.broadcast(deleted_doc_ids(del_dirs))
+    try:
+        rows = (spark.read.schema(POSTINGS_SCHEMA)
+                .option("basePath", layout.table("postings"))
+                .parquet(*[layout.job_dir("postings", j) for j in jobs])
+                .select("field", "term", "segment", "doc_bytes",
+                        "tf_bytes", "len_bytes")
+                .mapInArrow(_decode_rows(list(config.fields), gone),
+                            schema=_ROWS_SCHEMA))
+        return finish_job(spark, rows, written, out, config, 0, t0,
+                          {"merged_from": ",".join(str(j) for j in jobs)})
+    finally:
+        gone.destroy()
 
 
 # the reference's size tiers (src/index/maintenance.rs:14-54):
@@ -193,12 +189,10 @@ def maintenance(spark: SparkSession, index_dir: str,
     path (full compaction), the new job id (partial merge), or None
     if nothing merged."""
     layout = IndexLayout(index_dir)
-    lineage = layout.lineage(spark)
-    if lineage is None:
+    lineage = layout.lineage()          # the one snapshot of this call
+    if not lineage:
         return None
-    done_rows = lineage.where("status = 'done'") \
-        .select("job", "n_docs").collect()
-    sizes = {r.job: int(r.n_docs) for r in done_rows if r.n_docs}
+    sizes = {r["job"]: int(r["n_docs"]) for r in lineage if r["n_docs"]}
     if max_jobs is not None and len(sizes) > max_jobs:
         selected = sorted(sizes)
     else:
@@ -208,7 +202,8 @@ def maintenance(spark: SparkSession, index_dir: str,
     gen_tmp = index_dir.rstrip("/") + ".compact_tmp"
     retired = index_dir.rstrip("/") + f".gen{int(time.time())}"
     if set(selected) == set(sizes):
-        merge_jobs(spark, index_dir, gen_tmp)
+        merge_jobs(spark, index_dir, gen_tmp,
+                   jobs=[r["job"] for r in lineage])
         os.rename(index_dir, retired)
         os.rename(gen_tmp, index_dir)
         return retired
@@ -217,7 +212,7 @@ def maintenance(spark: SparkSession, index_dir: str,
     # rows — `sizes` drops zero-doc jobs (empty streaming batches),
     # whose ids are nonetheless taken.
     row = merge_jobs(spark, index_dir, gen_tmp, jobs=selected)
-    new_job = max((r.job for r in done_rows), default=-1) + 1
+    new_job = lineage[-1]["job"] + 1
     # two-phase visibility swap (readers resolve job dirs via
     # COMMITTED lineage — layout.committed_dirs):
     #   1. merged DATA in place, lineage not yet committed

@@ -30,7 +30,6 @@ differ from the reference by f32-accumulation order at ~1e-7 relative
 
 from __future__ import annotations
 
-import os
 from functools import cached_property
 from typing import Dict, Iterator, List, Optional, Tuple, Union
 
@@ -305,20 +304,26 @@ class SearchEngine:
         # a partial merge writes the merged job's data before retiring
         # its sources, and a crashed job may leave data without a
         # lineage row — globbing would double-count docs/df in that
-        # window (segment_ops.rs:270-289 activate/deactivate batch)
-        def _read(name: str) -> DataFrame:
-            dirs = self.layout.committed_dirs(name, spark)
-            return (spark.read.option("basePath", self.layout.table(name))
-                    .parquet(*dirs))
+        # window (segment_ops.rs:270-289 activate/deactivate batch).
+        # ONE lineage snapshot (a driver-side read, no Spark job)
+        # resolves every table, so a commit landing mid-open cannot
+        # mix two index states.
+        self._lineage = self.layout.lineage()
+        jobs = self._jobs = [r["job"] for r in self._lineage]
 
-        self.postings = _read("postings")
-        self.docs = _read("docs")
+        self.postings = (
+            spark.read.option("basePath", self.layout.table("postings"))
+            .parquet(*self.layout.committed_dirs("postings", jobs=jobs)))
+        # mergeSchema: a stored column that only later jobs carry (a
+        # mapping change between batches) stays readable; the schema
+        # read is the same one Spark job either way
+        self.docs = (spark.read.option("basePath", self.layout.table("docs"))
+                     .option("mergeSchema", "true")
+                     .parquet(*self.layout.committed_dirs("docs", jobs=jobs)))
         # term-dictionary sidecar (term_dictionary.rs:78-85): present
         # when every committed job wrote one; readers fall back to
         # block-metadata scans otherwise (legacy indexes)
         import os as _os
-        jobs = self.layout.completed_jobs(spark)
-        self._jobs = list(jobs)
         td_ok = all(
             _os.path.isdir(self.layout.job_dir("term_dict", j))
             for j in jobs
@@ -337,18 +342,18 @@ class SearchEngine:
             # serving mode: pin the (compressed, small relative to the
             # corpus) block table in memory across queries
             self.postings = self.postings.cache()
-        stats = _read("field_stats") \
-            .groupBy("field").agg(F.sum("total_docs").alias("d"),
-                                  F.sum("total_tokens").alias("t")).collect()
         # global per-field stats, memoized for the engine's lifetime
         # (the reference memoizes per query, statistics.rs:46-78 —
-        # ours are immutable per snapshot so engine-lifetime is safe)
-        self.field_stats = {r.field: (int(r.d), int(r.t)) for r in stats}
+        # ours are immutable per snapshot so engine-lifetime is safe);
+        # a driver-side read of the small sidecars, no Spark job
+        self.field_stats = self.layout.field_stats(jobs)
         # deletion list: anti-joined onto every plan (the planner's
         # unconditional AndNot, planner/mod.rs:34-36); stats stay
         # un-decremented until merge, like the reference
         from ..index.delete import load_deletions
-        self.deletions = load_deletions(spark, self.layout)
+        self._deletion_dirs = self.layout.deletion_dirs()
+        self.deletions = load_deletions(spark, self.layout,
+                                        self._deletion_dirs)
         # serving-mode selection (the reference's single-node searcher
         # split: executors build the artifact, a driver/serving tier
         # answers queries — search_api.rs)
@@ -412,13 +417,27 @@ class SearchEngine:
         from ..index.doc_index import key_is_string
         return key_is_string(self.layout, self.config, self._jobs)
 
+    @cached_property
+    def _deleted_ids(self) -> np.ndarray:
+        from ..index.delete import deleted_doc_ids
+        return deleted_doc_ids(self._deletion_dirs)
+
+    def is_deleted(self, doc_id: int) -> bool:
+        """Whether ``doc_id`` is on the deletion lists this engine
+        opened with — read once, on the driver (no Spark job); what a
+        point GET checks its sidecar hits against while deletions are
+        pending."""
+        ids = self._deleted_ids
+        i = int(np.searchsorted(ids, doc_id))
+        return i < ids.size and int(ids[i]) == doc_id
+
     def _postings_bytes(self) -> int:
         return sum(self._postings_bytes_per_job().values())
 
     def _postings_bytes_per_job(self) -> Dict[str, int]:
         import os as _os
         out: Dict[str, int] = {}
-        for d in self.layout.committed_dirs("postings"):
+        for d in self.layout.committed_dirs("postings", jobs=self._jobs):
             total = 0
             for root, _, files in _os.walk(d):
                 total += sum(_os.path.getsize(_os.path.join(root, f))
@@ -554,9 +573,7 @@ class SearchEngine:
                 # zero Spark jobs.  Deletions stay un-decremented
                 # until merge and nested child rows inflate n_docs,
                 # so both fall through to the counted scan.
-                n = self._lineage_doc_count()
-                if n is not None:
-                    return n
+                return self._lineage_doc_count()
             return self._live(self._universe()).count()
         q = self.parse(query_json)
         if isinstance(q, dsl.Term) and self.deletions is None:
@@ -574,44 +591,20 @@ class SearchEngine:
             if ds == NONE:
                 return 0
             if self.deletions is None and not self.config.nested_paths:
-                n = self._lineage_doc_count()
-                if n is not None:
-                    return n
+                return self._lineage_doc_count()
             return self._live(self._universe()).count()
         if self.config.nested_paths:
             # child rows are internal — count parent documents only
             ds = ds.join(self._universe(), "doc_id", "left_semi")
         return self._live(ds).count()
 
-    def _lineage_doc_count(self) -> Optional[int]:
-        """Σ ``n_docs`` over committed lineage rows — a driver-side
-        pyarrow read of the (one-row-per-job) lineage sidecars, zero
-        Spark jobs.  Every writer records the exact docs-table row
-        count (observe() metric on the docs write; survivor count on
+    def _lineage_doc_count(self) -> int:
+        """Σ ``n_docs`` over the lineage rows this engine opened with —
+        zero Spark jobs.  Every writer records the exact docs-table
+        row count (observe() metric on the docs write, survivors on
         merge), so the sum equals ``docs.count()`` whenever no
-        deletion list is pending.  Returns None when lineage is
-        unreadable (caller falls back to the counted scan)."""
-        import pyarrow.parquet as pq
-        root = self.layout.table("lineage")
-        if not os.path.isdir(root):
-            return None
-        total = 0
-        try:
-            # restricted to the engine's committed-at-open snapshot so
-            # a concurrent writer cannot skew the count vs. the docs
-            # frame this engine actually reads
-            for d in (f"job={j}" for j in self._jobs):
-                if not os.path.isdir(os.path.join(root, d)):
-                    continue
-                tbl = pq.read_table(os.path.join(root, d),
-                                    columns=["status", "n_docs"])
-                for st, nd in zip(tbl.column("status").to_pylist(),
-                                  tbl.column("n_docs").to_pylist()):
-                    if st == "done":
-                        total += int(nd)
-        except Exception:
-            return None
-        return total
+        deletion list is pending."""
+        return sum(int(r["n_docs"] or 0) for r in self._lineage)
 
     # ---------------------------------------------------------------
     # fused multi-term path: ONE decode job for a combinator whose

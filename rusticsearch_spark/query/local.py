@@ -127,7 +127,6 @@ class LocalSearcher:
         large shards; eager (default) pre-decodes everything so no
         first-hit pays decode — identical results either way
         (tests/test_local_searcher.py lazy battery)."""
-        import os
         layout = IndexLayout(index_dir)
         self.index_dir = index_dir
         self.config: IndexConfig = layout.read_config()
@@ -149,19 +148,12 @@ class LocalSearcher:
                                         Tuple[int, int]]] = None
         # committed jobs only (same visibility rule as SearchEngine:
         # lineage-resolved dirs, never a job=* glob)
-        if jobs is not None:
-            committed = set(layout.completed_jobs_local())
-            wanted = sorted(set(jobs) & committed)
-
-            def _dirs(name: str) -> List[str]:
-                return [layout.job_dir(name, j) for j in wanted
-                        if os.path.isdir(layout.job_dir(name, j))]
-
-            post_dirs = _dirs("postings")
-            docs_dirs = _dirs("docs")
-        else:
-            post_dirs = layout.committed_dirs("postings")
-            docs_dirs = layout.committed_dirs("docs")
+        # (one lineage snapshot resolves every table)
+        committed = layout.completed_jobs()
+        wanted = (committed if jobs is None
+                  else sorted(set(jobs) & set(committed)))
+        post_dirs = layout.committed_dirs("postings", jobs=wanted)
+        docs_dirs = layout.committed_dirs("docs", jobs=wanted)
         tbl = pa.concat_tables([
             pq.read_table(d, columns=["field", "term", "segment",
                                       "doc_bytes", "tf_bytes",
@@ -227,14 +219,9 @@ class LocalSearcher:
                     self._post[key] = (doc_ids[key_lo[c]:key_hi[c]],
                                        tfs[key_lo[c]:key_hi[c]],
                                        lens[key_lo[c]:key_hi[c]])
-        stats = pa.concat_tables([
-            pq.read_table(d) for d in
-            layout.committed_dirs("field_stats")]).to_pydict()
-        self.field_stats: Dict[str, Tuple[int, int]] = {}
-        for f, d, t in zip(stats["field"], stats["total_docs"],
-                           stats["total_tokens"]):
-            pd_, pt = self.field_stats.get(f, (0, 0))
-            self.field_stats[f] = (pd_ + int(d), pt + int(t))
+        # index-wide, whatever this shard's jobs
+        self.field_stats: Dict[str, Tuple[int, int]] = \
+            layout.field_stats(committed)
         # nested-TYPE indexes: the docs table holds internal child
         # rows (one per array element, `_nested_parent` = parent key,
         # key "<parent>#<path>#<pos>" — mapping.prepare_docs).  The

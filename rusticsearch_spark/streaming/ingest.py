@@ -20,12 +20,16 @@ each batch gets a disjoint bucket namespace
 
 from __future__ import annotations
 
-from typing import Optional
+import time
+from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.build import _registry, assign_doc_ids, write_job
+from ..index.build import (_posting_rows, _registry, assign_doc_ids,
+                           doc_columns, finish_job, write_docs)
+from ..index.delete import committed_docs, nested_children, write_deletions
+from ..index.doc_index import resolve_keys
 from ..index.layout import IndexConfig, IndexLayout
 
 STREAM_JOB_BASE = 100_000
@@ -55,82 +59,90 @@ class StreamingIngester:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         job = STREAM_JOB_BASE + int(batch_id)
-        if job in self.layout.completed_jobs(self.spark):
+        jobs = self.layout.completed_jobs()   # the one lineage snapshot
+        if job in jobs:
             return  # replayed batch: lineage says done → idempotent skip
         key = self.config.key_col
         batch_df = batch_df.dropDuplicates([key])
-        from ..index.doc_index import resolve_keys
-        if self.upsert:
-            # insert_or_update semantics (rocksdb/mod.rs:212-226):
-            # mark any existing doc with the same key deleted, then
-            # index the incoming version under a fresh doc_id.  The
-            # lookup goes through the doc_index PK sidecar — only the
-            # kbucket partitions this batch's keys hash into are
-            # scanned, never the whole corpus (document_index.rs
-            # point-lookup analogue).  Committed jobs only — an orphan
-            # dir from a crashed job must not source delete marks.
-            existing = resolve_keys(self.spark, self.layout, self.config,
-                                    batch_df.select(key))
-            targets = (existing.select("doc_id").distinct()
-                       if existing is not None else None)
-            if self.config.nested_paths:
-                # cascade to nested child rows: an upsert whose new
-                # version has FEWER array elements would otherwise
-                # leave the removed elements' child rows live (their
-                # synthetic "<parent>#<path>#<pos>" keys are absent
-                # from the batch, so the key-level delete above never
-                # sees them).  ALL committed children of the batch's
-                # parent keys die; the re-indexed batch re-creates
-                # the surviving elements under fresh doc_ids.  Same
-                # `_nested_parent` two-column resolution as
-                # index.delete.delete_documents' cascade.
-                parent_keys = batch_df
-                if "_nested_parent" in batch_df.columns:
-                    parent_keys = batch_df.where(
-                        F.col("_nested_parent").isNull())
-                docs_dirs = self.layout.committed_dirs(
-                    "docs", self.spark)
-                if docs_dirs:
-                    docs = (self.spark.read
-                            .option("basePath",
-                                    self.layout.table("docs"))
-                            .parquet(*docs_dirs))
-                    # _nested_root reaches every descendant level in
-                    # one semi-join (pre-multilevel indexes stored
-                    # only _nested_parent = root at depth 1)
-                    rc = ("_nested_root" if "_nested_root"
-                          in docs.columns else "_nested_parent")
-                    kids = (docs
-                            .where(F.col("_nested_parent").isNotNull())
-                            .join(parent_keys.select(
-                                F.col(key).cast("string").alias(rc)),
-                                rc, "left_semi")
-                            .select("doc_id"))
-                    targets = (kids if targets is None
-                               else targets.unionByName(kids).distinct())
-            if targets is not None and not targets.isEmpty():
-                targets.coalesce(1).write.mode("overwrite").parquet(
-                    self.layout.next_deletion_dir())
-        elif self.dedup_keys:
+        if self.dedup_keys and not self.upsert:
             # first-writer-wins insert: skip keys already indexed
-            # (same bucket-pruned sidecar lookup)
+            # (bucket-pruned sidecar lookup)
             existing = resolve_keys(self.spark, self.layout, self.config,
-                                    batch_df.select(key))
+                                    batch_df.select(key), jobs=jobs)
             if existing is not None:
                 batch_df = batch_df.join(existing.select(key),
                                          key, "left_anti")
-        if batch_df.isEmpty():
-            # nothing new: still commit the lineage row so a replay of
-            # this batch id remains a no-op
-            self.layout.commit_job(self.spark, {
-                "job": job, "batch_id": int(batch_id), "n_docs": 0,
-                "status": "done"})
-            return
         base = STREAM_BUCKET_BASE + int(batch_id) * self.n_buckets_per_batch
         ids = assign_doc_ids(batch_df, key, self.n_buckets_per_batch,
                              bucket_base=base).drop("_bucket")
-        write_job(self.spark, ids, self.layout, self.config, self.registry,
-                  job, extra={"batch_id": int(batch_id)})
+        # the docs write is the ONE evaluation of the batch: the row
+        # count is observed on it, and everything after reads the
+        # written table.  Until the lineage commit the job is
+        # invisible to every reader.
+        self.layout.clear_incomplete_job(job)
+        t0 = time.monotonic()
+        written = write_docs(self.spark, doc_columns(ids, self.config),
+                             self.layout, self.config, job)
+        extra = {"batch_id": int(batch_id)}
+        if not written.n_docs:
+            # nothing new: still commit the lineage row so a replay of
+            # this batch id remains a no-op — lineage only, no data
+            self.layout.clear_incomplete_job(job)
+            self.layout.commit_job(self.spark, {
+                "job": job, "n_docs": 0, "status": "done", **extra})
+            return
+        if self.upsert:
+            self._retire_replaced(written.docs, jobs, job)
+        rows = _posting_rows(written.docs, self.config, self.registry,
+                             precount=self.config.precount)
+        finish_job(self.spark, rows, written, self.layout, self.config,
+                   job, t0, extra)
+
+    def _retire_replaced(self, docs: DataFrame, jobs: List[int],
+                         job: int) -> None:
+        """insert_or_update semantics (rocksdb/mod.rs:212-226): mark
+        every committed doc whose key the batch carries deleted; the
+        batch's docs (``docs``, job ``job``'s written table) become
+        the live versions under fresh doc_ids at the commit.  The
+        lookup goes through the doc_index PK sidecar — only the
+        kbucket partitions the batch's keys hash into are scanned
+        (document_index.rs point-lookup analogue), and those buckets
+        are hashed on the driver from the written parquet.  Committed
+        jobs only: an orphan dir from a crashed job must not source
+        delete marks."""
+        import pyarrow.dataset as ds
+        key = self.config.key_col
+
+        def _probe():
+            for rb in ds.dataset(self.layout.job_dir("docs", job),
+                                 format="parquet").to_batches(
+                                     columns=[key]):
+                yield from rb.column(0).to_pylist()
+
+        existing = resolve_keys(self.spark, self.layout, self.config,
+                                docs.select(key), jobs=jobs,
+                                key_values=_probe())
+        targets = (existing.select("doc_id")
+                   if existing is not None else None)
+        if self.config.nested_paths:
+            # cascade to nested child rows: an upsert whose new version
+            # has FEWER array elements would otherwise leave the
+            # removed elements' child rows live (their synthetic
+            # "<parent>#<path>#<pos>" keys are absent from the batch,
+            # so the key-level lookup above never sees them).  ALL
+            # committed children of the batch's parent keys die; the
+            # batch re-creates the surviving elements under fresh
+            # doc_ids.
+            committed = committed_docs(self.spark, self.layout, jobs)
+            if committed is not None:
+                kids = nested_children(
+                    committed, key,
+                    docs.where(F.col("_nested_parent").isNull())
+                    .select(key))
+                targets = (kids if targets is None
+                           else targets.unionByName(kids))
+        if targets is not None:
+            write_deletions(self.layout, targets.distinct())
 
 
 def ingest_stream(spark: SparkSession, stream_df: DataFrame,

@@ -90,6 +90,11 @@ def webtext_table(spark: SparkSession, sf_dir: str,
         F.make_interval(secs=(F.col("doc_id") % 86400 +
                               F.col("replica") * 7).cast("double")),
     )
+    # the corpus is one small parquet file (and the replica crossJoin
+    # keeps its single partition): spread the rows over every core
+    # before the two Python UDFs, or one task renders and strips the
+    # whole table.  Row values do not depend on the partitioning.
+    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     html = docs.withColumn(
         "html", _render_html_udf(F.col("url"), F.col("text"), F.col("lang")))
     # `text` is DEFINED as the strip of `html` — the byte-identity

@@ -277,7 +277,9 @@ def test_get_document_same_keys_across_job_schemas(spark, tmp_path):
     """Two jobs with different stored columns (a stored field added
     between streamed batches): the driver GET returns exactly the
     Spark scan's row — the same keys (the docs frame's columns, None
-    where a job did not store one) and values."""
+    where a job did not store one) and values.  The docs frame merges
+    the jobs' schemas, so the later job's ``author`` is readable from
+    both paths."""
     from rusticsearch_spark.cluster import Cluster
     from rusticsearch_spark.index.layout import IndexLayout
     from rusticsearch_spark.streaming.ingest import StreamingIngester
@@ -298,8 +300,10 @@ def test_get_document_same_keys_across_job_schemas(spark, tmp_path):
             "url string, text string, lang string, author string"), 1)
     eng = c.engine("pages")
     assert eng.key_is_string
-    for key in ("https://a.example/1", "https://b.example/2"):
+    for key, author in (("https://a.example/1", None),
+                        ("https://b.example/2", "ann")):
         want = eng.docs.where(F.col("url") == key).limit(1).collect()
         got = c.get_document("pages", key)
         assert want and got == want[0].asDict(), key
         assert list(got) == eng.docs.columns
+        assert want[0]["author"] == author and got["author"] == author
