@@ -8,7 +8,7 @@ pipelines:
 * ``analysis``  — tokenizers/filters (UAX#29-ish standard tokenizer,
   lowercase, ASCII folding, ngram/edge-ngram) as vectorized pandas UDFs.
 * ``index``     — distributed posting-list construction
-  (delta + varbyte compressed, block-max metadata), doc/field/term
+  (delta + varbyte compressed, per-block df metadata), doc/field/term
   statistics, checkpointed + resumable builds.
 * ``query``     — the reference's query DSL (match/term/terms/prefix/
   bool combinators/filtered/...) parsed into a Query tree and planned

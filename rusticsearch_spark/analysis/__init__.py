@@ -1,9 +1,9 @@
 #: Version stamp of the analysis pipeline's BEHAVIOR.  Bump whenever
 #: tokenizer/filter output changes for any input (e.g. round 3's
-#: NFKD → full-Lucene-table ASCII fold): the build stamps it into
-#: IndexConfig.analysis_version and the engine refuses to open an
-#: index whose stamp differs — forcing a reindex instead of silent
-#: analyzer-mismatched queries.
+#: NFKD → full-Lucene-table ASCII fold): every config write stamps it
+#: into IndexConfig.analysis_version and IndexLayout.read_config
+#: refuses an index whose stamp differs — forcing a reindex instead of
+#: silent analyzer-mismatched queries.
 #: v1 = NFKD-based fold; v2 = full Lucene ASCIIFolding table (r3).
 ANALYSIS_VERSION = 2
 

@@ -19,7 +19,7 @@ round 3 did, NFKD → full Lucene table) changes analysis output for
 some characters, so an index built under an older pipeline is
 analyzer-mismatched with queries analyzed by a newer one.  The
 pipeline version is stamped into ``IndexConfig.analysis_version`` at
-build time and checked at engine open; bump
+build time and checked whenever the index is opened; bump
 ``analysis.ANALYSIS_VERSION`` whenever tokenizer/filter behavior
 changes, which forces a reindex instead of silent mismatches.
 """

@@ -180,10 +180,10 @@ class Cluster:
         fetches the stored row.  While deletions are pending, the hits
         are checked against the engine's deletion lists (read once,
         on the driver): an upserted key has two hits until the merge,
-        and only the live one is returned.  Falls back to the Spark
-        scan when the sidecar is incomplete (legacy index), or the
-        key column or the key is not a string.  Both paths return the
-        same keys: every column of the engine's docs frame, None
+        and only the live one is returned.  A key column or a key that
+        is not a string goes to the Spark scan instead (as does a
+        torn sidecar, whose hit has no docs row).  Both paths return
+        the same keys: every column of the engine's docs frame, None
         where the document's job did not store it."""
         eng = self.engine(index)
         row = self._get_document_driver(eng, key)
@@ -206,8 +206,6 @@ class Cluster:
             # the driver's string hash does not reproduce
             return NotImplemented
         hits = lookup_key_driver(eng.layout, eng.config, eng._jobs, key)
-        if hits is None:
-            return NotImplemented
         if eng.deletions is not None:
             hits = [h for h in hits if not eng.is_deleted(h[1])]
         if not hits:

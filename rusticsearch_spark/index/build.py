@@ -22,8 +22,7 @@ declarative Spark pipeline:
    ("the") appearing in every document splits into one group per
    65,536-doc segment, so no reducer ever sees more than 65,536
    postings for one key.  Groups are delta+varbyte encoded
-   (``index.codec``) with per-block ``(df_block, max_tf, min_len)``
-   metadata; only ``df_block`` has a reader.
+   (``index.codec``) with per-block ``(df_block, sum_tf)`` metadata.
 4. **layout** — the within-partition sort leads with the term's
    tbucket, so the encoded blocks stream out already clustered for
    the ``tbucket=`` Hive partitions and term-sorted in every file:
@@ -63,8 +62,6 @@ POSTINGS_SCHEMA = T.StructType([
     T.StructField("tbucket", T.IntegerType()),
     T.StructField("df_block", T.IntegerType()),
     T.StructField("sum_tf", T.LongType()),
-    T.StructField("max_tf", T.IntegerType()),
-    T.StructField("min_len", T.IntegerType()),
     T.StructField("doc_bytes", T.BinaryType()),
     T.StructField("tf_bytes", T.BinaryType()),
     T.StructField("len_bytes", T.BinaryType()),
@@ -164,16 +161,12 @@ def assign_doc_ids(docs: DataFrame, key_col: str, n_buckets: int,
     ``parent#path#pos`` key, so a document and its ENTIRE descendant
     chain land in the same bucket — hence the same build job — making
     every per-job document shard parent-complete at every nesting
-    level (the property sharded serving evaluates against).  The
-    ``_nested_parent`` fallback covers frames prepared before
-    multi-level support (where parent == root).  All branches of the
-    coalesce are string-typed: prepare_docs casts the key column to
-    string whenever nested paths exist.
+    level (the property sharded serving evaluates against).  Both
+    branches of the coalesce are string-typed: prepare_docs casts the
+    key column to string whenever nested paths exist.
     """
     if "_nested_root" in docs.columns:
         basis = F.coalesce(F.col("_nested_root"), F.col(key_col))
-    elif "_nested_parent" in docs.columns:
-        basis = F.coalesce(F.col("_nested_parent"), F.col(key_col))
     else:
         basis = F.col(key_col)
     bucket = (F.pmod(F.xxhash64(basis), F.lit(n_buckets))
@@ -211,7 +204,6 @@ def _encode_partitions_arrow(field_names: List[str]):
         ("field", pa.string()), ("term", pa.string()),
         ("segment", pa.int64()), ("tbucket", pa.int32()),
         ("df_block", pa.int32()), ("sum_tf", pa.int64()),
-        ("max_tf", pa.int32()), ("min_len", pa.int32()),
         ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary()),
         ("len_bytes", pa.binary()),
     ])
@@ -247,8 +239,6 @@ def _encode_partitions_arrow(field_names: List[str]):
         row_starts = p_starts[gp_starts]              # row idx per group
         df_block = np.diff(np.append(gp_starts, len(p_starts)))
         sum_tf = np.add.reduceat(tf, gp_starts)
-        max_tf = np.maximum.reduceat(tf, gp_starts)
-        min_len = np.minimum.reduceat(lb, gp_starts)
         # delta-encode doc ids (absolute-local at each group start;
         # base = segment << SEGMENT_BITS == doc & ~LOCAL_MASK since a
         # group is single-segment) in ONE varbyte pass over all
@@ -276,8 +266,6 @@ def _encode_partitions_arrow(field_names: List[str]):
             _arr("tbucket").take(take),
             pa.array(df_block.astype(np.int32)),
             pa.array(sum_tf.astype(np.int64)),
-            pa.array(max_tf.astype(np.int32)),
-            pa.array(min_len.astype(np.int32)),
             pa.array([doc_mem[a:b] for a, b in zip(d_lo, d_hi)],
                      type=pa.binary()),
             pa.array([tf_mem[a:b] for a, b in zip(t_lo, t_hi)],
@@ -464,27 +452,16 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
 
     done: List[int] = layout.completed_jobs(spark) if resume else []
     if not resume:
-        # stamp the analysis-pipeline version the index is built with
-        # (checked at engine open — analyzer changes force a reindex)
-        from ..analysis import ANALYSIS_VERSION
-        config.analysis_version = ANALYSIS_VERSION
-        if config.nested_paths:
-            # assign_doc_ids buckets child rows by their parent's key,
-            # so every job's document shard is parent-complete —
-            # stamp it so the serving tier admits sharded mode.  The
-            # stamp and the bucketing basis must derive from the same
-            # condition: a nested-configured frame missing both
-            # ancestry columns would bucket children by their
-            # synthetic key while claiming colocation, silently
-            # breaking sharded serving — fail fast instead.
-            if ("_nested_root" not in docs.columns
-                    and "_nested_parent" not in docs.columns):
-                raise ValueError(
-                    "config.nested_paths is set but the docs frame "
-                    "carries neither _nested_root nor _nested_parent "
-                    "— build nested indexes from "
-                    "mapping.prepare_docs output")
-            config.nested_colocated = True
+        # assign_doc_ids buckets child rows by their root's key, so
+        # every job's document shard is parent-complete — the property
+        # sharded serving relies on.  A nested-configured frame
+        # without the root column would bucket children by their
+        # synthetic key and silently break it: fail fast instead.
+        if config.nested_paths and "_nested_root" not in docs.columns:
+            raise ValueError(
+                "config.nested_paths is set but the docs frame carries "
+                "no _nested_root column — build nested indexes from "
+                "mapping.prepare_docs output")
         layout.write_config(config)
     buckets_per_job = -(-config.n_buckets // jobs)  # ceil
     shuffle_p = (config.shuffle_partitions

@@ -81,14 +81,11 @@ def nested_children(docs: DataFrame, key_col: str,
     """``doc_id`` of every nested child row (any depth) in ``docs`` of
     the documents keyed ``parent_keys`` (a one-column frame named
     ``key_col``) — the cascade of deleting or replacing a parent."""
-    # _nested_root reaches EVERY descendant level in one semi-join;
-    # pre-multilevel indexes only stored _nested_parent (equal to the
-    # root at depth 1)
-    rc = ("_nested_root" if "_nested_root" in docs.columns
-          else "_nested_parent")
+    # _nested_root reaches EVERY descendant level in one semi-join
     return (docs.where(F.col("_nested_parent").isNotNull())
             .join(parent_keys.select(F.col(key_col).cast("string")
-                                     .alias(rc)), rc, "left_semi")
+                                     .alias("_nested_root")),
+                  "_nested_root", "left_semi")
             .select("doc_id"))
 
 

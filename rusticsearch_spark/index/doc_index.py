@@ -13,9 +13,9 @@ O(corpus)-per-micro-batch cliff in the streaming upsert/delete path.
 The bucket hash is xxhash64(key) mod kbuckets — stable across batch
 and streaming jobs (unlike the doc-id bucket, whose namespace shifts
 per streaming batch), so one key always lands in the same partition
-dir of every job.  Readers fall back to the docs scan when any
-committed docs job lacks its sidecar (an index built before this
-table existed): correctness never depends on the sidecar.
+dir of every job.  Every writer (build, merge, streaming batch)
+writes the sidecar before it commits its job; indexes older than
+that are refused by the ``IndexLayout.read_config`` format gate.
 """
 
 from __future__ import annotations
@@ -181,11 +181,8 @@ def lookup_key_driver(layout: IndexLayout, config: IndexConfig,
     pyarrow — zero Spark jobs (the reference's O(1) ``k<doc_key>``
     RocksDB get, document_index.rs:71-91).  Serves string key columns
     only: the caller checks :func:`key_is_string` once per index and
-    sends other keys to the Spark scan.  Returns None when the sidecar
-    is incomplete — the caller falls back to the Spark scan."""
+    sends other keys to the Spark scan."""
     import pyarrow.dataset as ds
-    if not _sidecar_complete(layout, jobs):
-        return None
     bucket = xxhash64_str(key) % config.kbuckets
     out = []
     for j in jobs:
@@ -197,16 +194,6 @@ def lookup_key_driver(layout: IndexLayout, config: IndexConfig,
             filter=ds.field(config.key_col) == key, columns=["doc_id"])
         out.extend((j, int(x)) for x in tbl.column("doc_id").to_pylist())
     return out
-
-
-def _sidecar_complete(layout: IndexLayout, jobs: List[int]) -> bool:
-    """True iff every committed job that has docs also has its
-    doc_index sidecar (mixed old/new indexes must not miss docs)."""
-    for j in jobs:
-        if (os.path.isdir(layout.job_dir("docs", j))
-                and not os.path.isdir(layout.job_dir("doc_index", j))):
-            return False
-    return True
 
 
 def resolve_keys(spark: SparkSession, layout: IndexLayout,
@@ -240,26 +227,20 @@ def resolve_keys(spark: SparkSession, layout: IndexLayout,
     key_type = from_arrow_type(key_pa)
     keys = (keys.select(F.col(config.key_col).cast(key_type))
             .where(F.col(config.key_col).isNotNull()).distinct())
-    if _sidecar_complete(layout, jobs):
-        idx_dirs = [layout.job_dir("doc_index", j) for j in docs_jobs]
-        if key_values is not None and _is_string(key_pa):
-            buckets = key_buckets(key_values, config.kbuckets)
-        else:
-            buckets = [r.b for r in keys.select(
-                key_bucket_col(F.col(config.key_col), config.kbuckets)
-                .alias("b")).distinct().collect()]
-        # the sidecar's schema is known: no schema-inference job
-        schema = T.StructType([T.StructField(config.key_col, key_type),
-                               T.StructField("doc_id", T.LongType()),
-                               T.StructField("kbucket", T.IntegerType())])
-        idx = (spark.read.schema(schema)
-               .option("basePath", layout.table("doc_index"))
-               .parquet(*idx_dirs)
-               .where(F.col("kbucket").isin(buckets)))
-        return (idx.join(keys, config.key_col, "left_semi")
-                .select(config.key_col, "doc_id"))
-    # legacy index without a complete sidecar: full docs scan
-    docs = (spark.read.option("basePath", layout.table("docs"))
-            .parquet(*[layout.job_dir("docs", j) for j in docs_jobs]))
-    return (docs.join(keys, config.key_col, "left_semi")
+    idx_dirs = [layout.job_dir("doc_index", j) for j in docs_jobs]
+    if key_values is not None and _is_string(key_pa):
+        buckets = key_buckets(key_values, config.kbuckets)
+    else:
+        buckets = [r.b for r in keys.select(
+            key_bucket_col(F.col(config.key_col), config.kbuckets)
+            .alias("b")).distinct().collect()]
+    # the sidecar's schema is known: no schema-inference job
+    schema = T.StructType([T.StructField(config.key_col, key_type),
+                           T.StructField("doc_id", T.LongType()),
+                           T.StructField("kbucket", T.IntegerType())])
+    idx = (spark.read.schema(schema)
+           .option("basePath", layout.table("doc_index"))
+           .parquet(*idx_dirs)
+           .where(F.col("kbucket").isin(buckets)))
+    return (idx.join(keys, config.key_col, "left_semi")
             .select(config.key_col, "doc_id"))

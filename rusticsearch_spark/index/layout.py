@@ -33,6 +33,19 @@ from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import SparkSession
 
+from ..analysis import ANALYSIS_VERSION
+
+#: Version of the on-disk index format.  Every reader and writer opens
+#: an index through ``IndexLayout.read_config``, which refuses an index
+#: whose stamp is missing or differs ("reindex required"): one gate, so
+#: no reader carries a path for an older layout.
+#: Format 1: every committed job writes the ``term_dict`` and
+#: ``doc_index`` sidecars; nested child rows carry ``_nested_root`` and
+#: bucket with their root document; posting blocks carry
+#: ``(df_block, sum_tf)`` metadata only.  Indexes without a stamp
+#: predate it.
+INDEX_FORMAT = 1
+
 
 def qname(col: str) -> str:
     """Column reference for a field name that may contain dots.
@@ -52,6 +65,12 @@ class IndexConfig:
     ``fields`` maps field name → analyzer name (``None`` = plain
     unanalyzed string field, the reference's PlainString,
     /root/reference/src/search/schema.rs:72-78).
+
+    ``index_format`` and ``analysis_version`` are the compatibility
+    stamps: ``IndexLayout.write_config`` sets both to the running
+    code's values and ``IndexLayout.read_config`` refuses a config
+    whose stamps are missing or differ, so an index built by other
+    code is rebuilt, never read through a second code path.
     """
 
     key_col: str = "url"
@@ -86,27 +105,18 @@ class IndexConfig:
     #: internal (excluded from match_all/negation universes) and
     #: accepts `nested` queries on these paths.
     nested_paths: List[str] = field(default_factory=list)
-    #: True iff the index was built with parent-colocated bucketing
-    #: (child rows bucket by their parent's key, so every per-job
-    #: document shard is parent-complete).  Required for sharded
-    #: serving of nested-type indexes; configs persisted before the
-    #: flag existed default False and keep refusing sharded mode.
-    nested_colocated: bool = False
+    #: stamp of the on-disk format the index was BUILT with
+    #: (``INDEX_FORMAT``), checked with ``analysis_version`` by
+    #: ``IndexLayout.read_config`` — see ``INDEX_FORMAT``
+    index_format: int = INDEX_FORMAT
     #: stamp of the analysis pipeline the index was BUILT with
-    #: (analysis.ANALYSIS_VERSION).  The engine refuses to open an
-    #: index whose stamp differs from the running code's — an
-    #: analyzer behavior change silently un-matches indexed terms
-    #: from query terms otherwise.  Configs persisted before the
-    #: stamp existed default to the current version (the stamp was
-    #: introduced together with fold v2).
-    analysis_version: int = 2
+    #: (analysis.ANALYSIS_VERSION): an analyzer behavior change
+    #: silently un-matches indexed terms from query terms, so a
+    #: differing stamp also requires a reindex
+    analysis_version: int = ANALYSIS_VERSION
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, indent=1, sort_keys=True)
-
-    @staticmethod
-    def from_json(text: str) -> "IndexConfig":
-        return IndexConfig(**json.loads(text))
 
 
 def write_small_table(path: str, rows: List[dict], schema=None) -> None:
@@ -177,13 +187,28 @@ class IndexLayout:
 
     # -- config -----------------------------------------------------
     def write_config(self, config: IndexConfig) -> None:
+        """Persist ``config`` stamped with the running code's format
+        and analysis versions (the stamps are set on ``config`` too)."""
+        config.index_format = INDEX_FORMAT
+        config.analysis_version = ANALYSIS_VERSION
         os.makedirs(self.index_dir, exist_ok=True)
         with open(self.config_path, "w") as f:
             f.write(config.to_json())
 
     def read_config(self) -> IndexConfig:
+        """The index's config — the compatibility gate every reader
+        and writer opens the index through.  Raises ValueError when
+        either stamp is missing or differs from the running code's."""
         with open(self.config_path) as f:
-            return IndexConfig.from_json(f.read())
+            raw = json.load(f)
+        for name, want in (("index_format", INDEX_FORMAT),
+                           ("analysis_version", ANALYSIS_VERSION)):
+            got = raw.get(name)
+            if got != want:
+                raise ValueError(
+                    f"index at {self.index_dir} has {name} {got}, this "
+                    f"code reads {want}: reindex required")
+        return IndexConfig(**raw)
 
     # -- lineage (checkpoint/commit) ---------------------------------
     def lineage(self) -> List[dict]:

@@ -189,6 +189,7 @@ def maintenance(spark: SparkSession, index_dir: str,
     path (full compaction), the new job id (partial merge), or None
     if nothing merged."""
     layout = IndexLayout(index_dir)
+    layout.read_config()                # the format gate, merge due or not
     lineage = layout.lineage()          # the one snapshot of this call
     if not lineage:
         return None

@@ -10,9 +10,11 @@ exact-term lookup prunes to the row groups whose term min/max covers
 the probe — a few KB of IO however large the corpus — and returns
 ``(df_global, n_blocks)`` summed across jobs.
 
-This is what lets the query planner GATE block-max pruning and attach
+Every committed job writes its sidecar before it commits (the
+``IndexLayout.read_config`` format gate refuses indexes older than
+that), so this is the planner's only dictionary: it attaches
 ``df_global`` to decode plans without spending a Spark metadata job
-per query: a term query is one decode job, full stop.  A small LRU
+per query — a term query is one decode job, full stop.  A small LRU
 memoizes repeated lookups per engine snapshot (the dictionary is
 immutable per committed lineage).
 """
@@ -36,18 +38,6 @@ class TermDictReader:
                       if os.path.isdir(layout.job_dir("term_dict", j))]
         self._cache: Dict[Tuple[str, str], Tuple[int, int]] = {}
         self._fragments = None          # lazy pyarrow dataset
-
-    @staticmethod
-    def sidecar_complete(layout: IndexLayout,
-                         jobs: Optional[List[int]] = None) -> bool:
-        """True iff every committed job with postings has a term_dict
-        (a mixed legacy index must fall back to metadata-scan paths)."""
-        if jobs is None:
-            jobs = layout.completed_jobs_local()
-        return bool(jobs) and all(
-            os.path.isdir(layout.job_dir("term_dict", j))
-            for j in jobs
-            if os.path.isdir(layout.job_dir("postings", j)))
 
     def _dataset(self):
         if self._fragments is None:
@@ -160,9 +150,8 @@ class TermDictReader:
         as a Spark filter over the term_dict sidecar parquet (it is
         already a columnar table) and the driver collects ONLY the
         matched (term, field-tbucket) rows, still bounded by
-        ``max_terms``.  ``pred`` is the SQL form of the selector
-        (rlike / levenshtein — exactly the legacy-fallback predicate,
-        so dictionary↔legacy parity is preserved by construction)."""
+        ``max_terms``.  ``pred`` is the SQL form of ``match_fn`` in
+        ``selector_stats`` (rlike / levenshtein)."""
         from pyspark.sql import functions as F
         rows = (spark.read.parquet(*self.paths)
                 .where(pred)

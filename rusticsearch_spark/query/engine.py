@@ -287,14 +287,8 @@ class SearchEngine:
         self.spark = spark
         self.precision = precision
         self.layout = IndexLayout(index_dir)
+        # the format gate: a stale or unstamped index raises here
         self.config: IndexConfig = self.layout.read_config()
-        from ..analysis import ANALYSIS_VERSION
-        if self.config.analysis_version != ANALYSIS_VERSION:
-            raise ValueError(
-                f"index at {index_dir} was built with analysis pipeline "
-                f"v{self.config.analysis_version}, this code analyzes "
-                f"queries with v{ANALYSIS_VERSION}: indexed terms and "
-                f"query terms would silently mismatch — reindex required")
         if self.config.analysis_settings:
             self.registry = parse_analysis_settings(
                 self.config.analysis_settings)
@@ -320,24 +314,16 @@ class SearchEngine:
         self.docs = (spark.read.option("basePath", self.layout.table("docs"))
                      .option("mergeSchema", "true")
                      .parquet(*self.layout.committed_dirs("docs", jobs=jobs)))
-        # term-dictionary sidecar (term_dictionary.rs:78-85): present
-        # when every committed job wrote one; readers fall back to
-        # block-metadata scans otherwise (legacy indexes)
-        import os as _os
-        td_ok = all(
-            _os.path.isdir(self.layout.job_dir("term_dict", j))
-            for j in jobs
-            if _os.path.isdir(self.layout.job_dir("postings", j)))
-        # driver-side dictionary reader (the reference's in-memory
-        # TermDictionary, term_dictionary.rs:16-91): answers df /
-        # n_blocks lookups from sorted-parquet row groups WITHOUT a
-        # Spark job — decode df and _count of a term become free.
-        # Every dictionary consumer goes through this reader; no
-        # Spark-side term_dict DataFrame is held (it would only pin
-        # an unused table in executor memory in serving mode).
+        # driver-side dictionary reader over the term_dict sidecars
+        # (the reference's in-memory TermDictionary,
+        # term_dictionary.rs:16-91): answers df / n_blocks lookups
+        # from sorted-parquet row groups WITHOUT a Spark job — decode
+        # df and _count of a term become free.  Every dictionary
+        # consumer goes through this reader; no Spark-side term_dict
+        # DataFrame is held (it would only pin an unused table in
+        # executor memory in serving mode).
         from ..index.term_dict import TermDictReader
-        self.dict_reader: Optional[TermDictReader] = (
-            TermDictReader(self.layout, jobs) if td_ok and jobs else None)
+        self.dict_reader = TermDictReader(self.layout, jobs)
         if cache_postings:
             # serving mode: pin the (compressed, small relative to the
             # corpus) block table in memory across queries
@@ -360,17 +346,6 @@ class SearchEngine:
         if mode not in ("spark", "local", "sharded", "auto"):
             raise ValueError(
                 f"mode must be spark|local|sharded|auto: {mode!r}")
-        if (mode == "sharded" and self.config.nested_paths
-                and not self.config.nested_colocated):
-            # pre-colocation indexes bucketed child rows by their
-            # SYNTHETIC key, so per-job shards can split a parent
-            # from its elements — per-shard evaluation would drop
-            # matches.  Indexes built with parent-keyed bucketing
-            # stamp nested_colocated and serve sharded.
-            raise ValueError(
-                "this nested-type index predates parent-colocated "
-                "bucketing and cannot serve sharded; rebuild it, or "
-                "use mode='local', 'auto' or 'spark'")
         if mode == "auto":
             # per-SHARD bytes decide, not whole-index bytes: the
             # serving tier scales out by document shard (one build
@@ -384,9 +359,7 @@ class SearchEngine:
                 self.LAZY_BYTES_FACTOR if serving_lazy else 1)
             if total <= cutoff:
                 mode = "local"
-            elif per_job and max(per_job.values()) <= cutoff \
-                    and (not self.config.nested_paths
-                         or self.config.nested_colocated):
+            elif per_job and max(per_job.values()) <= cutoff:
                 mode = "sharded"
             else:
                 mode = "spark"
@@ -579,13 +552,8 @@ class SearchEngine:
         if isinstance(q, dsl.Term) and self.deletions is None:
             if self._is_nested_field(q.field):
                 return 0     # flat query on a nested field: no parent
-            if self.dict_reader is not None:
-                # dictionary lookup: zero Spark jobs for a term count
-                return self.dict_reader.lookup_one(q.field, q.term)[0]
-            # metadata-only: Σ df_block, no posting decode at all
-            r = self._term_blocks(q.field, q.term) \
-                .agg(F.sum("df_block")).collect()[0][0]
-            return int(r or 0)
+            # dictionary lookup: zero Spark jobs for a term count
+            return self.dict_reader.lookup_one(q.field, q.term)[0]
         ds = self._docset(q)
         if isinstance(ds, str):
             if ds == NONE:
@@ -641,12 +609,10 @@ class SearchEngine:
         `Scan ExistingRDD` + `BroadcastExchange` under every fused
         plan).
 
-        df_global comes from the driver-side term dictionary when the
-        sidecar exists — a zero-job read (the same source the zero-job
-        `_count` already trusts; the sidecar is maintained through
-        merges, `tests/test_term_dict.py`).  The legacy fallback
-        aggregates df_block in-plan, which costs a full block-metadata
-        scan plus an aggregate-broadcast exchange PER QUERY."""
+        df_global comes from the driver-side term dictionary — a
+        zero-job read (the same source the zero-job `_count` trusts;
+        the sidecar is maintained through merges,
+        `tests/test_term_dict.py`)."""
         tb = self.config.tbuckets
         blocks = self.postings.where(
             F.col("tbucket").isin(
@@ -674,21 +640,16 @@ class SearchEngine:
                   .withColumn("boost", F.element_at(boosts, idx))
                   .withColumn("total_docs", F.element_at(tds, idx))
                   .withColumn("total_tokens", F.element_at(tts, idx)))
-        if self.dict_reader is not None:
-            # A lookup miss yields df 0, which is safe by construction:
-            # the sidecar is derived from the same committed postings
-            # this frame scans (td_ok gates the reader on per-job
-            # completeness), so a missing (field, term) has no block
-            # rows either — df 0 never reaches a scored posting
-            looked = self.dict_reader.lookup(
-                [(c.field, c.term) for c in children])
-            dfs = F.array(*[
-                F.lit(int(looked.get((c.field, c.term), (0, 0))[0]))
-                .cast("long") for c in children])
-            return blocks.withColumn("df_global", F.element_at(dfs, idx))
-        dfagg = blocks.groupBy("field", "term").agg(
-            F.sum("df_block").cast("long").alias("df_global"))
-        return blocks.join(F.broadcast(dfagg), ["field", "term"])
+        # A lookup miss yields df 0, which is safe by construction: the
+        # sidecar is derived from the same committed postings this
+        # frame scans, so a missing (field, term) has no block rows
+        # either — df 0 never reaches a scored posting
+        looked = self.dict_reader.lookup(
+            [(c.field, c.term) for c in children])
+        dfs = F.array(*[
+            F.lit(int(looked.get((c.field, c.term), (0, 0))[0]))
+            .cast("long") for c in children])
+        return blocks.withColumn("df_global", F.element_at(dfs, idx))
 
     # ---------------------------------------------------------------
     # term-level scoring
@@ -725,13 +686,10 @@ class SearchEngine:
             return self._decode(
                 blocks.withColumn("df_global", F.lit(0).cast("long")),
                 field, scorer.similarity, scorer.boost, False)
-        if self.dict_reader is not None:
-            dfg, _ = self.dict_reader.lookup_one(field, term)
-            return self._decode(
-                blocks.withColumn("df_global", F.lit(dfg).cast("long")),
-                field, scorer.similarity, scorer.boost, True)
-        return self._decode(self._with_global_df(blocks), field,
-                            scorer.similarity, scorer.boost, needs_score)
+        dfg, _ = self.dict_reader.lookup_one(field, term)
+        return self._decode(
+            blocks.withColumn("df_global", F.lit(dfg).cast("long")),
+            field, scorer.similarity, scorer.boost, True)
 
     def _score_prefix(self, q: dsl.Prefix,
                       needs_score: bool = True) -> DataFrame:
@@ -742,42 +700,26 @@ class SearchEngine:
         term dictionary — across every field, because the reference's
         dictionary is index-wide (term_dictionary.rs:78-85 select):
         a term matching the prefix only in another field still pushes
-        a TermScorer that contributes 0 to every doc.  The divisor is
-        a broadcast 1-row crossJoin, not a driver-side count() — one
-        Spark job per prefix query, not two.
+        a TermScorer that contributes 0 to every doc.
 
-        With the term-dictionary sidecar the prefix enumerates from
-        the small range-sorted dictionary (term_dictionary.rs:78-85),
-        and the postings scan prunes to ONLY the tbucket partitions
-        that hold matching terms (a prefix cannot prune the hash
-        buckets by itself; the dictionary's ≤tbuckets-row distinct
-        makes it possible).  Legacy indexes fall back to the full
-        block-metadata scan."""
+        The prefix enumerates from the driver-side, range-sorted
+        dictionary slice (the reference enumerates its in-memory
+        dictionary the same way): the divisor becomes a literal, the
+        postings scan prunes to ONLY the tbucket partitions holding
+        matching terms (a prefix cannot prune the hash buckets by
+        itself), and the query field's per-term df rides the same
+        read — ONE Spark job per prefix query, no in-plan df
+        aggregate."""
+        nt, tbs, dfmap = self.dict_reader.prefix_stats_df(q.prefix,
+                                                          q.field)
+        if not nt:
+            return self.spark.createDataFrame([], schema=_SCORE_SCHEMA)
         blocks = self.postings.where(
             (F.col("field") == q.field)
-            & (F.col("term").startswith(q.prefix)))
-        nt_lit: Optional[int] = None
-        dfmap: Optional[Dict[str, int]] = None
-        if self.dict_reader is not None:
-            # driver-side dictionary slice (the reference enumerates
-            # its in-memory dictionary the same way): the divisor
-            # becomes a literal, the postings scan prunes to only the
-            # tbucket partitions holding matching terms, and the query
-            # field's per-term df rides the same read — ONE Spark job
-            # per prefix query, no in-plan df aggregate
-            nt_lit, tbs, dfmap = self.dict_reader.prefix_stats_df(
-                q.prefix, q.field)
-            if not nt_lit:
-                return self.spark.createDataFrame([], schema=_SCORE_SCHEMA)
-            blocks = blocks.where(F.col("tbucket").isin(tbs))
-        nt_frame = None
-        if nt_lit is None:
-            nt_frame = (self.postings
-                        .where(F.col("term").startswith(q.prefix))
-                        .agg(F.countDistinct("term").alias("_nt")))
-        return self._multiterm_avg(blocks, q.field, q.scorer,
-                                   nt_lit, nt_frame, needs_score,
-                                   dfmap=dfmap)
+            & (F.col("term").startswith(q.prefix))
+            & F.col("tbucket").isin(tbs))
+        return self._multiterm_avg(blocks, q.field, q.scorer, nt,
+                                   needs_score, dfmap)
 
     #: a per-term df literal map attaches in-plan up to this many
     #: matched terms; past it the plan falls back to the in-plan df
@@ -786,25 +728,21 @@ class SearchEngine:
     DICT_DF_LITERAL_MAX = 1024
 
     def _multiterm_avg(self, blocks: DataFrame, field: str,
-                       scorer: dsl.TermScorer, nt_lit: Optional[int],
-                       nt_frame: Optional[DataFrame],
-                       needs_score: bool,
-                       dfmap: Optional[Dict[str, int]] = None
+                       scorer: dsl.TermScorer, nt: int,
+                       needs_score: bool, dfmap: Dict[str, int]
                        ) -> DataFrame:
         """Shared MultiTerm tail (score_function.rs:61-79): decode the
-        selected blocks, per-doc Avg over the GLOBAL dictionary's
-        matching-term count — a literal when the driver-side
-        dictionary supplied it (zero extra jobs), else a broadcast
-        1-row crossJoin.  ``dfmap`` (term → global df, from the same
-        dictionary read) attaches df as a literal map column, removing
-        the per-query in-plan df aggregate — an Exchange, a
+        selected blocks, then a per-doc Avg over ``nt``, the GLOBAL
+        dictionary's matching-term count (a literal: zero extra
+        jobs).  ``dfmap`` (term → global df, from the same dictionary
+        read) attaches df as a literal map column, removing the
+        per-query in-plan df aggregate — an Exchange, a
         BroadcastExchange and a second scan of the pruned blocks
         (guide §2.4); score-elided paths never need df at all."""
         if not needs_score:
             withdf = blocks.withColumn("df_global",
                                        F.lit(0).cast("long"))
-        elif (dfmap is not None
-                and len(dfmap) <= self.DICT_DF_LITERAL_MAX):
+        elif len(dfmap) <= self.DICT_DF_LITERAL_MAX:
             if not dfmap:
                 return self.spark.createDataFrame([], schema=_SCORE_SCHEMA)
             df_col = F.create_map(
@@ -820,14 +758,8 @@ class SearchEngine:
             return per_term.select("doc_id").distinct() \
                 .withColumn("score", F.lit(0.0))
         grouped = per_term.groupBy("doc_id").agg(F.sum("score").alias("_s"))
-        if nt_lit is not None:
-            return grouped.select(
-                "doc_id",
-                (F.col("_s") / F.lit(float(nt_lit))).alias("score"))
-        return (grouped.crossJoin(F.broadcast(nt_frame))
-                .select("doc_id",
-                        (F.col("_s") / F.col("_nt").cast("double"))
-                        .alias("score")))
+        return grouped.select(
+            "doc_id", (F.col("_s") / F.lit(float(nt))).alias("score"))
 
     def _score_selector(self, q, needs_score: bool = True) -> DataFrame:
         """MultiTerm with a wildcard or Levenshtein selector — the
@@ -835,13 +767,13 @@ class SearchEngine:
         (multi_term_selector.rs:3-16), scored with the identical
         Avg-over-global-dictionary semantics as Prefix.
 
-        With the dictionary sidecar, matching terms are enumerated ON
-        THE DRIVER from the range-sorted dictionary slice (bounded by
-        the dictionary, never postings — term_dict.selector_stats),
-        the divisor becomes a literal, and the postings scan prunes to
-        the matched terms' tbucket partitions: one Spark job, same as
-        prefix.  Legacy indexes fall back to a Spark-side rlike /
-        levenshtein block filter plus a countDistinct divisor."""
+        Matching terms are enumerated from the dictionary sidecar
+        (bounded by the dictionary, never postings): ON THE DRIVER
+        over the range-sorted slice when the selector has a literal
+        prefix (term_dict.selector_stats), else as a Spark filter over
+        the sidecar (selector_stats_spark).  The divisor becomes a
+        literal and the postings scan prunes to the matched terms'
+        tbucket partitions: one Spark job, same as prefix."""
         import re
         if isinstance(q, (dsl.Wildcard, dsl.Regexp)):
             if isinstance(q, dsl.Wildcard):
@@ -873,34 +805,24 @@ class SearchEngine:
             pred = (F.length(F.col("term"))
                     .between(len(qt) - fz, len(qt) + fz)
                     & (F.levenshtein(F.col("term"), F.lit(qt)) <= fz))
-            if hint:
-                pred = F.col("term").startswith(hint) & pred
-        if self.dict_reader is not None:
-            if hint:
-                # anchored: range-pruned driver-side dictionary slice
-                n, terms, tbs, dfmap = self.dict_reader.selector_stats(
-                    q.field, match_fn, hint)
-            else:
-                # unanchored: the predicate runs as a Spark filter
-                # over the term_dict sidecar — the driver receives
-                # only MATCHED terms, never the full dictionary
-                n, terms, tbs, dfmap = \
-                    self.dict_reader.selector_stats_spark(
-                        self.spark, q.field, pred)
-            if not n or not terms:
-                return self.spark.createDataFrame([], schema=_SCORE_SCHEMA)
-            blocks = self.postings.where(
-                (F.col("field") == q.field)
-                & F.col("tbucket").isin(tbs)
-                & F.col("term").isin(terms))
-            return self._multiterm_avg(blocks, q.field, q.scorer,
-                                       n, None, needs_score,
-                                       dfmap=dfmap)
-        blocks = self.postings.where((F.col("field") == q.field) & pred)
-        nt = self.postings.where(pred).agg(
-            F.countDistinct("term").alias("_nt"))
-        return self._multiterm_avg(blocks, q.field, q.scorer,
-                                   None, nt, needs_score)
+        if hint:
+            # anchored: range-pruned driver-side dictionary slice
+            n, terms, tbs, dfmap = self.dict_reader.selector_stats(
+                q.field, match_fn, hint)
+        else:
+            # unanchored: the predicate runs as a Spark filter over the
+            # term_dict sidecar — the driver receives only MATCHED
+            # terms, never the full dictionary
+            n, terms, tbs, dfmap = self.dict_reader.selector_stats_spark(
+                self.spark, q.field, pred)
+        if not n or not terms:
+            return self.spark.createDataFrame([], schema=_SCORE_SCHEMA)
+        blocks = self.postings.where(
+            (F.col("field") == q.field)
+            & F.col("tbucket").isin(tbs)
+            & F.col("term").isin(terms))
+        return self._multiterm_avg(blocks, q.field, q.scorer, n,
+                                   needs_score, dfmap)
 
     def _score_nested(self, q: dsl.Nested,
                       needs_score: bool = True) -> DataFrame:
@@ -1024,8 +946,7 @@ class SearchEngine:
         """Per-ROOT-document top matching child rows of one nested
         query (the ES ``inner_hits`` feature — beyond the reference's
         API surface).  Children are grouped by their root ancestor
-        (`_nested_root`; equal to `_nested_parent` on pre-multilevel
-        indexes), restricted to the page's root keys (a tiny isin
+        (`_nested_root`), restricted to the page's root keys (a tiny isin
         filter), ranked (score desc, doc_id asc) per root, and
         collected — the result is bounded by len(root_keys) × size.
         With score_mode "none" the inner query is unscored; children
@@ -1037,8 +958,6 @@ class SearchEngine:
         _, child = self._nested_child_scores(
             node, node.score_mode != "none")
         kq = F.col(qname(self.config.key_col)).cast("string")
-        rc = ("_nested_root" if "_nested_root" in self.docs.columns
-              else "_nested_parent")
         subcols = [c for c in dict.fromkeys(
             list(self.config.fields) + self.config.stored)
             if c.startswith(node.path + ".")]
@@ -1046,9 +965,9 @@ class SearchEngine:
             F.col("_nested_parent").isNotNull()
             & kq.startswith(F.concat(F.col("_nested_parent"),
                                      F.lit(f"#{node.path}#"))))
-            .where(F.col(rc).isin([str(k) for k in root_keys]))
+            .where(F.col("_nested_root").isin([str(k) for k in root_keys]))
             .select("doc_id", kq.alias("_ckey"),
-                    F.col(rc).alias("_root"),
+                    F.col("_nested_root").alias("_root"),
                     *[F.col(qname(c)).alias(c) for c in subcols]))
         w = Window.partitionBy("_root").orderBy(F.desc("score"),
                                                 F.asc("doc_id"))
@@ -1077,12 +996,10 @@ class SearchEngine:
         if isinstance(q, dsl.Term):
             out = self._score_term(q.field, q.term, q.scorer,
                                    needs_score=False).select("doc_id")
-            if self.dict_reader is not None:
-                # exact cardinality from the dictionary (free) — lets
-                # the set-algebra joins pick their strategy on real
-                # numbers instead of Spark's blind estimate
-                out._rsx_rows = self.dict_reader.lookup_one(
-                    q.field, q.term)[0]
+            # exact cardinality from the dictionary (free) — lets the
+            # set-algebra joins pick their strategy on real numbers
+            # instead of Spark's blind estimate
+            out._rsx_rows = self.dict_reader.lookup_one(q.field, q.term)[0]
             return out
         if isinstance(q, dsl.Prefix):
             return self._score_prefix(q, needs_score=False) \

@@ -235,19 +235,9 @@ class LocalSearcher:
         self._nested_context: Optional[str] = None
         self._docs_dirs = docs_dirs    # for lazy nested-meta reads
         if self.config.nested_paths and docs_dirs:
-            if jobs is not None and not self.config.nested_colocated:
-                # pre-colocation indexes bucketed child rows by their
-                # SYNTHETIC key, so a per-job document shard can split
-                # a parent from its elements — per-shard evaluation
-                # would silently drop nested matches.  Indexes built
-                # with parent-keyed bucketing stamp nested_colocated
-                # and serve sharded (parent + all children share a
-                # job; the pid-None safety skip below never fires).
-                raise ValueError(
-                    "this nested-type index predates parent-colocated "
-                    "bucketing; rebuild it to serve job-restricted "
-                    "shards, or use the whole-index LocalSearcher / "
-                    "mode='spark'")
+            # a job's document shard is parent-complete (children
+            # bucket with their root), so a job-restricted searcher
+            # evaluates nested queries exactly
             key_c = self.config.key_col
             dtbl = pa.concat_tables([
                 pq.read_table(d, columns=["doc_id", key_c,
@@ -765,25 +755,20 @@ def load_global_dict(index_dir: str
                      ) -> Tuple[List[str], Dict[Tuple[str, str], int]]:
     """(distinct terms across all fields, (field, term) → global df)
     from the term_dict sidecars — a narrow columnar read, small next
-    to postings.  Falls back to the postings block metadata for
-    legacy indexes.  These are the two score inputs that must stay
+    to postings.  These are the two score inputs that must stay
     index-wide when serving is document-sharded."""
     layout = IndexLayout(index_dir)
     dirs = layout.committed_dirs("term_dict")
-    df_col = "df"
-    if not dirs:
-        dirs = layout.committed_dirs("postings")
-        df_col = "df_block"
     if not dirs:
         return [], {}
     tbl = pa.concat_tables([
-        pq.read_table(d, columns=["field", "term", df_col])
+        pq.read_table(d, columns=["field", "term", "df"])
         for d in dirs])
     df_map: Dict[Tuple[str, str], int] = {}
     terms = set()
     for f, t, d in zip(tbl.column("field").to_pylist(),
                        tbl.column("term").to_pylist(),
-                       tbl.column(df_col).to_pylist()):
+                       tbl.column("df").to_pylist()):
         terms.add(t)
         k = (f, t)
         df_map[k] = df_map.get(k, 0) + int(d)

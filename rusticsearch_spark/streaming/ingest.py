@@ -47,10 +47,6 @@ class StreamingIngester:
             self.config = self.layout.read_config()
         except FileNotFoundError:
             self.config = config or IndexConfig()
-            if self.config.nested_paths:
-                # same parent-keyed bucketing as build_index: each
-                # streamed batch's jobs are parent-complete shards
-                self.config.nested_colocated = True
             self.layout.write_config(self.config)
         self.registry = _registry(self.config)
         self.n_buckets_per_batch = n_buckets_per_batch

@@ -133,23 +133,34 @@ def test_streaming_upsert_scans_only_matching_buckets(
 
 
 def test_legacy_index_without_sidecar_falls_back(spark, webtext, tmp_path):
-    """An index whose jobs predate the sidecar must still resolve keys
-    (full docs scan fallback) — correctness never depends on it."""
+    """An index without a format stamp predates the sidecars, and no
+    reader keeps a path for it: ``read_config``, the engine and the
+    key-resolving delete all refuse it with a reindex error, before
+    any read or write."""
+    import json
     import shutil
     from rusticsearch_spark.index.build import build_index
-    from rusticsearch_spark.index.doc_index import resolve_keys
+    from rusticsearch_spark.index.delete import delete_documents
     from rusticsearch_spark.index.layout import IndexLayout
+    from rusticsearch_spark.query.engine import SearchEngine
     path = str(tmp_path / "di_legacy")
     build_index(spark, webtext.limit(30), path, _cfg(), jobs=1)
     layout = IndexLayout(path)
-    cfg = layout.read_config()
     for j in layout.completed_jobs(spark):
         shutil.rmtree(layout.job_dir("doc_index", j))
+    with open(layout.config_path) as f:
+        raw = json.load(f)
+    del raw["index_format"]
+    with open(layout.config_path, "w") as f:
+        json.dump(raw, f)
     victim = webtext.select("url").first().url
-    rows = resolve_keys(
-        spark, layout, cfg,
-        spark.createDataFrame([(victim,)], "url string")).collect()
-    assert len(rows) == 1 and rows[0].url == victim
+    with pytest.raises(ValueError, match="reindex"):
+        layout.read_config()
+    with pytest.raises(ValueError, match="reindex"):
+        SearchEngine(spark, path)
+    with pytest.raises(ValueError, match="reindex"):
+        delete_documents(spark, path, keys=[victim])
+    assert layout.deletion_dirs() == []
 
 
 def test_delete_by_key_uses_sidecar(spark, webtext, tmp_path):

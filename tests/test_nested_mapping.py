@@ -279,16 +279,17 @@ def test_nested_local_serving_matches_spark(spark, nested_type_cluster):
 
 def test_nested_serving_modes(spark, nested_type_cluster, tmp_path):
     """local/auto/sharded all serve freshly-built nested indexes
-    (parent-colocated bucketing stamps nested_colocated); an index
-    whose config predates the flag still refuses sharded — its
-    children may shard away from their parents."""
+    (children bucket with their parent, so every job's shard is
+    parent-complete); a copy stamped with an older index format is
+    refused in every mode — its children may shard away from their
+    parents, and no reader keeps a path for it."""
+    import json
     import shutil
 
-    from rusticsearch_spark.index.layout import IndexLayout
+    from rusticsearch_spark.index.layout import INDEX_FORMAT, IndexLayout
     from rusticsearch_spark.query.engine import SearchEngine
     from rusticsearch_spark.query.local import LocalSearcher
     idx = nested_type_cluster._dir("docs")
-    assert IndexLayout(idx).read_config().nested_colocated
     eng = SearchEngine(spark, idx, mode="auto")
     assert eng.mode == "local"        # tiny artifact → driver tier
     q = {"nested": {"path": "comments", "query": {"and": [
@@ -300,18 +301,19 @@ def test_nested_serving_modes(spark, nested_type_cluster, tmp_path):
     assert {r.doc_id for r in eng.search(q, size=10).collect()} == want
     sh = SearchEngine(spark, idx, mode="sharded")
     assert {r.doc_id for r in sh.search(q, size=10).collect()} == want
-    # legacy config (no colocation stamp) keeps the refusal
     legacy = str(tmp_path / "legacy")
     shutil.copytree(idx, legacy)
     lay = IndexLayout(legacy)
-    cfg = lay.read_config()
-    cfg.nested_colocated = False
-    lay.write_config(cfg)
-    with pytest.raises(ValueError, match="predates"):
-        SearchEngine(spark, legacy, mode="sharded")
-    with pytest.raises(ValueError, match="predates"):
+    with open(lay.config_path) as f:
+        raw = json.load(f)
+    raw["index_format"] = INDEX_FORMAT - 1
+    with open(lay.config_path, "w") as f:
+        json.dump(raw, f)
+    for mode in ("spark", "local", "sharded", "auto"):
+        with pytest.raises(ValueError, match="reindex"):
+            SearchEngine(spark, legacy, mode=mode)
+    with pytest.raises(ValueError, match="reindex"):
         LocalSearcher(legacy, jobs=[0])
-    assert SearchEngine(spark, legacy, mode="auto").mode == "local"
 
 
 @pytest.fixture(scope="module")
@@ -346,7 +348,6 @@ def test_nested_shards_are_parent_complete(nested_multijob_index):
 
     from rusticsearch_spark.index.layout import IndexLayout
     lay = IndexLayout(nested_multijob_index)
-    assert lay.read_config().nested_colocated
     jobs = lay.completed_jobs_local()
     assert len(jobs) == 3
     jobs_with_children = 0

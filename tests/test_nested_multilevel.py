@@ -276,7 +276,6 @@ def test_deep_sharded_matches_local(spark, deep_cluster):
                                                 ShardedSearcher)
     idx = deep_cluster._dir("docs")
     lay = IndexLayout(idx)
-    assert lay.read_config().nested_colocated
     for j in lay.completed_jobs_local():
         t = pq.read_table(lay.job_dir("docs", j),
                           columns=["url", "_nested_root"])
@@ -539,9 +538,9 @@ def test_duplicate_inner_hits_names_rejected(deep_cluster):
 
 def test_nested_config_without_ancestry_columns_rejected(
         spark, tmp_path):
-    """A nested-configured build whose docs frame lacks the ancestry
-    columns would stamp nested_colocated while bucketing children by
-    the wrong key — it must fail fast instead."""
+    """A nested-configured build whose docs frame lacks the
+    ``_nested_root`` column would bucket children by the wrong key
+    (splitting documents across shards) — it must fail fast instead."""
     from rusticsearch_spark.index.build import build_index
     from rusticsearch_spark.index.layout import IndexConfig
     df = spark.createDataFrame([("u1", "hello")], "url string, text string")

@@ -54,8 +54,6 @@ def test_posting_blocks_bounded_by_segment(spark, index_dir):
         assert len(doc_ids) == b.df_block == len(tfs) == len(lens)
         assert (doc_ids >> SEGMENT_BITS == b.segment).all()
         assert (np.diff(doc_ids) > 0).all()          # sorted unique
-        assert tfs.max() == b.max_tf
-        assert lens.min() == b.min_len
         assert tfs.sum() == b.sum_tf
 
 

@@ -5,8 +5,10 @@ The reference DECLARES these selectors and implements only Prefix
 they reuse the MultiTerm Avg machinery with terms enumerated from
 the driver-side dictionary sidecar.  Contracts tested:
 
-* the dictionary path equals the legacy Spark-side fallback
-  (rlike / levenshtein over block metadata) exactly;
+* the Spark lane (driver-side dictionary slice, or the distributed
+  term_dict filter for unanchored selectors) matches the same docs
+  with the same f32 scores as the driver-local LocalSearcher, which
+  enumerates its own in-memory dictionary;
 * `editdist_leq` agrees with Spark's `F.levenshtein` (which is the
   DuckDB oracle's function too) on a generated sample;
 * enumeration is bounded: `selector_stats` raises past max_terms;
@@ -15,6 +17,7 @@ the driver-side dictionary sidecar.  Contracts tested:
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,33 +47,34 @@ def test_editdist_agrees_with_spark_levenshtein(spark):
             assert editdist_leq(r.a, r.b, k) == (r.d <= k), (r.a, r.b, k)
 
 
-def test_wildcard_dictionary_path_matches_legacy(engine):
-    q = {"wildcard": {"text": "s*a*"}}
-    assert engine.dict_reader is not None
-    a = sorted((r.doc_id, round(r.score, 5)) for r in
-               engine.search(q, size=500).collect())
-    bak = engine.dict_reader
-    engine.dict_reader = None
-    try:
-        b = sorted((r.doc_id, round(r.score, 5)) for r in
-                   engine.search(q, size=500).collect())
-    finally:
-        engine.dict_reader = bak
-    assert a == b and len(a) > 0
+@pytest.fixture(scope="module")
+def local(index_dir):
+    from rusticsearch_spark.query.local import LocalSearcher
+    return LocalSearcher(index_dir)
 
 
-def test_fuzzy_dictionary_path_matches_legacy(engine):
-    q = {"fuzzy": {"text": {"value": "part", "fuzziness": 2}}}
-    a = sorted((r.doc_id, round(r.score, 5)) for r in
-               engine.search(q, size=500).collect())
-    bak = engine.dict_reader
-    engine.dict_reader = None
-    try:
-        b = sorted((r.doc_id, round(r.score, 5)) for r in
-                   engine.search(q, size=500).collect())
-    finally:
-        engine.dict_reader = bak
-    assert a == b and len(a) > 0
+def _assert_matches_local(engine, local, q):
+    """Spark lane == LocalSearcher over every matching doc: same doc
+    ids, same f32 scores (the two lanes sum a doc's per-term scores
+    in different orders, hence the tolerance)."""
+    got = {r.doc_id: r.score
+           for r in engine.search(q, size=500).collect()}
+    want = dict(local.search(q, size=500))
+    assert sorted(got) == sorted(want) and len(got) > 0
+    ids = sorted(got)
+    np.testing.assert_allclose([got[d] for d in ids],
+                               [want[d] for d in ids],
+                               rtol=2e-6, atol=1e-7)
+
+
+def test_wildcard_dictionary_path_matches_legacy(engine, local):
+    _assert_matches_local(engine, local, {"wildcard": {"text": "s*a*"}})
+
+
+def test_fuzzy_dictionary_path_matches_legacy(engine, local):
+    _assert_matches_local(
+        engine, local,
+        {"fuzzy": {"text": {"value": "part", "fuzziness": 2}}})
 
 
 def test_fuzzy_zero_edits_equals_term_docset(engine):
@@ -130,21 +134,11 @@ def test_regex_literal_prefix():
     assert regex_literal_prefix("ab{2}") == "a"
 
 
-def test_regexp_dictionary_path_matches_legacy(engine):
-    q = {"regexp": {"text": "m[ae]r.*"}}
-    a = sorted((r.doc_id, round(r.score, 5)) for r in
-               engine.search(q, size=500).collect())
-    bak = engine.dict_reader
-    engine.dict_reader = None
-    try:
-        b = sorted((r.doc_id, round(r.score, 5)) for r in
-                   engine.search(q, size=500).collect())
-    finally:
-        engine.dict_reader = bak
-    assert a == b and len(a) > 0
+def test_regexp_dictionary_path_matches_legacy(engine, local):
+    _assert_matches_local(engine, local, {"regexp": {"text": "m[ae]r.*"}})
 
 
-def test_unanchored_wildcard_distributes_enumeration(engine):
+def test_unanchored_wildcard_distributes_enumeration(engine, local):
     """A leading-* wildcard must route through selector_stats_spark
     (the distributed term_dict filter) — never the full-dictionary
     driver scan — and the driver must receive only matched terms."""
@@ -164,9 +158,7 @@ def test_unanchored_wildcard_distributes_enumeration(engine):
     type(engine.dict_reader).selector_stats = spy_driver
     type(engine.dict_reader).selector_stats_spark = spy_spark
     try:
-        a = sorted((r.doc_id, round(r.score, 5)) for r in
-                   engine.search({"wildcard": {"text": "*ark"}},
-                                 size=500).collect())
+        _assert_matches_local(engine, local, {"wildcard": {"text": "*ark"}})
     finally:
         type(engine.dict_reader).selector_stats = bak_driver
         type(engine.dict_reader).selector_stats_spark = bak_spark
@@ -176,15 +168,6 @@ def test_unanchored_wildcard_distributes_enumeration(engine):
     # down, the driver never saw a non-matching dictionary row
     assert n == len(terms) > 0
     assert all(t.endswith("ark") for t in terms)
-    bak = engine.dict_reader
-    engine.dict_reader = None
-    try:
-        b = sorted((r.doc_id, round(r.score, 5)) for r in
-                   engine.search({"wildcard": {"text": "*ark"}},
-                                 size=500).collect())
-    finally:
-        engine.dict_reader = bak
-    assert a == b and len(a) > 0
 
 
 def test_anchored_wildcard_keeps_driver_path(engine):
