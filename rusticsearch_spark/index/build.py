@@ -39,8 +39,6 @@ skips committed jobs (the anti-join is on the lineage table).
 
 from __future__ import annotations
 
-import os
-import sys
 import time
 from typing import Dict, List, NamedTuple, Optional, Tuple
 
@@ -516,22 +514,6 @@ class WrittenDocs(NamedTuple):
     doc_counts: Dict[str, int]
 
 
-def _stage_timer(job: int):
-    """``SPARK_GRAFT_TIMING=1``: per-step wall times of a job on
-    stderr."""
-    if not os.environ.get("SPARK_GRAFT_TIMING"):
-        return lambda step: None
-    last = [time.monotonic()]
-
-    def _trace(step: str) -> None:
-        now = time.monotonic()
-        print(f"[build-trace] job={job} {step}: {now - last[0]:.1f}s",
-              file=sys.stderr, flush=True)
-        last[0] = now
-
-    return _trace
-
-
 def doc_columns(ids: DataFrame, config: IndexConfig) -> DataFrame:
     """The docs-table projection of an id-assigned frame: doc_id, the
     key, every indexed field and every stored column."""
@@ -579,8 +561,6 @@ def write_postings(spark: SparkSession, rows: DataFrame, docs: DataFrame,
     Returns ``(n_blocks, total_tokens per field)``."""
     shuffle_p = (config.shuffle_partitions
                  or int(spark.conf.get("spark.sql.shuffle.partitions")))
-    _trace = _stage_timer(job)
-
     # PK sidecar: (key, doc_id) bucketed by a global key hash, so
     # upsert/delete point lookups prune to corpus/kbuckets instead of
     # scanning every docs dir (document_index.rs:16-91 analogue).  It
@@ -635,7 +615,6 @@ def write_postings(spark: SparkSession, rows: DataFrame, docs: DataFrame,
                      schema=POSTINGS_SCHEMA)
          .write.mode("overwrite").partitionBy("tbucket")
          .parquet(layout.job_dir("postings", job)))
-        _trace("postings_write")
 
         # term-dictionary sidecar (term_dictionary.rs:78-85 analogue):
         # one narrow agg of the job's block metadata → (field, term,
@@ -661,7 +640,6 @@ def write_postings(spark: SparkSession, rows: DataFrame, docs: DataFrame,
                   *[F.sum(F.when(F.col("field") == f, F.col("sum_tf")))
                     .alias(a) for f, a in tok_alias.items()])
          .write.mode("overwrite").parquet(layout.job_dir("term_dict", job)))
-        _trace("term_dict")
     except BaseException:
         # the sidecar thread must not outlive a failed stage (an
         # orphan writer would race the retry's clear_incomplete_job);
@@ -672,7 +650,6 @@ def write_postings(spark: SparkSession, rows: DataFrame, docs: DataFrame,
             pass
         raise
     _join_sidecar()            # doc_index must be on disk pre-commit
-    _trace("doc_index_join")
     tok_m = tok_obs.get
     return (int(tok_m["__n_blocks"] or 0),
             {f: int(tok_m[a] or 0) for f, a in tok_alias.items()})
@@ -710,10 +687,8 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
     ``write_postings``' three."""
     layout.clear_incomplete_job(job)
     t0 = time.monotonic()
-    trace = _stage_timer(job)
     written = write_docs(spark, doc_columns(ids, config), layout, config,
                          job)
-    trace("docs_write")
     rows = _posting_rows(written.docs, config, registry,
                          precount=config.precount)
     return finish_job(spark, rows, written, layout, config, job, t0, extra)

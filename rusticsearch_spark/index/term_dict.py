@@ -41,13 +41,24 @@ class TermDictReader:
 
     def _dataset(self):
         if self._fragments is None:
+            import pyarrow as pa
             import pyarrow.dataset as ds
-            # a list of DIRECTORY paths needs a union of per-dir
-            # datasets (pyarrow only unions file paths directly)
-            parts = [ds.dataset(p, format="parquet")
-                     for p in self.paths]
-            self._fragments = (ds.dataset(parts) if len(parts) != 1
-                               else parts[0])
+            if not self.paths:
+                # no committed job wrote a dictionary (every job an
+                # empty streaming batch): an empty one
+                self._fragments = ds.dataset(pa.table(
+                    {"field": pa.array([], pa.string()),
+                     "term": pa.array([], pa.string()),
+                     "tbucket": pa.array([], pa.int32()),
+                     "df": pa.array([], pa.int64()),
+                     "n_blocks": pa.array([], pa.int32())}))
+            else:
+                # a list of DIRECTORY paths needs a union of per-dir
+                # datasets (pyarrow only unions file paths directly)
+                parts = [ds.dataset(p, format="parquet")
+                         for p in self.paths]
+                self._fragments = (ds.dataset(parts) if len(parts) != 1
+                                   else parts[0])
         return self._fragments
 
     def lookup(self, pairs: List[Tuple[str, str]]
@@ -153,6 +164,8 @@ class TermDictReader:
         ``max_terms``.  ``pred`` is the SQL form of ``match_fn`` in
         ``selector_stats`` (rlike / levenshtein)."""
         from pyspark.sql import functions as F
+        if not self.paths:
+            return 0, [], [], {}
         rows = (spark.read.parquet(*self.paths)
                 .where(pred)
                 .groupBy("term")

@@ -11,7 +11,12 @@ replacing the reference's two postfix stack machines
   materializes the universe, the negation-pushdown effect);
 * the **score VM** becomes per-term f32 scoring inside an
   Arrow-batched decode UDF plus groupBy-level combinators
-  (avg over child *count*, max — score_function.rs:21-38,74-88);
+  (avg over child *count*, max — score_function.rs:21-38,74-88).
+  A tree of and/or/dis_max/filter/exclude nodes over plain Term
+  leaves (``_term_tree``) runs as ONE decode job of every leaf and
+  ONE groupBy(doc_id), each node a Column expression over it
+  (``_fused_tree``); any other tree recurses through the generic
+  per-child frames and joins;
 * the per-segment loop + TopScoreCollector become partition-parallel
   scans + ``ORDER BY score DESC, doc_id LIMIT k``
   (TakeOrderedAndProject), with doc_id as the deterministic
@@ -30,7 +35,8 @@ differ from the reference by f32-accumulation order at ~1e-7 relative
 
 from __future__ import annotations
 
-from functools import cached_property
+import operator
+from functools import cached_property, reduce
 from typing import Dict, Iterator, List, Optional, Tuple, Union
 
 import numpy as np
@@ -145,23 +151,41 @@ def _batch_decode(rb, docs_only: bool = False):
                                 tf_buf, tf_off, len_buf, len_off)
 
 
+def _term_scores(tfs, lens, dfg, total_docs: int, total_tokens: int,
+                 similarity: str, boost: float, precision: str):
+    """Per-posting float64 scores of one term's postings.  precision
+    "f32" matches the Rust reference's math (similarity.rs); "f64"
+    matches a double-precision SQL oracle.  Boost multiplies after
+    similarity (rocksdb/search/mod.rs:110-111).  Every op is
+    elementwise, so scoring a whole batch at once is bit-identical to
+    scoring it block by block."""
+    if precision == "f64":
+        if similarity == dsl.TFIDF:
+            s = tfidf_f64(tfs, total_docs, dfg)
+        else:
+            s = bm25_f64(tfs, lengths_from_bytes_f64(lens),
+                         total_tokens, total_docs, dfg)
+        return s * float(boost)
+    if similarity == dsl.TFIDF:
+        s = tfidf_f32(tfs, total_docs, dfg)
+    else:
+        s = bm25_f32(tfs, lengths_from_bytes(lens),
+                     total_tokens, total_docs, dfg)
+    return (s * np.float32(boost)).astype(np.float64)
+
+
 def _decode_score_fn(total_docs: int, total_tokens: int, similarity: str,
                      boost: float, needs_score: bool,
                      precision: str = "f32"):
     """mapInArrow body: posting blocks → (doc_id, score) rows.
 
     Expects columns (segment, doc_bytes, tf_bytes, len_bytes,
-    df_global).  precision "f32" matches the Rust reference's math
-    (similarity.rs); "f64" matches a double-precision SQL oracle.
-    Boost multiplies after similarity (rocksdb/search/mod.rs:110-111).
-    The whole batch decodes in one numpy pass (df_global is expanded
-    per posting with ``np.repeat``; every scoring op is elementwise,
-    so the per-element f32 math is bit-identical to the per-block
-    loop it replaces)."""
+    df_global).  The whole batch decodes in one numpy pass (df_global
+    is expanded per posting with ``np.repeat``) and scores through
+    ``_term_scores``."""
     import pyarrow as pa
 
     def _run(batches) -> Iterator["pa.RecordBatch"]:
-        b32 = np.float32(boost)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -173,20 +197,8 @@ def _decode_score_fn(total_docs: int, total_tokens: int, similarity: str,
                 dfg = np.repeat(
                     rb.column("df_global").to_numpy(zero_copy_only=False),
                     counts)
-                if precision == "f64":
-                    if similarity == dsl.TFIDF:
-                        s = tfidf_f64(tfs, total_docs, dfg)
-                    else:
-                        s = bm25_f64(tfs, lengths_from_bytes_f64(lens),
-                                     total_tokens, total_docs, dfg)
-                    s = s * float(boost)
-                else:
-                    if similarity == dsl.TFIDF:
-                        s = tfidf_f32(tfs, total_docs, dfg)
-                    else:
-                        s = bm25_f32(tfs, lengths_from_bytes(lens),
-                                     total_tokens, total_docs, dfg)
-                    s = (s * b32).astype(np.float64)
+                s = _term_scores(tfs, lens, dfg, total_docs, total_tokens,
+                                 similarity, boost, precision)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(doc_ids, type=pa.int64()),
                  pa.array(s, type=pa.float64())],
@@ -200,8 +212,7 @@ def _fused_decode_fn(similarity: str, precision: str):
     columns (df_global, boost, total_docs, total_tokens, child) instead
     of closure constants — one decode job scores every term child.
     The batch decodes in one numpy pass; scoring loops once per
-    DISTINCT child (each child's stats are constants), keeping the
-    per-element f32 math bit-identical to the per-block-row loop."""
+    DISTINCT child (each child's stats are constants)."""
     import pyarrow as pa
 
     def _run(batches) -> Iterator["pa.RecordBatch"]:
@@ -221,22 +232,9 @@ def _fused_decode_fn(similarity: str, precision: str):
             for c in np.unique(child_b):
                 i = int(np.nonzero(child_b == c)[0][0])
                 m = child == c
-                t_docs, t_toks = int(td_b[i]), int(tt_b[i])
-                bst = float(boost_b[i])
-                if precision == "f64":
-                    if similarity == dsl.TFIDF:
-                        sc = tfidf_f64(tfs[m], t_docs, dfg[m])
-                    else:
-                        sc = bm25_f64(tfs[m], lengths_from_bytes_f64(lens[m]),
-                                      t_toks, t_docs, dfg[m])
-                    s[m] = sc * bst
-                else:
-                    if similarity == dsl.TFIDF:
-                        sc = tfidf_f32(tfs[m], t_docs, dfg[m])
-                    else:
-                        sc = bm25_f32(tfs[m], lengths_from_bytes(lens[m]),
-                                      t_toks, t_docs, dfg[m])
-                    s[m] = (sc * np.float32(bst)).astype(np.float64)
+                s[m] = _term_scores(tfs[m], lens[m], dfg[m], int(td_b[i]),
+                                    int(tt_b[i]), similarity,
+                                    float(boost_b[i]), precision)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(doc_ids, type=pa.int64()),
                  pa.array(child, type=pa.int32()),
@@ -305,15 +303,18 @@ class SearchEngine:
         self._lineage = self.layout.lineage()
         jobs = self._jobs = [r["job"] for r in self._lineage]
 
-        self.postings = (
-            spark.read.option("basePath", self.layout.table("postings"))
-            .parquet(*self.layout.committed_dirs("postings", jobs=jobs)))
+        from ..index.build import POSTINGS_SCHEMA
+        self.postings = self._read_table("postings", POSTINGS_SCHEMA)
         # mergeSchema: a stored column that only later jobs carry (a
         # mapping change between batches) stays readable; the schema
         # read is the same one Spark job either way
-        self.docs = (spark.read.option("basePath", self.layout.table("docs"))
-                     .option("mergeSchema", "true")
-                     .parquet(*self.layout.committed_dirs("docs", jobs=jobs)))
+        self.docs = self._read_table("docs", T.StructType(
+            [T.StructField("doc_id", T.LongType()),
+             T.StructField(self.config.key_col, T.StringType())]
+            + [T.StructField(c, T.StringType()) for c in (
+                ("_nested_parent", "_nested_root")
+                if self.config.nested_paths else ())]),
+            mergeSchema="true")
         # driver-side dictionary reader over the term_dict sidecars
         # (the reference's in-memory TermDictionary,
         # term_dictionary.rs:16-91): answers df / n_blocks lookups
@@ -404,8 +405,16 @@ class SearchEngine:
         i = int(np.searchsorted(ids, doc_id))
         return i < ids.size and int(ids[i]) == doc_id
 
-    def _postings_bytes(self) -> int:
-        return sum(self._postings_bytes_per_job().values())
+    def _read_table(self, name: str, empty_schema: T.StructType,
+                    **options) -> DataFrame:
+        """Table ``name`` over the committed job dirs — an empty frame
+        of ``empty_schema`` when no committed job wrote one (an empty
+        streaming batch commits a lineage row and no data)."""
+        dirs = self.layout.committed_dirs(name, jobs=self._jobs)
+        if not dirs:
+            return self.spark.createDataFrame([], schema=empty_schema)
+        return (self.spark.read.option("basePath", self.layout.table(name))
+                .options(**options).parquet(*dirs))
 
     def _postings_bytes_per_job(self) -> Dict[str, int]:
         import os as _os
@@ -575,8 +584,9 @@ class SearchEngine:
         return sum(int(r["n_docs"] or 0) for r in self._lineage)
 
     # ---------------------------------------------------------------
-    # fused multi-term path: ONE decode job for a combinator whose
-    # children are all plain Terms (the common match/multi_match case)
+    # fused term-tree path: ONE decode job and ONE groupBy(doc_id) for
+    # any combinator / Filter / Exclude tree whose leaves are all plain
+    # Terms (match, multi_match, filtered, and/or/dis_max of those)
     # ---------------------------------------------------------------
     @staticmethod
     def _fusable(children: Tuple[dsl.Query, ...]) -> bool:
@@ -585,6 +595,110 @@ class SearchEngine:
                 and len({(c.field, c.term) for c in children})
                 == len(children)
                 and len({c.scorer.similarity for c in children}) == 1)
+
+    def _term_tree(self, q: dsl.Query) -> Optional[Tuple[dsl.Term, ...]]:
+        """The depth-first Term leaves of a Conjunction / Disjunction /
+        DisjunctionMax / Filter / Exclude tree whose leaves are all
+        Terms; None for a lone Term, any other leaf, an empty
+        combinator, or leaves ``_fusable`` refuses (a (field, term)
+        twice — the fused frame holds each leaf once — or mixed
+        similarities)."""
+        leaves: List[dsl.Term] = []
+
+        def walk(n) -> bool:
+            if isinstance(n, dsl.Term):
+                leaves.append(n)
+                return True
+            if isinstance(n, dsl.Filter):
+                return walk(n.query) and walk(n.filter)
+            if isinstance(n, dsl.Exclude):
+                return walk(n.query) and walk(n.exclude)
+            if isinstance(n, (dsl.Conjunction, dsl.Disjunction,
+                              dsl.DisjunctionMax)):
+                return bool(n.queries) and all(walk(c) for c in n.queries)
+            return False
+
+        if isinstance(q, dsl.Term) or not walk(q) \
+                or not self._fusable(tuple(leaves)):
+            return None
+        return tuple(leaves)
+
+    def _fused_tree(self, q: dsl.Query,
+                    leaves: Tuple[dsl.Term, ...]) -> DataFrame:
+        """(doc_id, score) of a ``_term_tree`` query: every leaf decodes
+        in one ``_fused_frame`` (leaf ordinal = ``child``), then ONE
+        groupBy(doc_id) folds the whole tree — a second grouping level
+        would cost a second Exchange per query.
+
+        Every node becomes a (score, present) pair of Column
+        expressions over that aggregate; a node's score is null when
+        the node is absent.  A node's leaves hold a contiguous ordinal
+        range, so a combinator of plain Terms aggregates its range
+        (or → sum, and → count + sum, max → max; no range gate when
+        the range is the whole frame).  Other nodes combine their
+        children's pairs with the generic path's semantics
+        (score_function.rs:21-38,74-88): Avg over the child COUNT with
+        0 for an absent child, Max, and Filter/Exclude gating on the
+        filter branch without scoring it (query/mod.rs:64-75)."""
+        n_leaves = len(leaves)
+        aggs: List = []
+
+        def in_range(lo: int, hi: int, col):
+            if hi - lo == n_leaves:
+                return col
+            return F.when((F.col("child") >= lo) & (F.col("child") < hi),
+                          col)
+
+        def node(n, lo: int):
+            """(score, present, next ordinal) of node ``n`` whose
+            leaves start at ordinal ``lo``."""
+            kids = (n,) if isinstance(n, dsl.Term) \
+                else getattr(n, "queries", None)
+            if kids is not None and all(isinstance(c, dsl.Term)
+                                        for c in kids):
+                hi = lo + len(kids)
+                a = f"_a{len(aggs)}"
+                is_max = isinstance(n, dsl.DisjunctionMax)
+                aggs.append((F.max if is_max else F.sum)(
+                    in_range(lo, hi, F.col("score"))).alias(a))
+                score = F.col(a) if is_max \
+                    else F.col(a) / F.lit(float(len(kids)))
+                if isinstance(n, dsl.Conjunction):
+                    aggs.append(F.count(in_range(lo, hi, F.lit(1)))
+                                .alias(a + "n"))
+                    present = F.col(a + "n") == len(kids)
+                    return F.when(present, score), present, hi
+                # every grouped doc holds a leaf of the whole frame
+                present = F.lit(True) if hi - lo == n_leaves \
+                    else F.col(a).isNotNull()
+                return score, present, hi
+            if isinstance(n, (dsl.Filter, dsl.Exclude)):
+                score, present, mid = node(n.query, lo)
+                anti = isinstance(n, dsl.Exclude)
+                _, gate, hi = node(n.exclude if anti else n.filter, mid)
+                present = present & (~gate if anti else gate)
+                return F.when(present, score), present, hi
+            scores, pres = [], []
+            for c in kids:
+                s, p, lo = node(c, lo)
+                scores.append(s)
+                pres.append(p)
+            if isinstance(n, dsl.Conjunction):
+                present = reduce(operator.and_, pres)
+            else:
+                present = reduce(operator.or_, pres)
+            if isinstance(n, dsl.DisjunctionMax):
+                score = F.greatest(*scores) if len(scores) > 1 \
+                    else scores[0]
+                return score, present, lo
+            total = reduce(operator.add,
+                           [F.coalesce(s, F.lit(0.0)) for s in scores])
+            return (F.when(present, total / F.lit(float(len(kids)))),
+                    present, lo)
+
+        score, present, _ = node(q, 0)
+        return (self._fused_frame(leaves).groupBy("doc_id").agg(*aggs)
+                .where(present).select("doc_id", score.alias("score")))
 
     def _fused_frame(self, children) -> DataFrame:
         """(doc_id, child, score): all Term children in one decode."""
@@ -989,6 +1103,9 @@ class SearchEngine:
     # boolean docsets (scoring elided — the reference's no_score path)
     # ---------------------------------------------------------------
     def _docset(self, q: dsl.Query) -> DocSet:
+        leaves = self._term_tree(q)
+        if leaves is not None:
+            return self._fused_tree(q, leaves).select("doc_id")
         if isinstance(q, dsl.All):
             return ALL
         if isinstance(q, dsl.NoneQuery):
@@ -1013,12 +1130,6 @@ class SearchEngine:
         if isinstance(q, dsl.Exists):
             return self._exists_docset(q.field)
         if isinstance(q, dsl.Conjunction):
-            if self._fusable(q.queries):
-                fused = self._fused_frame(q.queries)
-                return (fused.groupBy("doc_id")
-                        .agg(F.count("*").alias("c"))
-                        .where(F.col("c") == len(q.queries))
-                        .select("doc_id"))
             acc: DocSet = ALL
             for c in q.queries:
                 acc = self._intersect(acc, self._docset(c))
@@ -1026,9 +1137,6 @@ class SearchEngine:
                     return NONE
             return acc
         if isinstance(q, (dsl.Disjunction, dsl.DisjunctionMax)):
-            if self._fusable(q.queries):
-                return self._fused_frame(q.queries) \
-                    .select("doc_id").distinct()
             acc = NONE
             for c in q.queries:
                 acc = self._union(acc, self._docset(c))
@@ -1094,6 +1202,9 @@ class SearchEngine:
     # scored evaluation
     # ---------------------------------------------------------------
     def _score(self, q: dsl.Query) -> Scored:
+        leaves = self._term_tree(q)
+        if leaves is not None:
+            return ("df", self._fused_tree(q, leaves))
         if isinstance(q, dsl.All):
             return ("all", q.score)
         if isinstance(q, dsl.NoneQuery):
@@ -1119,73 +1230,14 @@ class SearchEngine:
             return ("df", ds.withColumn("score",
                                         F.lit(float(q.score))))
         if isinstance(q, dsl.Filter):
-            fused = self._fused_filter(q.query, q.filter, anti=False)
-            if fused is not None:
-                return ("df", fused)
             inner = self._score(q.query)
             fset = self._docset(q.filter)
             return self._apply_filter(inner, fset, anti=False)
         if isinstance(q, dsl.Exclude):
-            fused = self._fused_filter(q.query, q.exclude, anti=True)
-            if fused is not None:
-                return ("df", fused)
             inner = self._score(q.query)
             eset = self._docset(q.exclude)
             return self._apply_filter(inner, eset, anti=True)
         raise TypeError(type(q))
-
-    def _term_group(self, q: dsl.Query):
-        """(mode, (Term, ...)) for a plain Term or a one-level fusable
-        combinator of Terms; None for any other shape."""
-        if isinstance(q, dsl.Term):
-            return ("or", (q,))
-        if isinstance(q, (dsl.Conjunction, dsl.Disjunction,
-                          dsl.DisjunctionMax)) and self._fusable(q.queries):
-            mode = ("and" if isinstance(q, dsl.Conjunction) else
-                    "or" if isinstance(q, dsl.Disjunction) else "max")
-            return (mode, tuple(q.queries))
-        return None
-
-    def _fused_filter(self, inner_q: dsl.Query, filt_q: dsl.Query,
-                      anti: bool) -> Optional[DataFrame]:
-        """ONE decode job for Filter/Exclude whose branches are both
-        Term trees: the filter's terms ride along in the fused decode
-        as score-free presence predicates, replacing the separate
-        docset job + semi/anti-join (the round-3 `filtered` p95 shape:
-        two jobs → one).  Semantics are identical to
-        _apply_filter ∘ _docset: the filter branch only gates which
-        docs survive (query/mod.rs:64-75), scores come solely from
-        the inner branch."""
-        gi, gf = self._term_group(inner_q), self._term_group(filt_q)
-        if gi is None or gf is None:
-            return None
-        (imode, iterms), (fmode, fterms) = gi, gf
-        leaves = iterms + fterms
-        if not self._fusable(leaves):
-            return None     # duplicate leaf across branches, or
-        n_i, n_f = len(iterms), len(fterms)
-        is_inner = F.col("child") < n_i
-        agg = (self._fused_frame(leaves)
-               .groupBy("doc_id")
-               .agg(F.count(F.when(is_inner, 1)).alias("ic"),
-                    F.sum(F.when(is_inner, F.col("score"))
-                          .otherwise(0.0)).alias("isum"),
-                    F.max(F.when(is_inner, F.col("score"))).alias("imax"),
-                    F.count(F.when(~is_inner, 1)).alias("fc")))
-        # filter gate: a DisjunctionMax filter matches like "or"
-        hit = (F.col("fc") == n_f) if fmode == "and" else (F.col("fc") >= 1)
-        keep = ~hit if anti else hit
-        # inner combinator (score_function.rs:21-38,74-88)
-        if imode == "and":
-            keep = keep & (F.col("ic") == n_i)
-            score = F.col("isum") / F.lit(float(n_i))
-        elif imode == "max":
-            keep = keep & (F.col("ic") >= 1)
-            score = F.col("imax")
-        else:
-            keep = keep & (F.col("ic") >= 1)
-            score = F.col("isum") / F.lit(float(n_i))
-        return agg.where(keep).select("doc_id", score.alias("score"))
 
     def _apply_filter(self, inner: Scored, fset: DocSet,
                       anti: bool) -> Scored:
@@ -1215,98 +1267,6 @@ class SearchEngine:
         return ("df", val.join(self._sized(fset), "doc_id",
                                     "left_anti"))
 
-    def _nested_groups(self, children):
-        """[(inner_mode, (Term, ...))] when every child is a Term or a
-        one-level fusable combinator of Terms — the multi_match shape
-        DisMax(Disjunction(f1 terms), Disjunction(f2 terms)).  None
-        when the shape (or a mixed inner mode, duplicate leaf, or
-        mixed similarity) doesn't allow a single fused decode."""
-        groups, inner_modes = [], set()
-        for c in children:
-            if isinstance(c, dsl.Term):
-                groups.append(("or", (c,)))      # singleton: mode moot
-            elif isinstance(c, (dsl.Conjunction, dsl.Disjunction,
-                                dsl.DisjunctionMax)) \
-                    and self._fusable(c.queries):
-                m = ("and" if isinstance(c, dsl.Conjunction) else
-                     "or" if isinstance(c, dsl.Disjunction) else "max")
-                groups.append((m, tuple(c.queries)))
-                inner_modes.add(m)
-            else:
-                return None
-        if len(inner_modes) > 1 or len(groups) < 2:
-            return None
-        leaves = [t for _, ts in groups for t in ts]
-        if len(leaves) < 2 or len({(t.field, t.term) for t in leaves}) \
-                != len(leaves):
-            return None                  # dup leaf would double dfagg
-        if len({t.scorer.similarity for t in leaves}) != 1:
-            return None
-        return groups
-
-    def _fused_nested(self, groups, outer_mode: str) -> DataFrame:
-        """ONE decode job for a two-level combinator tree: decode all
-        leaf terms fused, aggregate per (doc, group) with the inner
-        combinator, then across groups with the outer one.  Exact
-        same Avg-over-child-count / Max semantics as the recursive
-        path (score_function.rs:21-38,74-88), one job instead of one
-        per group."""
-        flat, gidx = [], []
-        for g, (_, terms) in enumerate(groups):
-            for t in terms:
-                flat.append(t)
-                gidx.append(g)
-        inner = next((m for m, ts in groups if len(ts) > 1), "or")
-        rows = self._fused_frame(flat)
-        # ONE groupBy(doc_id) with per-group conditional aggregates
-        # replaces the previous groupBy(doc_id, g) → groupBy(doc_id)
-        # two-phase: that plan carried a second Exchange per query
-        # (the (doc_id, g) hash partitioning does not satisfy the
-        # doc_id distribution).  Guide §2.4; VERDICT r6 #2 traced
-        # dis_max's p95 residual to exactly this extra exchange.
-        # Group count = the query's field count — bounded by the DSL.
-        g_arr = F.array(*[F.lit(g) for g in gidx])
-        rows = rows.withColumn("g", F.element_at(g_arr,
-                                                 F.col("child") + F.lit(1)))
-        aggs = []
-        for g, (_, ts) in enumerate(groups):
-            is_g = F.col("g") == g
-            aggs.append(F.count(F.when(is_g, 1)).alias(f"_c{g}"))
-            aggs.append(F.sum(F.when(is_g, F.col("score")))
-                        .alias(f"_s{g}"))
-            aggs.append(F.max(F.when(is_g, F.col("score")))
-                        .alias(f"_m{g}"))
-        agg = rows.groupBy("doc_id").agg(*aggs)
-        # per-group score gs_g: null ⟺ the (doc, g) row was absent (or
-        # dropped by the inner-"and" completeness gate) in the
-        # two-phase plan — the null algebra below reproduces it
-        gs = []
-        for g, (_, ts) in enumerate(groups):
-            n_g = float(len(ts))
-            if inner == "and":
-                e = F.when(F.col(f"_c{g}") == len(ts),
-                           F.col(f"_s{g}") / F.lit(n_g))
-            elif inner == "or":
-                e = F.col(f"_s{g}") / F.lit(n_g)
-            else:
-                e = F.col(f"_m{g}")
-            gs.append(e)
-        ng = float(len(groups))
-        n_present = sum((e.isNotNull().cast("int") for e in gs[1:]),
-                       gs[0].isNotNull().cast("int"))
-        if outer_mode == "max":
-            score = F.greatest(*gs) if len(gs) > 1 else gs[0]
-            keep = n_present >= 1
-        elif outer_mode == "or":
-            score = sum((F.coalesce(e, F.lit(0.0)) for e in gs[1:]),
-                        F.coalesce(gs[0], F.lit(0.0))) / F.lit(ng)
-            keep = n_present >= 1
-        else:
-            score = sum((F.coalesce(e, F.lit(0.0)) for e in gs[1:]),
-                        F.coalesce(gs[0], F.lit(0.0))) / F.lit(ng)
-            keep = n_present == len(groups)
-        return agg.where(keep).select("doc_id", score.alias("score"))
-
     def _combine(self, children: Tuple[dsl.Query, ...], mode: str) -> Scored:
         """Avg (and/or) and Max combinators over child frames.
 
@@ -1314,23 +1274,6 @@ class SearchEngine:
         contribute 0.0 (score_function.rs:80-88 +
         rocksdb/search/mod.rs:112-116).
         """
-        if self._fusable(children):
-            fused = self._fused_frame(children)
-            n = len(children)
-            g = fused.groupBy("doc_id")
-            if mode == "and":
-                agg = g.agg(F.count("*").alias("c"),
-                            F.sum("score").alias("s"))
-                return ("df", agg.where(F.col("c") == n).select(
-                    "doc_id", (F.col("s") / F.lit(float(n)))
-                    .alias("score")))
-            if mode == "or":
-                return ("df", g.agg((F.sum("score") / F.lit(float(n)))
-                                    .alias("score")))
-            return ("df", g.agg(F.max("score").alias("score")))
-        groups = self._nested_groups(children)
-        if groups is not None:
-            return ("df", self._fused_nested(groups, mode))
         scored = [self._score(c) for c in children]
         n = len(scored)
         if n == 0:

@@ -154,14 +154,13 @@ class LocalSearcher:
                   else sorted(set(jobs) & set(committed)))
         post_dirs = layout.committed_dirs("postings", jobs=wanted)
         docs_dirs = layout.committed_dirs("docs", jobs=wanted)
+        # a job with no postings dir (an empty streaming batch) adds
+        # no postings
         tbl = pa.concat_tables([
             pq.read_table(d, columns=["field", "term", "segment",
                                       "doc_bytes", "tf_bytes",
                                       "len_bytes"])
-            for d in post_dirs]) if post_dirs else pq.read_table(
-                layout.table("postings"),
-                columns=["field", "term", "segment", "doc_bytes",
-                         "tf_bytes", "len_bytes"])
+            for d in post_dirs]) if post_dirs else None
         # Vectorized shard load: order the BLOCK rows by
         # ((field, term), segment) — segments own disjoint doc-id
         # ranges, so per key the segment-ordered block concatenation
@@ -174,7 +173,7 @@ class LocalSearcher:
         # that dominated shard spin-up (tests/test_codec_concat.py
         # pins decode parity with the per-block path;
         # tests/test_local_searcher.py pins rank identity).
-        n_rows = tbl.num_rows
+        n_rows = tbl.num_rows if tbl is not None else 0
         if n_rows:
             fields = tbl.column("field").to_pylist()
             terms = tbl.column("term").to_pylist()

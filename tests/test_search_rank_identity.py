@@ -5,8 +5,11 @@ combinators).  Top-k doc_ids must be identical in order; scores must
 agree to f32 ULP tolerance.  Counts (the _count path, scoring elided)
 must be exact."""
 
+import contextlib
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 QUERIES = [
     ("match_or", {"match": {"text": "spark query"}}),
@@ -184,6 +187,15 @@ def test_many_block_topk_matches_oracle(many_block):
                 oracle.search(eng.parse(query), k=size), f"{name}@{size}")
 
 
+@contextlib.contextmanager
+def _generic(engine):
+    """The engine takes its generic recursive path (per-child frames
+    and joins) instead of the fused term-tree evaluator."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(engine, "_term_tree", lambda q: None)
+        yield
+
+
 def test_nested_fused_combine_matches_generic(engine):
     """Two-level fused decode (multi_match: DisMax over per-field
     Disjunctions in ONE decode job) must equal the recursive
@@ -196,16 +208,12 @@ def test_nested_fused_combine_matches_generic(engine):
     ]
     for q in queries:
         parsed = engine.parse(q)
-        assert engine._nested_groups(parsed.queries) is not None, q
+        assert engine._term_tree(parsed) is not None, q
         a = [(r.doc_id, r.score) for r in
              engine.search(q, size=15).collect()]
-        bak = engine._nested_groups
-        engine._nested_groups = lambda ch: None
-        try:
+        with _generic(engine):
             b = [(r.doc_id, r.score) for r in
                  engine.search(q, size=15).collect()]
-        finally:
-            engine._nested_groups = bak
         assert a == b and len(a) > 0, q
 
 
@@ -228,37 +236,24 @@ def test_fused_filter_matches_generic(engine):
     ]
     for q in queries:
         parsed = engine.parse(q)
-        assert engine._fused_filter(parsed.query, parsed.filter,
-                                    anti=False) is not None, q
+        assert engine._term_tree(parsed) is not None, q
         a = [(r.doc_id, r.score) for r in engine.search(q, size=20).collect()]
-        bak = engine._fused_filter
-        engine._fused_filter = lambda *args, **kw: None
-        try:
+        with _generic(engine):
             b = [(r.doc_id, r.score) for r in
                  engine.search(q, size=20).collect()]
-        finally:
-            engine._fused_filter = bak
         assert a == b and len(a) > 0, q
 
 
 def test_fused_exclude_matches_generic(engine):
     import rusticsearch_spark.query.dsl as dsl_mod
-    q = {"and": [{"match": {"text": "spark query"}},
-                 {"not": {"term": {"lang": "de"}}}]}
-    # the 'and' wrapper isn't itself the Exclude — drive _score directly
     parsed = engine.parse({"match": {"text": "spark query"}})
     excl = dsl_mod.Exclude(parsed, dsl_mod.Term("lang", "de"))
-    fused = engine._fused_filter(excl.query, excl.exclude, anti=True)
-    assert fused is not None
+    assert engine._term_tree(excl) is not None
     a = sorted((r.doc_id, round(r.score, 6)) for r in
-               engine._materialize(("df", fused)).collect())
-    bak = engine._fused_filter
-    engine._fused_filter = lambda *args, **kw: None
-    try:
+               engine._materialize(engine._score(excl)).collect())
+    with _generic(engine):
         b = sorted((r.doc_id, round(r.score, 6)) for r in
                    engine._materialize(engine._score(excl)).collect())
-    finally:
-        engine._fused_filter = bak
     assert a == b and len(a) > 0
 
 
@@ -267,4 +262,50 @@ def test_fused_filter_declines_shared_leaf(engine):
     frame cannot hold one leaf twice)."""
     import rusticsearch_spark.query.dsl as dsl_mod
     t = dsl_mod.Term("text", "spark")
-    assert engine._fused_filter(t, t, anti=False) is None
+    assert engine._term_tree(dsl_mod.Filter(t, t)) is None
+    assert engine._term_tree(dsl_mod.Exclude(t, t)) is None
+
+
+def _term_tree_shapes():
+    import rusticsearch_spark.query.dsl as dsl_mod
+    or_match = {"match": {"text": "spark query"}}
+    and_match = {"match": {"text": {"query": "table scan",
+                                    "operator": "and"}}}
+    return [
+        ("mixed_dis_max", {"dis_max": {"queries": [
+            and_match, {"match": {"text": "merge join"}}]}}),
+        ("filtered_in_dis_max", {"dis_max": {"queries": [
+            {"filtered": {"query": or_match,
+                          "filter": {"term": {"lang": "en"}}}},
+            {"term": {"text": "merge"}}]}}),
+        ("exclude_of_combinators", lambda parse: dsl_mod.Exclude(
+            parse(or_match), parse(and_match))),
+        ("and_or_tree", {"and": [
+            {"or": [or_match, {"term": {"lang": "en"}}]},
+            {"or": [{"term": {"text": "data"}}, and_match]}]}),
+    ]
+
+
+@pytest.mark.parametrize("name,query", _term_tree_shapes(),
+                         ids=[s[0] for s in _term_tree_shapes()])
+def test_term_tree_shapes_match_generic_and_oracle(engine, oracle, name,
+                                                    query):
+    """Trees the fused evaluator handles beyond one combinator level —
+    combinators of mixed modes, a Filter under a DisMax, an Exclude of
+    combinators, three combinator levels — rank like the generic path
+    and the oracle: the same ids, f32-equal scores."""
+    q = query(engine.parse) if callable(query) else engine.parse(query)
+    assert engine._term_tree(q) is not None, name
+
+    def ranked(size=12):
+        frame = engine._materialize(engine._score(q))
+        return [(r.doc_id, r.score) for r in
+                frame.orderBy(F.desc("score"), F.asc("doc_id"))
+                .limit(size).collect()]
+
+    fused = ranked()
+    with _generic(engine):
+        generic = ranked()
+    assert len(fused) > 0, name
+    _assert_matches_oracle(fused, generic, f"{name}: fused vs generic")
+    _assert_matches_oracle(fused, oracle.search(q, k=12), f"{name}: oracle")

@@ -90,6 +90,43 @@ def test_dedup_keys_skips_existing(spark, stream_index, webtext):
     assert SearchEngine(spark, stream_index).count() == before
 
 
+def test_empty_batch_adds_nothing_in_any_lane(spark, webtext, tmp_path):
+    """A batch that adds no document (every key already indexed)
+    commits a lineage row and no data.  The Spark, local and sharded
+    lanes then agree on counts and top-k ids, and an index whose only
+    job is an empty batch answers 0 hits in every lane."""
+    from rusticsearch_spark.query.local import LocalSearcher, ShardedSearcher
+    docs = webtext.select("url", "text", "lang").limit(40)
+    idx = str(tmp_path / "dup")
+    ing = StreamingIngester(spark, idx, IndexConfig(**CFG))
+    ing.process_batch(docs, 0)
+    ing.process_batch(docs, 1)
+    assert len(IndexLayout(idx).completed_jobs()) == 2
+    eng, local, sharded = (SearchEngine(spark, idx), LocalSearcher(idx),
+                           ShardedSearcher(idx))
+    for q in (None, {"term": {"text": "spark"}}, QUERY):
+        n = eng.count(q)
+        assert n > 0 and local.count(q) == n and sharded.count(q) == n, q
+        if q is None:
+            continue
+        ids = [r.doc_id for r in eng.search(q, size=60).collect()]
+        assert len(set(ids)) == len(ids) == min(n, 60), q
+        assert [d for d, _ in local.search(q, size=60)] == ids, q
+        assert [d for d, _ in sharded.search(q, size=60)] == ids, q
+
+    empty = str(tmp_path / "empty")
+    StreamingIngester(spark, empty, IndexConfig(**CFG)).process_batch(
+        docs.limit(0), 0)
+    eng, local, sharded = (SearchEngine(spark, empty),
+                           LocalSearcher(empty), ShardedSearcher(empty))
+    for q in (None, {"term": {"text": "spark"}}, QUERY):
+        assert eng.count(q) == local.count(q) == sharded.count(q) == 0, q
+        if q is not None:
+            assert eng.search(q, size=10).collect() == []
+            assert local.search(q, size=10) == sharded.search(q, size=10) \
+                == [], q
+
+
 def test_merge_jobs_preserves_results(spark, stream_index, tmp_path):
     out = str(tmp_path / "merged")
     row = merge_jobs(spark, stream_index, out)
