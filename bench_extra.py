@@ -7,13 +7,15 @@ evidence (job counts, exchange counts, explain output) can be
 captured without touching bench.py.  Methodology per query matches
 bench.py exactly (warmup + timed ``.collect()`` of the top-10 frame);
 additionally each timed query runs inside its own job group so the
-per-query Spark job count is exact.
+per-query Spark job count is exact.  Each shape's ``count(q)`` is
+timed and counted the same way, next to its ``search(q)``.
 
 Usage:
     python bench_extra.py [--plans-dir plans/r07 --suffix before]
 Outputs one JSON line per query:
     {"query": name, "median_sec": s, "runs": [...], "n_jobs": j,
-     "n_stages": st, "n_tasks": t}
+     "n_stages_total": st, "n_tasks_total": t,
+     "count_median_sec": s, "count_n_jobs": j, ...}
 """
 
 from __future__ import annotations
@@ -59,6 +61,46 @@ BENCH_QUERIES = [
     ("not", {"not": {"term": {"lang": "en"}}}),
     ("count_all", None),
 ]
+
+
+def measure(sc, group: str, fn) -> dict:
+    """Warm ``fn`` up, then time RUNS calls of it inside job group
+    ``group``: run times and the Spark jobs, stages and tasks they
+    ran."""
+    tracker = sc.statusTracker()
+    fn()
+    runs = []
+    sc.setJobGroup(group, group)
+    jobs_before = set(tracker.getJobIdsForGroup(group))
+    try:
+        for _ in range(RUNS):
+            t0 = time.monotonic()
+            fn()
+            runs.append(time.monotonic() - t0)
+    finally:
+        sc.setJobGroup(None, None)
+    new_jobs = sorted(set(tracker.getJobIdsForGroup(group)) - jobs_before)
+    n_stages = 0
+    n_tasks = 0
+    for j in new_jobs:
+        ji = tracker.getJobInfo(j)
+        if ji is None:
+            continue
+        for st in ji.stageIds:
+            si = tracker.getStageInfo(st)
+            if si is not None:
+                n_stages += 1
+                n_tasks += si.numTasks
+    runs.sort()
+    return {
+        "median_sec": round(runs[len(runs) // 2], 4),
+        "min_sec": round(runs[0], 4),
+        "runs": [round(r, 4) for r in runs],
+        "n_jobs": len(new_jobs) // RUNS,
+        "n_jobs_total": len(new_jobs),
+        "n_stages_total": n_stages,
+        "n_tasks_total": n_tasks,
+    }
 
 
 def main() -> None:
@@ -123,8 +165,6 @@ def main() -> None:
     engine = SearchEngine(spark, idx_dir, cache_postings=True)
     engine.postings.count()
 
-    tracker = sc.statusTracker()
-
     for name, q in BENCH_QUERIES:
         # plan capture
         if args.plans_dir and q is not None:
@@ -135,47 +175,16 @@ def main() -> None:
             with open(os.path.join(args.plans_dir,
                                    f"{name}_{args.suffix}.txt"), "w") as fh:
                 fh.write(plan)
-        # warmup
         if q is None:
-            engine.count()
+            row = count = measure(sc, f"bx_{name}", engine.count)
         else:
-            engine.search(q, size=10).collect()
-        runs = []
-        group = f"bx_{name}"
-        sc.setJobGroup(group, name)
-        jobs_before = set(tracker.getJobIdsForGroup(group))
-        for _ in range(RUNS):
-            t0 = time.monotonic()
-            if q is None:
-                engine.count()
-            else:
-                engine.search(q, size=10).collect()
-            runs.append(time.monotonic() - t0)
-        jobs_after = set(tracker.getJobIdsForGroup(group))
-        new_jobs = sorted(jobs_after - jobs_before)
-        n_stages = 0
-        n_tasks = 0
-        for j in new_jobs:
-            ji = tracker.getJobInfo(j)
-            if ji is None:
-                continue
-            for st in ji.stageIds:
-                si = tracker.getStageInfo(st)
-                if si is not None:
-                    n_stages += 1
-                    n_tasks += si.numTasks
-        sc.setJobGroup(None, None)
-        runs.sort()
-        print(json.dumps({
-            "query": name,
-            "median_sec": round(runs[len(runs) // 2], 4),
-            "min_sec": round(runs[0], 4),
-            "runs": [round(r, 4) for r in runs],
-            "n_jobs": len(new_jobs) // RUNS,
-            "n_jobs_total": len(new_jobs),
-            "n_stages_total": n_stages,
-            "n_tasks_total": n_tasks,
-        }), flush=True)
+            row = measure(sc, f"bx_{name}",
+                          lambda: engine.search(q, size=10).collect())
+            count = measure(sc, f"bx_count_{name}",
+                            lambda: engine.count(q))
+        print(json.dumps({"query": name, **row,
+                          **{f"count_{k}": v for k, v in count.items()}}),
+              flush=True)
 
     spark.stop()
 

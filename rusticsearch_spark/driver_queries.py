@@ -441,15 +441,21 @@ _NESTED_AND = {"nested": {"path": "comments", "query": {"and": [
     {"term": {"comments.rating": "en"}}]}, "score_mode": "none"}}
 
 
+def _matched_src_ids(eng, query_json):
+    """Source doc ids of every document ``query_json`` matches —
+    the engine's evaluator with scoring elided.  The parent key IS
+    the source doc id (string-cast by prepare_docs)."""
+    frame = eng._materialize(eng._score(eng.parse(query_json),
+                                        needs_score=False))
+    return (frame.join(eng.docs.select("doc_id", "src_doc_id"), "doc_id")
+            .select(F.col("src_doc_id").cast("long").alias("doc_id")))
+
+
 def q_fts_nested_type(spark, sf_dir):
     """ES nested-TYPE matching: parents whose SINGLE element carries
     both conditions (document.rs:87-89 TODO exceeded: the reference
     never ships object OR nested mappings)."""
-    eng = _nested_type_engine(spark, sf_dir)
-    frame = eng._docset(eng.parse(_NESTED_AND))
-    # parent key IS the source doc id (string-cast by prepare_docs)
-    return (frame.join(eng.docs.select("doc_id", "src_doc_id"), "doc_id")
-            .select(F.col("src_doc_id").cast("long").alias("doc_id")))
+    return _matched_src_ids(_nested_type_engine(spark, sf_dir), _NESTED_AND)
 
 
 def sql_fts_nested_type():
@@ -568,10 +574,7 @@ def q_fts_nested_deep(spark, sf_dir):
     """Two-level nested matching: the inner nested folds to the
     OUTER post level (not the root), so the comment must live in the
     same post that carries the topic."""
-    eng = _nested_deep_engine(spark, sf_dir)
-    frame = eng._docset(eng.parse(_NESTED_DEEP))
-    return (frame.join(eng.docs.select("doc_id", "src_doc_id"), "doc_id")
-            .select(F.col("src_doc_id").cast("long").alias("doc_id")))
+    return _matched_src_ids(_nested_deep_engine(spark, sf_dir), _NESTED_DEEP)
 
 
 def sql_fts_nested_deep():
@@ -689,13 +692,10 @@ def q_fts_exists(spark, sf_dir):
     = non-null AND non-empty for arrays; `missing` is the complement
     through the boolean algebra (here double-negated to exercise the
     Exclude folding)."""
-    eng = _exists_engine(spark, sf_dir)
     q = {"filtered": {
         "query": {"exists": {"field": "tags"}},
         "filter": {"not": {"missing": {"field": "maybe_lang"}}}}}
-    frame = eng._docset(eng.parse(q))
-    return (frame.join(eng.docs.select("doc_id", "src_doc_id"), "doc_id")
-            .select(F.col("src_doc_id").cast("long").alias("doc_id")))
+    return _matched_src_ids(_exists_engine(spark, sf_dir), q)
 
 
 def sql_fts_exists():

@@ -234,11 +234,11 @@ def _inner_hits_walk(q: Query) -> List["Nested"]:
 class ParseContext:
     """What the parser needs from index metadata: per-field search
     analyzer (None = unanalyzed: the raw string is a single term,
-    match_query.rs:41-43) and score suppression for filter branches
-    (query_parser/mod.rs:48-52)."""
+    match_query.rs:41-43).  Score suppression for filter branches
+    (query_parser/mod.rs:48-52) is the evaluators' business: each
+    evaluates a Filter/Exclude branch with scoring elided."""
     fields: dict = field(default_factory=lambda: {"text": "standard"})
     analyzers: Optional[object] = None  # AnalyzerRegistry
-    score_required: bool = True
     #: mapping-level types of non-string fields (integer|boolean|date);
     #: term/terms values on these normalize through the typed
     #: canonicalization (terms.py ↔ json_value_to_term,
@@ -275,11 +275,6 @@ class ParseContext:
             except ValueError as exc:
                 raise QueryParseError(str(exc)) from None
         return _as_string(v)
-
-    def no_score(self) -> "ParseContext":
-        return ParseContext(self.fields, self.analyzers, False,
-                            self.field_types, self.search_analyzers,
-                            self.nested_paths)
 
 
 def _as_string(v) -> str:
@@ -470,28 +465,28 @@ def _parse_fuzzy(body: dict, ctx: ParseContext) -> Query:
 
 
 def _parse_and(body, ctx: ParseContext) -> Query:
-    if not isinstance(body, list):
-        raise QueryParseError("'and' expects a list")
+    if not isinstance(body, list) or not body:
+        raise QueryParseError("'and' expects a non-empty list")
     return Conjunction(tuple(parse(q, ctx) for q in body))
 
 
 def _parse_or(body, ctx: ParseContext) -> Query:
-    if not isinstance(body, list):
-        raise QueryParseError("'or' expects a list")
+    if not isinstance(body, list) or not body:
+        raise QueryParseError("'or' expects a non-empty list")
     return Disjunction(tuple(parse(q, ctx) for q in body))
 
 
 def _parse_dis_max(body: dict, ctx: ParseContext) -> Query:
     qs = (body or {}).get("queries")
-    if not isinstance(qs, list):
-        raise QueryParseError("dis_max expects 'queries'")
+    if not isinstance(qs, list) or not qs:
+        raise QueryParseError("dis_max expects a non-empty 'queries'")
     q: Query = DisjunctionMax(tuple(parse(x, ctx) for x in qs))
     return boost(q, float(body.get("boost", 1.0)))
 
 
 def _parse_not(body, ctx: ParseContext) -> Query:
     """not_query.rs:16-30 — Exclude{All, q} with q score-less."""
-    return Exclude(All(), parse(body, ctx.no_score()))
+    return Exclude(All(), parse(body, ctx))
 
 
 def _parse_filtered(body: dict, ctx: ParseContext) -> Query:
@@ -502,7 +497,7 @@ def _parse_filtered(body: dict, ctx: ParseContext) -> Query:
     inner = (parse(body["query"], ctx) if "query" in body else All())
     if "filter" not in body:
         raise QueryParseError("filtered missing 'filter'")
-    return Filter(inner, parse(body["filter"], ctx.no_score()))
+    return Filter(inner, parse(body["filter"], ctx))
 
 
 def _parse_constant_score(body: dict, ctx: ParseContext) -> Query:
@@ -510,7 +505,7 @@ def _parse_constant_score(body: dict, ctx: ParseContext) -> Query:
     if not isinstance(body, dict) or "filter" not in body:
         raise QueryParseError("constant_score missing 'filter'")
     boost_v = float(body.get("boost", 1.0))
-    return Filter(All(boost_v), parse(body["filter"], ctx.no_score()))
+    return Filter(All(boost_v), parse(body["filter"], ctx))
 
 
 def _parse_nested(body: dict, ctx: ParseContext) -> Query:
@@ -540,9 +535,7 @@ def _parse_nested(body: dict, ctx: ParseContext) -> Query:
                 f"inner_hits: unsupported keys {sorted(unknown)}")
         inner_hits = (str(ih.get("name", path)),
                       int(ih.get("size", 3)), int(ih.get("from", 0)))
-    inner_ctx = ctx if mode != "none" else ctx.no_score()
-    return Nested(path, parse(body["query"], inner_ctx), mode,
-                  inner_hits)
+    return Nested(path, parse(body["query"], ctx), mode, inner_hits)
 
 
 def _parse_exists(body: dict, ctx: ParseContext) -> Query:

@@ -4,10 +4,14 @@ Lowers the ``dsl.Query`` tree into DataFrame set-algebra and scoring,
 replacing the reference's two postfix stack machines
 (/root/reference/src/search/backends/rocksdb/search/mod.rs:16-155):
 
-* the **boolean VM** (Roaring intersect/union/difference) becomes
-  joins/unions on doc_id frames, with the Full/Empty constant-folding
-  algebra of planner/boolean_query.rs:131-321 applied symbolically
-  (docsets are ``ALL``/``NONE``/DataFrame — an ``ALL`` operand never
+* the **boolean VM** (Roaring intersect/union/difference) is the
+  score VM with scoring elided, as in the reference's _count
+  (planner/mod.rs:43-47): ``count()``, every Filter/Exclude branch
+  and a score_mode-none nested body run ``_score(q,
+  needs_score=False)``, whose frames are read for doc_id only.
+  Semi/anti joins and groupBy(doc_id) over those frames carry the
+  Full/Empty constant folding of planner/boolean_query.rs:131-321
+  (an All or None operand folds symbolically — an All never
   materializes the universe, the negation-pushdown effect);
 * the **score VM** becomes per-term f32 scoring inside an
   Arrow-batched decode UDF plus groupBy-level combinators
@@ -37,7 +41,7 @@ from __future__ import annotations
 
 import operator
 from functools import cached_property, reduce
-from typing import Dict, Iterator, List, Optional, Tuple, Union
+from typing import Dict, Iterator, List, Optional, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -56,9 +60,6 @@ _SCORE_SCHEMA = T.StructType([
     T.StructField("score", T.DoubleType()),
 ])
 
-ALL = "__all__"
-NONE = "__none__"
-DocSet = Union[str, DataFrame]          # ALL | NONE | DataFrame(doc_id)
 Scored = Tuple[str, object]             # ("all", const) | ("none", None)
                                         # | ("df", DataFrame(doc_id, score))
 
@@ -131,8 +132,8 @@ def _batch_decode(rb, docs_only: bool = False):
 
     Returns ``(doc_ids, tfs, lens, counts)`` — ``counts[i]`` postings
     belong to block row ``i`` of the batch, laid out in row order.
-    ``docs_only`` skips the tf/len streams (the score-elided docset
-    path decodes just doc ids)."""
+    ``docs_only`` skips the tf/len streams (a score-elided term
+    decodes just doc ids)."""
     import pyarrow as pa
 
     from ..index.codec import decode_docids_concat
@@ -545,10 +546,22 @@ class SearchEngine:
         return out
 
     def count(self, query_json: Optional[dict] = None) -> int:
-        """_count: scoring elided entirely (planner/mod.rs:43-47)."""
+        """_count: the search plan with scoring elided
+        (planner/mod.rs:43-47)."""
         if self._local is not None:
             return self._local.count(query_json)
-        if query_json is None:
+        kind, frame = "all", None
+        if query_json is not None:
+            q = self.parse(query_json)
+            if isinstance(q, dsl.Term) and self.deletions is None:
+                if self._is_nested_field(q.field):
+                    return 0     # flat query on a nested field: no parent
+                # dictionary lookup: zero Spark jobs for a term count
+                return self.dict_reader.lookup_one(q.field, q.term)[0]
+            kind, frame = self._score(q, needs_score=False)
+        if kind == "none":
+            return 0
+        if kind == "all":
             if self.deletions is None and not self.config.nested_paths:
                 # match_all count = Σ committed lineage n_docs — the
                 # reference's metadata total (statistics ftdoc path),
@@ -556,24 +569,11 @@ class SearchEngine:
                 # until merge and nested child rows inflate n_docs,
                 # so both fall through to the counted scan.
                 return self._lineage_doc_count()
-            return self._live(self._universe()).count()
-        q = self.parse(query_json)
-        if isinstance(q, dsl.Term) and self.deletions is None:
-            if self._is_nested_field(q.field):
-                return 0     # flat query on a nested field: no parent
-            # dictionary lookup: zero Spark jobs for a term count
-            return self.dict_reader.lookup_one(q.field, q.term)[0]
-        ds = self._docset(q)
-        if isinstance(ds, str):
-            if ds == NONE:
-                return 0
-            if self.deletions is None and not self.config.nested_paths:
-                return self._lineage_doc_count()
-            return self._live(self._universe()).count()
-        if self.config.nested_paths:
+            frame = self._universe()
+        elif self.config.nested_paths:
             # child rows are internal — count parent documents only
-            ds = ds.join(self._universe(), "doc_id", "left_semi")
-        return self._live(ds).count()
+            frame = frame.join(self._universe(), "doc_id", "left_semi")
+        return self._live(frame).count()
 
     def _lineage_doc_count(self) -> int:
         """Σ ``n_docs`` over the lineage rows this engine opened with —
@@ -793,17 +793,16 @@ class SearchEngine:
 
     def _score_term(self, field: str, term: str, scorer: dsl.TermScorer,
                     needs_score: bool = True) -> DataFrame:
-        blocks = self._term_blocks(field, term)
-        if not needs_score:
-            # scoring elided: df never reaches the decode (the
-            # reference's no_score path) — skip the df aggregate
-            return self._decode(
-                blocks.withColumn("df_global", F.lit(0).cast("long")),
-                field, scorer.similarity, scorer.boost, False)
         dfg, _ = self.dict_reader.lookup_one(field, term)
-        return self._decode(
-            blocks.withColumn("df_global", F.lit(dfg).cast("long")),
-            field, scorer.similarity, scorer.boost, True)
+        out = self._decode(
+            self._term_blocks(field, term)
+            .withColumn("df_global", F.lit(dfg).cast("long")),
+            field, scorer.similarity, scorer.boost, needs_score)
+        # exact cardinality from the dictionary (free) — lets a filter
+        # branch's semi/anti join pick its strategy on real numbers
+        # instead of Spark's blind estimate (``_sized``)
+        out._rsx_rows = dfg
+        return out
 
     def _score_prefix(self, q: dsl.Prefix,
                       needs_score: bool = True) -> DataFrame:
@@ -996,29 +995,30 @@ class SearchEngine:
         return scored.join(targets, "_anc") \
             .select("doc_id", "score")
 
-    def _exists_docset(self, field: str):
-        """Docs whose STORED value for ``field`` is present: non-null,
-        and non-empty for array columns (ES treats `[]` as missing).
-        A column-pruned docs scan with the predicate pushed to
-        parquet — null counts come from row-group statistics, so the
-        scan skips row groups where every value is null.  Fields the
-        index never stored (unknown names) match nothing."""
+    def _score_exists(self, q: dsl.Exists) -> Scored:
+        """Docs whose STORED value for ``q.field`` is present, at the
+        constant ``q.score``: non-null, and non-empty for array
+        columns (ES treats `[]` as missing).  A column-pruned docs
+        scan with the predicate pushed to parquet — null counts come
+        from row-group statistics, so the scan skips row groups where
+        every value is null.  Fields the index never stored (unknown
+        names) match nothing."""
         from ..index.layout import qname
-        if field not in self.docs.columns:
-            return NONE
-        c = F.col(qname(field))
-        from pyspark.sql import types as _T
-        dtype = self.docs.schema[field].dataType
+        if q.field not in self.docs.columns:
+            return ("none", None)
+        c = F.col(qname(q.field))
+        dtype = self.docs.schema[q.field].dataType
         pred = (c.isNotNull() & (F.size(c) > 0)
-                if isinstance(dtype, _T.ArrayType) else c.isNotNull())
-        return self.docs.where(pred).select("doc_id")
+                if isinstance(dtype, T.ArrayType) else c.isNotNull())
+        return ("df", self.docs.where(pred).select(
+            "doc_id", F.lit(float(q.score)).alias("score")))
 
     def _nested_child_scores(self, q: dsl.Nested, scored: bool):
         """(pmap, child): q.path's child rows (doc_id,
         _nested_parent) and the live matched (doc_id, score) of the
         inner query evaluated over them — universe and nested context
         swapped to this path for the duration.  ``scored=False``
-        evaluates the cheaper docset and emits score 0.0.
+        evaluates with scoring elided and emits score 0.0.
 
         Children OF THIS PATH only: child keys are
         "<parent>#<path>#<pos>" (mapping.prepare_docs), so the
@@ -1037,22 +1037,12 @@ class SearchEngine:
         self._universe_override = pmap.select("doc_id")
         self._nested_context = q.path
         try:
-            if not scored:
-                ds = self._docset(q.query)
-                if ds == NONE:
-                    child = self.spark.createDataFrame(
-                        [], schema=_SCORE_SCHEMA)
-                elif ds == ALL:
-                    child = self._universe() \
-                        .withColumn("score", F.lit(0.0))
-                else:
-                    child = ds.select("doc_id") \
-                        .withColumn("score", F.lit(0.0))
-            else:
-                child = self._materialize(self._score(q.query))
+            child = self._materialize(self._score(q.query, scored))
         finally:
             self._universe_override = prev
             self._nested_context = prev_ctx
+        if not scored:
+            child = child.select("doc_id", F.lit(0.0).alias("score"))
         return pmap, self._live(child)
 
     def _inner_hits(self, node: dsl.Nested,
@@ -1100,108 +1090,15 @@ class SearchEngine:
         return out
 
     # ---------------------------------------------------------------
-    # boolean docsets (scoring elided — the reference's no_score path)
+    # evaluation: one evaluator, scoring elided on demand (the
+    # reference's no_score path, planner/mod.rs:43-47)
     # ---------------------------------------------------------------
-    def _docset(self, q: dsl.Query) -> DocSet:
-        leaves = self._term_tree(q)
-        if leaves is not None:
-            return self._fused_tree(q, leaves).select("doc_id")
-        if isinstance(q, dsl.All):
-            return ALL
-        if isinstance(q, dsl.NoneQuery):
-            return NONE
-        if isinstance(q, dsl.Term):
-            out = self._score_term(q.field, q.term, q.scorer,
-                                   needs_score=False).select("doc_id")
-            # exact cardinality from the dictionary (free) — lets the
-            # set-algebra joins pick their strategy on real numbers
-            # instead of Spark's blind estimate
-            out._rsx_rows = self.dict_reader.lookup_one(q.field, q.term)[0]
-            return out
-        if isinstance(q, dsl.Prefix):
-            return self._score_prefix(q, needs_score=False) \
-                .select("doc_id").distinct()
-        if isinstance(q, (dsl.Wildcard, dsl.Regexp, dsl.Fuzzy)):
-            return self._score_selector(q, needs_score=False) \
-                .select("doc_id").distinct()
-        if isinstance(q, dsl.Nested):
-            return self._score_nested(q, needs_score=False) \
-                .select("doc_id")
-        if isinstance(q, dsl.Exists):
-            return self._exists_docset(q.field)
-        if isinstance(q, dsl.Conjunction):
-            acc: DocSet = ALL
-            for c in q.queries:
-                acc = self._intersect(acc, self._docset(c))
-                if acc == NONE:
-                    return NONE
-            return acc
-        if isinstance(q, (dsl.Disjunction, dsl.DisjunctionMax)):
-            acc = NONE
-            for c in q.queries:
-                acc = self._union(acc, self._docset(c))
-                if acc == ALL:
-                    return ALL
-            return acc
-        if isinstance(q, dsl.Filter):
-            return self._intersect(self._docset(q.query),
-                                   self._docset(q.filter))
-        if isinstance(q, dsl.Exclude):
-            return self._subtract(self._docset(q.query),
-                                  self._docset(q.exclude))
-        raise TypeError(type(q))
-
-    #: docsets at or below this many rows may be broadcast by the
-    #: planner (~8M ids ≈ 64 MB framed); above it the semi/anti join
-    #: is pinned to shuffled-hash.  Spark's own choice is blind here —
-    #: a mapInArrow output has no size estimate, so without the hint
-    #: the planner happily broadcasts a head term's docset (78% of the
-    #: corpus in the bench's `not` query; at web scale a multi-GB
-    #: broadcast).  Guide §3.1: pick the strategy deliberately.
-    DOCSET_BROADCAST_MAX = 8 << 20
-
-    def _sized(self, b: DataFrame) -> DataFrame:
-        n = getattr(b, "_rsx_rows", None)
-        if n is not None and n > self.DOCSET_BROADCAST_MAX:
-            return b.hint("shuffle_hash")
-        return b
-
-    # Full/Empty constant folding (boolean_query.rs:131-321): the
-    # symbolic ALL/NONE operands never materialize the universe.
-    def _intersect(self, a: DocSet, b: DocSet) -> DocSet:
-        if NONE in (a, b):
-            return NONE
-        if a == ALL:
-            return b
-        if b == ALL:
-            return a
-        return a.join(self._sized(b), "doc_id", "left_semi")
-
-    def _union(self, a: DocSet, b: DocSet) -> DocSet:
-        if ALL in (a, b):
-            return ALL
-        if a == NONE:
-            return b
-        if b == NONE:
-            return a
-        return a.unionByName(b).distinct()
-
-    def _subtract(self, a: DocSet, b: DocSet) -> DocSet:
-        if a == NONE or b == ALL:
-            return NONE
-        if b == NONE:
-            return a
-        if a == ALL:
-            # root-negation fallback: universe minus matches
-            # (rocksdb/search/mod.rs:64-74)
-            return self._universe().join(self._sized(b), "doc_id",
-                                         "left_anti")
-        return a.join(self._sized(b), "doc_id", "left_anti")
-
-    # ---------------------------------------------------------------
-    # scored evaluation
-    # ---------------------------------------------------------------
-    def _score(self, q: dsl.Query) -> Scored:
+    def _score(self, q: dsl.Query, needs_score: bool = True) -> Scored:
+        """Every match of ``q`` with its score.  ``needs_score=False``
+        elides scoring — count(), every Filter/Exclude branch and a
+        score_mode-none nested body, whose frames are read for doc_id
+        only — and adds the constant folds of the reference's boolean
+        algebra that a score would forbid (boolean_query.rs:131-321)."""
         leaves = self._term_tree(q)
         if leaves is not None:
             return ("df", self._fused_tree(q, leaves))
@@ -1210,121 +1107,135 @@ class SearchEngine:
         if isinstance(q, dsl.NoneQuery):
             return ("none", None)
         if isinstance(q, dsl.Term):
-            return ("df", self._score_term(q.field, q.term, q.scorer))
+            return ("df", self._score_term(q.field, q.term, q.scorer,
+                                           needs_score))
         if isinstance(q, dsl.Prefix):
-            return ("df", self._score_prefix(q))
+            return ("df", self._score_prefix(q, needs_score))
         if isinstance(q, (dsl.Wildcard, dsl.Regexp, dsl.Fuzzy)):
-            return ("df", self._score_selector(q))
+            return ("df", self._score_selector(q, needs_score))
         if isinstance(q, dsl.Conjunction):
-            return self._combine(q.queries, mode="and")
+            return self._combine(q.queries, "and", needs_score)
         if isinstance(q, dsl.Disjunction):
-            return self._combine(q.queries, mode="or")
+            return self._combine(q.queries, "or", needs_score)
         if isinstance(q, dsl.DisjunctionMax):
-            return self._combine(q.queries, mode="max")
+            return self._combine(q.queries, "max", needs_score)
         if isinstance(q, dsl.Nested):
-            return ("df", self._score_nested(q))
+            return ("df", self._score_nested(q, needs_score))
         if isinstance(q, dsl.Exists):
-            ds = self._exists_docset(q.field)
-            if ds == NONE:
-                return ("none", None)
-            return ("df", ds.withColumn("score",
-                                        F.lit(float(q.score))))
+            return self._score_exists(q)
         if isinstance(q, dsl.Filter):
-            inner = self._score(q.query)
-            fset = self._docset(q.filter)
-            return self._apply_filter(inner, fset, anti=False)
+            return self._apply_filter(self._score(q.query, needs_score),
+                                      self._score(q.filter, False),
+                                      False, needs_score)
         if isinstance(q, dsl.Exclude):
-            inner = self._score(q.query)
-            eset = self._docset(q.exclude)
-            return self._apply_filter(inner, eset, anti=True)
+            return self._apply_filter(self._score(q.query, needs_score),
+                                      self._score(q.exclude, False),
+                                      True, needs_score)
         raise TypeError(type(q))
 
-    def _apply_filter(self, inner: Scored, fset: DocSet,
-                      anti: bool) -> Scored:
-        kind, val = inner
-        if kind == "none":
-            return inner
-        if not anti:
-            if fset == NONE:
-                return ("none", None)
-            if fset == ALL:
-                return inner
-            if kind == "all":
-                return ("df", fset.select("doc_id")
-                        .withColumn("score", F.lit(float(val))))
-            return ("df", val.join(self._sized(fset), "doc_id",
-                                    "left_semi"))
-        # anti (Exclude)
-        if fset == NONE:
-            return inner
-        if fset == ALL:
-            return ("none", None)
-        if kind == "all":
-            frame = self._universe() \
-                .join(self._sized(fset), "doc_id", "left_anti") \
-                .withColumn("score", F.lit(float(val)))
-            return ("df", frame)
-        return ("df", val.join(self._sized(fset), "doc_id",
-                                    "left_anti"))
+    #: filter branches at or below this many rows may be broadcast by
+    #: the planner (~8M ids ≈ 64 MB framed); above it the semi/anti
+    #: join is pinned to shuffled-hash.  Spark's own choice is blind
+    #: here — a mapInArrow output has no size estimate, so without the
+    #: hint the planner happily broadcasts a head term's matches (78%
+    #: of the corpus in the bench's `not` query; at web scale a
+    #: multi-GB broadcast).  Guide §3.1: pick the strategy deliberately.
+    DOCSET_BROADCAST_MAX = 8 << 20
 
-    def _combine(self, children: Tuple[dsl.Query, ...], mode: str) -> Scored:
+    def _sized(self, b: DataFrame) -> DataFrame:
+        n = getattr(b, "_rsx_rows", None)
+        if n is not None and n > self.DOCSET_BROADCAST_MAX:
+            return b.hint("shuffle_hash")
+        return b
+
+    def _apply_filter(self, inner: Scored, fset: Scored, anti: bool,
+                      needs_score: bool) -> Scored:
+        """``inner`` restricted to the docs of the unscored ``fset``
+        (Filter), or to the docs outside it (Exclude), with the
+        Full/Empty folds (boolean_query.rs:131-321): Exclude(x, All)
+        and Filter(x, None) are None, Filter(x, All) and
+        Exclude(x, None) are x, and an unscored Filter(All, x) is x
+        itself — its frame, so x's join hint survives."""
+        kind, val = inner
+        fkind, fval = fset
+        if kind == "none" or fkind == ("all" if anti else "none"):
+            return ("none", None)
+        if fkind != "df":
+            return inner
+        how = "left_anti" if anti else "left_semi"
+        if kind == "df":
+            return ("df", val.join(self._sized(fval), "doc_id", how))
+        if anti:
+            # root-negation fallback: universe minus matches
+            # (rocksdb/search/mod.rs:64-74)
+            frame = self._universe().join(self._sized(fval), "doc_id", how)
+        elif not needs_score:
+            return fset
+        else:
+            frame = fval.select("doc_id")
+        return ("df", frame.withColumn("score", F.lit(float(val))))
+
+    def _combine(self, children: Tuple[dsl.Query, ...], mode: str,
+                 needs_score: bool = True) -> Scored:
         """Avg (and/or) and Max combinators over child frames.
 
         Avg divides by the NUMBER OF CHILDREN, non-matching children
         contribute 0.0 (score_function.rs:80-88 +
-        rocksdb/search/mod.rs:112-116).
+        rocksdb/search/mod.rs:112-116).  A None child makes an ``and``
+        None; unscored, an All child makes an ``or``/``dis_max`` All
+        and a lone remaining child frame is the result itself
+        (boolean_query.rs:131-321).  Children evaluate in order and
+        stop at the first that folds the whole node, so no later
+        child's dictionary scan runs (an unanchored selector's is a
+        Spark job).
         """
-        scored = [self._score(c) for c in children]
-        n = len(scored)
-        if n == 0:
-            return ("none", None)
-        if any(k == "none" for k, _ in scored) and mode == "and":
-            return ("none", None)
+        n = len(children)
+        scored = []
+        for c in children:
+            kind, val = self._score(c, needs_score)
+            if (kind == "none" and mode == "and") or (
+                    kind == "all" and mode != "and" and not needs_score):
+                return (kind, val)
+            scored.append((kind, val))
         consts = [v for k, v in scored if k == "all"]
         frames = [v for k, v in scored if k == "df"]
-        if mode == "and":
-            if not frames:
-                return ("all", sum(consts) / n)
-            merged = self._grouped(frames)
-            matched = merged.where(F.col("n_matched") == len(frames))
-            score = ((F.col("sum_score") + F.lit(float(sum(consts))))
-                     / F.lit(float(n)))
-            return ("df", matched.select("doc_id", score.alias("score")))
-        if mode == "or":
-            if not frames:
-                if not consts:
-                    return ("none", None)
-                return ("all", sum(consts) / n)
-            merged = self._grouped(frames)
-            score = ((F.col("sum_score") + F.lit(float(sum(consts))))
-                     / F.lit(float(n)))
-            frame = merged.select("doc_id", score.alias("score"))
-            if consts:   # an All child ⇒ every doc matches
-                rest = (self._universe()
-                        .join(merged.select("doc_id"), "doc_id", "left_anti")
-                        .withColumn("score",
-                                    F.lit(float(sum(consts)) / float(n))))
-                frame = frame.unionByName(rest)
-            return ("df", frame)
-        # mode == "max"
         if not frames:
-            if not consts:
+            if not consts:       # an empty ``terms`` list
                 return ("none", None)
-            return ("all", max(consts))
-        cmax = max(consts) if consts else None
-        union = frames[0]
-        for f in frames[1:]:
-            union = union.unionByName(f)
-        merged = union.groupBy("doc_id").agg(F.max("score").alias("score"))
-        if cmax is not None:
+            return ("all", max(consts) if mode == "max"
+                    else sum(consts) / n)
+        if not needs_score and len(frames) == 1:
+            return ("df", frames[0])
+        if mode == "max":
+            cmax = max(consts) if consts else None
+            union = frames[0]
+            for f in frames[1:]:
+                union = union.unionByName(f)
+            merged = union.groupBy("doc_id").agg(
+                F.max("score").alias("score"))
+            if cmax is None:
+                return ("df", merged)
             merged = merged.select(
                 "doc_id", F.greatest(F.col("score"),
                                      F.lit(float(cmax))).alias("score"))
             rest = (self._universe()
                     .join(merged.select("doc_id"), "doc_id", "left_anti")
                     .withColumn("score", F.lit(float(cmax))))
-            merged = merged.unionByName(rest)
-        return ("df", merged)
+            return ("df", merged.unionByName(rest))
+        merged = self._grouped(frames)
+        score = ((F.col("sum_score") + F.lit(float(sum(consts))))
+                 / F.lit(float(n)))
+        if mode == "and":
+            matched = merged.where(F.col("n_matched") == len(frames))
+            return ("df", matched.select("doc_id", score.alias("score")))
+        frame = merged.select("doc_id", score.alias("score"))
+        if consts:   # an All child ⇒ every doc matches
+            rest = (self._universe()
+                    .join(merged.select("doc_id"), "doc_id", "left_anti")
+                    .withColumn("score",
+                                F.lit(float(sum(consts)) / float(n))))
+            frame = frame.unionByName(rest)
+        return ("df", frame)
 
     def _grouped(self, frames: List[DataFrame]) -> DataFrame:
         union = frames[0]

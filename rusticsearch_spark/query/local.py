@@ -602,7 +602,7 @@ class LocalSearcher:
 
     def _exists_ids(self, field: str) -> np.ndarray:
         """Sorted doc_ids whose stored ``field`` is present — non-null
-        and, for list columns, non-empty (engine._exists_docset
+        and, for list columns, non-empty (engine._score_exists
         mirror).  One lazy column-pruned pyarrow read per field,
         cached; unknown fields (never stored) match nothing."""
         cache = getattr(self, "_exists_cache", None)

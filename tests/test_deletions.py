@@ -55,8 +55,8 @@ def test_counts_subtract_deletions(spark, del_index, oracle):
     eng0 = SearchEngine(spark, del_index)
     q = {"term": {"lang": "en"}}
     n0 = eng0.count(q)
-    victim = eng0.docs.join(
-        eng0._docset(eng0.parse(q)), "doc_id").first()
+    _, matched = eng0._score(eng0.parse(q), needs_score=False)
+    victim = eng0.docs.join(matched, "doc_id").first()
     delete_documents(spark, del_index, doc_ids=[victim.doc_id])
     eng = SearchEngine(spark, del_index)
     assert eng.count(q) == n0 - 1        # term fast path must defer

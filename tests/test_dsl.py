@@ -165,3 +165,15 @@ def test_boost_recursive_multiply():
     b = dsl.boost(q, 2.0)
     assert b == Disjunction((Term("text", "x", TermScorer(boost=4.0)),
                              All(6.0)))
+
+
+@pytest.mark.parametrize("query", [{"and": []}, {"or": []},
+                                   {"dis_max": {"queries": []}}],
+                         ids=["and", "or", "dis_max"])
+def test_empty_combinator_rejected(query):
+    # an empty combinator has no answer every lane agrees on (an
+    # average over zero children); an empty ``terms`` value list is
+    # no combinator and still parses
+    with pytest.raises(QueryParseError):
+        parse(query, CTX)
+    assert parse({"terms": {"lang": []}}, CTX) == Disjunction(())

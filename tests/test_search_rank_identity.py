@@ -11,6 +11,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+_PREFIX = {"prefix": {"text": "sc"}}
+_LANG_EN = {"term": {"lang": "en"}}
+
 QUERIES = [
     ("match_or", {"match": {"text": "spark query"}}),
     ("match_and", {"match": {"text": {"query": "spark query",
@@ -21,6 +24,8 @@ QUERIES = [
     ("term_exact", {"term": {"text": "window"}}),
     ("term_lang", {"term": {"lang": "en"}}),
     ("terms_in", {"terms": {"lang": ["en", "fr", "zh"]}}),
+    # an empty value list is no combinator: it parses, matches nothing
+    ("terms_empty", {"terms": {"lang": []}}),
     ("prefix", {"prefix": {"text": "sc"}}),
     ("and_combo", {"and": [{"match": {"text": "query"}},
                            {"term": {"lang": "en"}}]}),
@@ -35,6 +40,17 @@ QUERIES = [
                                      "fields": ["text^2", "lang"]}}),
     ("match_all", {"match_all": {"boost": 1.5}}),
     ("match_none", {"match_none": {}}),
+    # generic trees (a non-Term leaf): per-child frames and joins
+    ("and_prefix_term", {"and": [_PREFIX, _LANG_EN]}),
+    ("or_prefix_term", {"or": [_PREFIX, _LANG_EN]}),
+    ("filtered_prefix", {"filtered": {"query": {"term": {"text": "merge"}},
+                                      "filter": _PREFIX}}),
+    ("not_or", {"not": {"or": [_PREFIX, _LANG_EN]}}),
+    ("constant_score_prefix", {"constant_score": {"filter": _PREFIX}}),
+    ("or_match_all_term", {"or": [{"match_all": {}}, _LANG_EN]}),
+    ("dis_max_match_all_prefix", {"dis_max": {"queries": [
+        {"match_all": {}}, _PREFIX]}}),
+    ("not_match_all", {"not": {"match_all": {}}}),
 ]
 
 
@@ -309,3 +325,41 @@ def test_term_tree_shapes_match_generic_and_oracle(engine, oracle, name,
     assert len(fused) > 0, name
     _assert_matches_oracle(fused, generic, f"{name}: fused vs generic")
     _assert_matches_oracle(fused, oracle.search(q, k=12), f"{name}: oracle")
+
+
+_SELECTOR_TREES = [
+    {"and": [{"wildcard": {"text": "s*"}}, _LANG_EN]},
+    {"or": [{"fuzzy": {"text": "spak"}}, {"wildcard": {"text": "ta?le"}}]},
+    {"not": {"or": [{"fuzzy": {"text": "merg"}},
+                    {"exists": {"field": "nope"}}]}},
+    {"and": [{"exists": {"field": "lang"}},
+             {"not": {"wildcard": {"text": "*can"}}}]},
+    {"filtered": {"query": {"fuzzy": {"text": "qury"}},
+                  "filter": {"exists": {"field": "text"}}}},
+]
+
+
+@pytest.mark.parametrize("query", _SELECTOR_TREES,
+                         ids=[f"tree{i}" for i in range(len(_SELECTOR_TREES))])
+def test_selector_trees_count_equals_search(engine, oracle, index_dir,
+                                            query):
+    """Wildcard, fuzzy and exists leaves (outside the oracle) under
+    and/or/not: the unscored count, the scored search and the
+    driver-local searcher agree on the number of matches."""
+    from rusticsearch_spark.query.local import LocalSearcher
+    n = engine.count(query)
+    assert n == len(engine.search(query, size=len(oracle.doc_ids))
+                    .collect())
+    assert n == LocalSearcher(index_dir).count(query)
+
+
+@pytest.mark.parametrize("query", [{"and": []}, {"or": []},
+                                   {"dis_max": {"queries": []}}],
+                         ids=["and", "or", "dis_max"])
+def test_empty_combinator_rejected_in_every_lane(engine, index_dir, query):
+    from rusticsearch_spark.query.dsl import QueryParseError
+    from rusticsearch_spark.query.local import LocalSearcher
+    local = LocalSearcher(index_dir)
+    for run in (engine.count, engine.search, local.count, local.search):
+        with pytest.raises(QueryParseError):
+            run(query)

@@ -70,7 +70,9 @@ def test_prefix_upper_bound_edge_cases():
 def test_engine_uses_dict_reader(engine):
     assert engine.dict_reader is not None
     # term count goes through the dictionary (no Spark job): compare
-    # with the docset-based count
+    # with the count of the unscored term frame
     n_meta = engine.count({"term": {"text": "merge"}})
-    ds = engine._docset(engine.parse({"term": {"text": "merge"}}))
-    assert n_meta == ds.distinct().count() > 0
+    kind, frame = engine._score(engine.parse({"term": {"text": "merge"}}),
+                                needs_score=False)
+    assert kind == "df"
+    assert n_meta == frame.distinct().count() > 0
