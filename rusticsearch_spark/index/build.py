@@ -39,6 +39,7 @@ skips committed jobs (the anti-join is on the lineage table).
 
 from __future__ import annotations
 
+import os
 import time
 from typing import Dict, List, NamedTuple, Optional, Tuple
 
@@ -299,7 +300,9 @@ def _posting_rows(ids: DataFrame, config: IndexConfig,
     """Raw (field_ord, term, doc_id, len_byte) occurrence rows,
     unioned over fields.  Length quantization runs as a native SQL
     expression (agrees exactly with the f32 reference quantization
-    over the whole realistic range — validated in tests); the explode
+    for every count up to 200,000 — pinned by
+    tests/test_codec_similarity.py::test_length_byte_matches_the_sql_expression);
+    the explode
     and everything after it is JVM-side whole-stage codegen.
 
     The field rides as a small ordinal (position in
@@ -655,15 +658,123 @@ def write_postings(spark: SparkSession, rows: DataFrame, docs: DataFrame,
             {f: int(tok_m[a] or 0) for f, a in tok_alias.items()})
 
 
-def finish_job(spark: SparkSession, rows: DataFrame, written: WrittenDocs,
-               layout: IndexLayout, config: IndexConfig, job: int,
-               t0: float, extra: Optional[dict] = None) -> dict:
-    """Index a job whose docs table is written (``write_postings``),
-    then write its field stats and commit its lineage row LAST.  The
-    field stats cost no job: doc counts were observed on the docs
-    write, token totals on the term_dict write."""
-    n_blocks, tokens = write_postings(spark, rows, written.docs, layout,
-                                      config, job, written.n_docs)
+def write_postings_driver(docs, layout: IndexLayout, config: IndexConfig,
+                          registry: AnalyzerRegistry, job: int
+                          ) -> Tuple[int, Dict[str, int]]:
+    """``write_postings`` on the driver, for a job small enough that
+    Spark's fixed per-job and per-task costs outweigh its data:
+    pyarrow and numpy, zero Spark jobs.  ``docs`` is the job's written
+    docs table read back with pyarrow (doc_id, the key, and every
+    field as a scalar string column).
+
+    Every function that decides bytes is the Spark path's: the
+    analyzer chain (``Analyzer.terms``, which the SQL tokenizer path
+    is pinned equal to), ``similarity.length_byte``,
+    ``layout.term_bucket``, the doc_index kbucket hash and the
+    build's encoder (``_encode_partitions_arrow``).  The encoder gets
+    rows sorted as the Spark path sorts them, (tbucket, field_ord,
+    term, segment, doc_id), with a group ordinal for ``gkey``: it only
+    compares adjacent keys.  Writes the postings per ``tbucket=``, the
+    term_dict and the doc_index per ``kbucket=``, in the layout Spark
+    writes.  Returns ``(n_blocks, total_tokens per field)``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..similarity import length_byte
+    from .doc_index import write_doc_index_driver
+    from .layout import term_bucket, write_arrow_table
+
+    doc_ids = docs.column("doc_id").to_numpy()
+    fords: List[np.ndarray] = []
+    terms: List[str] = []
+    row_docs: List[np.ndarray] = []
+    row_lens: List[np.ndarray] = []
+    for ford, (fname, analyzer_name) in enumerate(config.fields.items()):
+        values = docs.column(fname).to_pylist()
+        if analyzer_name is None:
+            # PlainString: the raw value is the one term, len_byte 0
+            toks = [[v] if v is not None else [] for v in values]
+        else:
+            analyze = registry.get(analyzer_name).terms
+            toks = [analyze(v) if v is not None else [] for v in values]
+        counts = np.fromiter(map(len, toks), dtype=np.int64,
+                             count=len(toks))
+        lens = (np.zeros(len(toks), dtype=np.int32)
+                if analyzer_name is None else
+                np.fromiter(map(length_byte, counts.tolist()),
+                            dtype=np.int32, count=len(toks)))
+        terms.extend(t for ts in toks for t in ts)
+        row_docs.append(np.repeat(doc_ids, counts))
+        row_lens.append(np.repeat(lens, counts))
+        fords.append(np.full(int(counts.sum()), ford, dtype=np.int32))
+    field_ord = np.concatenate(fords)
+    tokens = dict(zip(config.fields, np.bincount(
+        field_ord, minlength=len(config.fields)).tolist()))
+    n_blocks = 0
+    # a batch with no tokens still leaves the job's postings dir and
+    # an empty term_dict file, as the Spark write does: the merge and
+    # the readers list both for every job that has docs
+    os.makedirs(layout.job_dir("postings", job), exist_ok=True)
+    term_dict = pa.schema([
+        ("field", pa.string()), ("term", pa.string()),
+        ("tbucket", pa.int32()), ("df", pa.int64()),
+        ("n_blocks", pa.int32()), ("sum_tf", pa.int64())]).empty_table()
+    if terms:
+        term_arr = pa.array(terms, pa.string())
+        uniq = pc.unique(term_arr)
+        tb_of = np.fromiter((term_bucket(t, config.tbuckets)
+                             for t in uniq.to_pylist()),
+                            dtype=np.int32, count=len(uniq))
+        term_ix = pc.index_in(term_arr, value_set=uniq).to_numpy()
+        doc = np.concatenate(row_docs)
+        rows = pa.table({
+            "field_ord": field_ord, "term": term_arr, "term_ix": term_ix,
+            "doc_id": doc, "segment": doc >> SEGMENT_BITS,
+            "tbucket": tb_of[term_ix], "len_byte": np.concatenate(row_lens),
+            "tf": np.ones(len(terms), dtype=np.int32),
+        }).sort_by([("tbucket", "ascending"), ("field_ord", "ascending"),
+                    ("term", "ascending"), ("segment", "ascending"),
+                    ("doc_id", "ascending")])
+        # gkey: the ordinal of the (field_ord, term, segment) group
+        key = np.stack([rows.column(c).to_numpy().astype(np.int64)
+                        for c in ("field_ord", "term_ix", "segment")])
+        change = np.ones(rows.num_rows, dtype=bool)
+        change[1:] = (key[:, 1:] != key[:, :-1]).any(axis=0)
+        rows = rows.append_column("gkey", pa.array(np.cumsum(change)))
+        blocks = pa.Table.from_batches(list(
+            _encode_partitions_arrow(list(config.fields))(rows.to_batches())))
+        n_blocks = blocks.num_rows
+        tb = blocks.column("tbucket").to_numpy()
+        starts = np.flatnonzero(np.diff(tb, prepend=-1))
+        for lo, hi in zip(starts, np.append(starts[1:], tb.size)):
+            write_arrow_table(
+                os.path.join(layout.job_dir("postings", job),
+                             f"tbucket={tb[lo]}"),
+                blocks.slice(lo, hi - lo).drop_columns(["tbucket"]))
+        terms_tbl = blocks.group_by(["field", "term", "tbucket"]).aggregate(
+            [("df_block", "sum"), ("df_block", "count"), ("sum_tf", "sum")])
+        term_dict = pa.table({
+            "field": terms_tbl.column("field"),
+            "term": terms_tbl.column("term"),
+            "tbucket": terms_tbl.column("tbucket"),
+            "df": terms_tbl.column("df_block_sum").cast(pa.int64()),
+            "n_blocks": terms_tbl.column("df_block_count").cast(pa.int32()),
+            "sum_tf": terms_tbl.column("sum_tf_sum").cast(pa.int64()),
+        }, schema=term_dict.schema)
+    write_arrow_table(layout.job_dir("term_dict", job), term_dict.sort_by(
+        [("field", "ascending"), ("term", "ascending")]))
+    write_doc_index_driver(docs.column(config.key_col).to_pylist(), doc_ids,
+                           layout, config, job)
+    return n_blocks, tokens
+
+
+def commit_written(spark: SparkSession, written: "WrittenDocs",
+                   layout: IndexLayout, config: IndexConfig, job: int,
+                   t0: float, n_blocks: int, tokens: Dict[str, int],
+                   extra: Optional[dict] = None) -> dict:
+    """Write an indexed job's field stats, then commit its lineage row
+    LAST.  The field stats cost no job: doc counts were observed on
+    the docs write, token totals on the index half."""
     _write_field_stats(layout.job_dir("field_stats", job),
                        [{"field": f, "total_docs": written.doc_counts[f],
                          "total_tokens": tokens[f]} for f in config.fields])
@@ -676,6 +787,17 @@ def finish_job(spark: SparkSession, rows: DataFrame, written: WrittenDocs,
     }
     layout.commit_job(spark, row)
     return row
+
+
+def finish_job(spark: SparkSession, rows: DataFrame, written: WrittenDocs,
+               layout: IndexLayout, config: IndexConfig, job: int,
+               t0: float, extra: Optional[dict] = None) -> dict:
+    """Index a job whose docs table is written (``write_postings``),
+    then commit it (``commit_written``)."""
+    n_blocks, tokens = write_postings(spark, rows, written.docs, layout,
+                                      config, job, written.n_docs)
+    return commit_written(spark, written, layout, config, job, t0,
+                          n_blocks, tokens, extra)
 
 
 def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,

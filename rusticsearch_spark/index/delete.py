@@ -16,6 +16,7 @@ merge recomputes stats from live docs.
 
 from __future__ import annotations
 
+import os
 import shutil
 from typing import List, Optional
 
@@ -23,6 +24,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .doc_index import key_is_string, resolve_keys, resolve_keys_driver
 from .layout import IndexLayout
 
 
@@ -66,6 +68,37 @@ def write_deletions(layout: IndexLayout, target: DataFrame) -> int:
     return n
 
 
+def write_deletion_ids(layout: IndexLayout, doc_ids: np.ndarray) -> int:
+    """Append ``doc_ids`` as a new deletion list from the driver — no
+    Spark job.  Deletion lists are not gated by lineage (every reader
+    lists the directory), so the list appears whole or not at all: it
+    is written under a dot-named temp dir, which readers skip, and
+    renamed into place.  Writes nothing for no ids; returns the
+    number written."""
+    import pyarrow as pa
+
+    from .layout import write_arrow_table
+    if not doc_ids.size:
+        return 0
+    path = layout.next_deletion_dir()
+    tmp = os.path.join(os.path.dirname(path), "." + os.path.basename(path))
+    shutil.rmtree(tmp, ignore_errors=True)
+    write_arrow_table(tmp, pa.table({"doc_id": pa.array(doc_ids,
+                                                        pa.int64())}))
+    os.replace(tmp, path)
+    return int(doc_ids.size)
+
+
+def retire_doc_ids(layout: IndexLayout, doc_ids) -> int:
+    """Delete ``doc_ids`` on the driver: the ids already on a deletion
+    list are dropped (deleting a deleted doc is a no-op,
+    document_index.rs:96-110) and the rest written as one new list.
+    Returns the number written."""
+    ids = np.unique(np.asarray(doc_ids, dtype=np.int64))
+    ids = ids[~np.isin(ids, deleted_doc_ids(layout.deletion_dirs()))]
+    return write_deletion_ids(layout, ids)
+
+
 def committed_docs(spark: SparkSession, layout: IndexLayout,
                    jobs: List[int]) -> Optional[DataFrame]:
     """The docs tables of the committed ``jobs``, or None if none
@@ -101,6 +134,16 @@ def delete_documents(spark: SparkSession, index_dir: str,
     layout = IndexLayout(index_dir)
     config = layout.read_config()
     jobs = layout.completed_jobs()        # the one lineage snapshot
+    if not config.nested_paths:
+        # no child rows to cascade to: resolve and write on the driver
+        # (zero Spark jobs) when the ids are given, or the keys are
+        # strings the driver hashes as Spark does
+        if keys is None and doc_ids is not None:
+            return retire_doc_ids(layout, doc_ids)
+        if keys is not None and key_is_string(layout, config, jobs):
+            hits = resolve_keys_driver(layout, config, jobs,
+                                       [str(k) for k in keys])
+            return retire_doc_ids(layout, hits.column("doc_id").to_numpy())
     if keys is not None:
         # PK lookup through the doc_index sidecar: reads only the
         # kbucket partitions the keys hash into (document_index.rs
@@ -108,7 +151,6 @@ def delete_documents(spark: SparkSession, index_dir: str,
         # are shipped as strings; resolve_keys casts them back to the
         # INDEXED key type before hashing so non-string keys (e.g. a
         # long PK) land in the right kbucket partitions.
-        from .doc_index import resolve_keys
         probe = [str(k) for k in keys]
         keys_df = spark.createDataFrame(
             [(k,) for k in probe], f"{config.key_col} string")

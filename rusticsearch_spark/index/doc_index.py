@@ -21,8 +21,9 @@ that are refused by the ``IndexLayout.read_config`` format gate.
 from __future__ import annotations
 
 import os
-from typing import Iterable, List, Optional
+from typing import Iterable, List, Optional, Tuple
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -160,6 +161,13 @@ def key_is_string(layout: IndexLayout, config: IndexConfig,
     return _is_string(key_arrow_type(layout, config, jobs))
 
 
+def key_bucket(key: Optional[str], kbuckets: int) -> int:
+    """The kbucket Spark's ``key_bucket_col`` gives a string key, on
+    the driver.  A null key hashes to the seed, 42, as
+    ``F.xxhash64`` of a null does."""
+    return (42 if key is None else xxhash64_str(key)) % kbuckets
+
+
 def key_buckets(key_values: Iterable[Optional[str]],
                 kbuckets: int) -> List[int]:
     """The kbuckets string keys hash into, on the driver.  Stops as
@@ -168,10 +176,68 @@ def key_buckets(key_values: Iterable[Optional[str]],
     out = set()
     for v in key_values:
         if v is not None:
-            out.add(xxhash64_str(v) % kbuckets)
+            out.add(key_bucket(v, kbuckets))
             if len(out) == kbuckets:
                 break
     return sorted(out)
+
+
+def _parquet_files(path: str) -> List[str]:
+    """The data files of one parquet directory (Spark's ``_SUCCESS``
+    and hidden temp files excluded)."""
+    try:
+        names = sorted(os.listdir(path))
+    except FileNotFoundError:
+        return []
+    return [os.path.join(path, f) for f in names
+            if not f.startswith(("_", "."))]
+
+
+def _touched_files(layout: IndexLayout, config: IndexConfig,
+                   jobs: List[int], want: List[str]) -> List[Tuple[int, str]]:
+    """``(job, file)`` of every doc_index file in a ``kbucket=`` dir
+    the keys ``want`` hash into, in ``jobs`` order."""
+    buckets = key_buckets(want, config.kbuckets)
+    return [(j, f) for j in jobs for b in buckets
+            for f in _parquet_files(os.path.join(
+                layout.job_dir("doc_index", j), f"kbucket={b}"))]
+
+
+def resolve_keys_driver(layout: IndexLayout, config: IndexConfig,
+                        jobs: List[int], keys: Iterable[Optional[str]]):
+    """String keys → ``(job, key, doc_id)`` rows of every committed
+    ``jobs`` document carrying one of them, on the driver with
+    pyarrow — zero Spark jobs.  Reads only the ``kbucket=`` dirs the
+    keys hash into, one row group at a time (the driver holds one row
+    group and the hits, whatever the size of the sidecar), and keeps
+    the rows ``is_in`` the keys; rows come in ``jobs`` order.  Its
+    cost grows with the bytes of those dirs, not with the keys: the
+    resolve sweep (``bench_extra.py --resolve-sweep``,
+    BENCH/resolve_keys_r13.jsonl, ``local[4]``) read 0.99 GB of
+    touched sidecar for 250 keys in 8.4-8.7 s, against 38.9-43.7 s for
+    :func:`resolve_keys` and the Spark deletion write.  Serves string
+    key columns only (the caller checks :func:`key_is_string`); null
+    keys match nothing, as in :func:`resolve_keys`."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    key = config.key_col
+    want = sorted({k for k in keys if k is not None})
+    value_set = pa.array(want, pa.string())
+    parts = [pa.table({"job": pa.array([], pa.int64()),
+                       key: pa.array([], pa.string()),
+                       "doc_id": pa.array([], pa.int64())})]
+    for j, f in _touched_files(layout, config, jobs, want):
+        pf = pq.ParquetFile(f)
+        for g in range(pf.num_row_groups):
+            tbl = pf.read_row_group(g, columns=[key, "doc_id"])
+            tbl = tbl.filter(pc.is_in(tbl.column(key), value_set=value_set))
+            if tbl.num_rows:
+                parts.append(pa.table({
+                    "job": np.full(tbl.num_rows, j, dtype=np.int64),
+                    key: tbl.column(key).cast(pa.string()),
+                    "doc_id": tbl.column("doc_id")}))
+    return pa.concat_tables(parts)
 
 
 def lookup_key_driver(layout: IndexLayout, config: IndexConfig,
@@ -182,18 +248,33 @@ def lookup_key_driver(layout: IndexLayout, config: IndexConfig,
     RocksDB get, document_index.rs:71-91).  Serves string key columns
     only: the caller checks :func:`key_is_string` once per index and
     sends other keys to the Spark scan."""
-    import pyarrow.dataset as ds
-    bucket = xxhash64_str(key) % config.kbuckets
-    out = []
-    for j in jobs:
-        part = os.path.join(layout.job_dir("doc_index", j),
-                            f"kbucket={bucket}")
-        if not os.path.isdir(part):
-            continue
-        tbl = ds.dataset(part, format="parquet").to_table(
-            filter=ds.field(config.key_col) == key, columns=["doc_id"])
-        out.extend((j, int(x)) for x in tbl.column("doc_id").to_pylist())
-    return out
+    tbl = resolve_keys_driver(layout, config, jobs, [key])
+    return list(zip(tbl.column("job").to_pylist(),
+                    tbl.column("doc_id").to_pylist()))
+
+
+def write_doc_index_driver(keys: List[Optional[str]], doc_ids,
+                           layout: IndexLayout, config: IndexConfig,
+                           job: int) -> None:
+    """:func:`write_doc_index` on the driver for a small job: the same
+    ``kbucket=`` dirs of ``(key, doc_id)`` files, no Spark job.  The
+    kbucket is Spark's, null keys included (:func:`key_bucket`)."""
+    import pyarrow as pa
+
+    from .layout import write_arrow_table
+    buckets = np.fromiter((key_bucket(k, config.kbuckets) for k in keys),
+                          dtype=np.int64, count=len(keys))
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    keys_arr = pa.array(keys, pa.string())
+    order = np.argsort(buckets, kind="stable")
+    starts = np.flatnonzero(np.diff(buckets[order], prepend=-1))
+    for lo, hi in zip(starts, np.append(starts[1:], order.size)):
+        take = order[lo:hi]
+        write_arrow_table(
+            os.path.join(layout.job_dir("doc_index", job),
+                         f"kbucket={buckets[take[0]]}"),
+            pa.table({config.key_col: keys_arr.take(pa.array(take)),
+                      "doc_id": doc_ids[take]}))
 
 
 def resolve_keys(spark: SparkSession, layout: IndexLayout,

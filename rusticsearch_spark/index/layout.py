@@ -128,12 +128,18 @@ def write_small_table(path: str, rows: List[dict], schema=None) -> None:
     Readers (spark.read.parquet) see the same layout Spark writes.
     """
     import pyarrow as pa
-    import pyarrow.parquet as pq
-    os.makedirs(path, exist_ok=True)
     cols = list(rows[0].keys())
     data = {c: [r[c] for r in rows] for c in cols}
-    tbl = (pa.table(data, schema=schema) if schema is not None
-           else pa.table(data))
+    write_arrow_table(path, pa.table(data, schema=schema)
+                      if schema is not None else pa.table(data))
+
+
+def write_arrow_table(path: str, tbl) -> None:
+    """Write a pyarrow table as the one file of the parquet directory
+    ``path``, without a Spark job (the driver-side writers of the
+    write path all come through here)."""
+    import pyarrow.parquet as pq
+    os.makedirs(path, exist_ok=True)
     # temp-write + rename: a crash mid-write must never leave a torn
     # parquet at the final name — lineage commits rely on this being
     # atomic (a torn lineage file would wedge every later
@@ -326,9 +332,12 @@ class IndexLayout:
         root = self.table("deletions")
         if not os.path.isdir(root):
             return []
+        # a dot-named dir is a list still being written (see
+        # delete.write_deletion_ids): not a deletion list yet
         return sorted(
             os.path.join(root, d) for d in os.listdir(root)
-            if os.path.isdir(os.path.join(root, d)))
+            if not d.startswith(".")
+            and os.path.isdir(os.path.join(root, d)))
 
     def next_deletion_dir(self) -> str:
         dirs = self.deletion_dirs()

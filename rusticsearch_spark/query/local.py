@@ -31,6 +31,12 @@ from ..similarity import bm25_f32, lengths_from_bytes, tfidf_f32
 from ..analysis.analyzers import AnalyzerRegistry, parse_analysis_settings
 from . import dsl
 
+#: the block-table columns the searcher loads
+_POSTINGS_READ = pa.schema([
+    ("field", pa.string()), ("term", pa.string()), ("segment", pa.int64()),
+    ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary()),
+    ("len_bytes", pa.binary())])
+
 _EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 Frame = Tuple[np.ndarray, np.ndarray]      # (doc_ids sorted-unique, scores)
 
@@ -155,11 +161,10 @@ class LocalSearcher:
         post_dirs = layout.committed_dirs("postings", jobs=wanted)
         docs_dirs = layout.committed_dirs("docs", jobs=wanted)
         # a job with no postings dir (an empty streaming batch) adds
-        # no postings
+        # no postings; nor does one whose batch had no tokens (a dir
+        # with no data file), which the fixed schema reads as 0 rows
         tbl = pa.concat_tables([
-            pq.read_table(d, columns=["field", "term", "segment",
-                                      "doc_bytes", "tf_bytes",
-                                      "len_bytes"])
+            pq.read_table(d, schema=_POSTINGS_READ)
             for d in post_dirs]) if post_dirs else None
         # Vectorized shard load: order the BLOCK rows by
         # ((field, term), segment) — segments own disjoint doc-id

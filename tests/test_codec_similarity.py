@@ -70,6 +70,20 @@ def test_length_byte():
     assert sim.length_byte(2) == 1
 
 
+def test_length_byte_matches_the_sql_expression(spark):
+    """The build quantizes lengths with ``length_byte_sql`` (double
+    math) on Spark and with ``length_byte`` (f32 math) on the driver
+    (``build.write_postings_driver``): both must give every token count
+    up to 200,000 the same byte (from n = 7,396 on, both clamp to 255)."""
+    from pyspark.sql import functions as F
+    n = 200_000
+    got = np.asarray([r.b for r in spark.range(n + 1).orderBy("id").select(
+        F.expr(sim.length_byte_sql("id")).alias("b")).collect()])
+    want = np.fromiter(map(sim.length_byte, range(n + 1)), dtype=np.int64)
+    assert got.size == n + 1
+    assert np.flatnonzero(got != want).tolist() == []
+
+
 def test_length_from_byte():
     assert sim.length_from_byte(0) == np.float32(1.0)
     assert sim.length_from_byte(None) == np.float32(1.0)

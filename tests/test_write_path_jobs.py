@@ -6,11 +6,15 @@ depend on the host).  Each call here should run only the jobs that
 write data, plus the few reads no driver-side read can replace:
 
 * ``write_job``: the docs, doc_index, postings and term_dict writes;
-* an upsert batch: ``write_job``'s four, the kbucket listing of the
-  doc_index sidecar, the broadcast of the written keys and the
-  deletion-list write;
-* ``delete_documents``: the kbucket listing, the broadcast of the
-  existing deletions and the deletion-list write;
+* an upsert batch whose key and fields are scalar strings: its docs
+  write only.  Key resolution, the deletion list, postings, term_dict
+  and the doc_index sidecar are written on the driver;
+* an upsert batch with an array field, which only the Spark path
+  analyzes: ``write_job``'s four, the kbucket listing of the doc_index
+  sidecar, the broadcast of the written keys and the deletion-list
+  write;
+* ``delete_documents`` by key: none — keys resolve through the
+  doc_index sidecar on the driver, which writes the list too;
 * a full merge: the schema-merging docs read, the broadcast of the
   deletion lists, then ``write_job``'s four writes;
 * ``SearchEngine`` open: the postings and docs schema reads — lineage,
@@ -100,7 +104,7 @@ def write_path(spark, webtext, tmp_path_factory):
                 [(k, f"updated text {i}", "en") for i, k in enumerate(upd)]
                 + [(k, "fresh text", "fr") for k in new],
                 "url string, text string, lang string")
-            _, jobs["upsert_batch"] = _count_jobs(
+            upserted, jobs["upsert_batch"] = _count_jobs(
                 spark, lambda: StreamingIngester(
                     spark, idx, upsert=True).process_batch(batch, 0))
             gone = urls[20:25]
@@ -117,14 +121,24 @@ def write_path(spark, webtext, tmp_path_factory):
             pending = {str(q): eng.count(q) for q in _COUNT_QUERIES}
             _, jobs["full_merge"] = _count_jobs(
                 spark, lambda: maintenance(spark, idx, max_jobs=0))
+            merged = SearchEngine(spark, idx)
+            merged_counts = {str(q): merged.count(q) for q in _COUNT_QUERIES}
+            # the same keys again, with an array-valued plain field
+            arrays = spark.createDataFrame(
+                [(k, f"array text {i}", ["en", "fr"])
+                 for i, k in enumerate(upd + new)],
+                "url string, text string, lang array<string>")
+            array_batch, jobs["upsert_batch_array_field"] = _count_jobs(
+                spark, lambda: StreamingIngester(
+                    spark, idx, upsert=True).process_batch(arrays, 1))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    merged = SearchEngine(spark, idx)
     return {"jobs": jobs, "gets": gets, "read_paths": read_paths,
+            "paths": {"upsert_batch": upserted.postings,
+                      "upsert_batch_array_field": array_batch.postings},
             "n_deleted": n_deleted, "upd": upd, "gone": gone,
             "pending_counts": pending,
-            "merged_counts": {str(q): merged.count(q)
-                              for q in _COUNT_QUERIES}}
+            "merged_counts": merged_counts}
 
 
 def test_write_job_runs_only_its_four_writes(write_path):
@@ -132,12 +146,18 @@ def test_write_job_runs_only_its_four_writes(write_path):
 
 
 def test_upsert_batch_jobs(write_path):
-    assert write_path["jobs"]["upsert_batch"] == 7
+    assert write_path["paths"]["upsert_batch"] == "driver"
+    assert write_path["jobs"]["upsert_batch"] == 1
+
+
+def test_upsert_batch_with_an_array_field_runs_the_spark_path(write_path):
+    assert write_path["paths"]["upsert_batch_array_field"] == "spark"
+    assert write_path["jobs"]["upsert_batch_array_field"] == 7
 
 
 def test_delete_documents_jobs(write_path):
     assert write_path["n_deleted"] == len(write_path["gone"])
-    assert write_path["jobs"]["delete"] == 3
+    assert write_path["jobs"]["delete"] == 0
 
 
 def test_full_merge_jobs(write_path):
