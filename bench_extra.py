@@ -8,13 +8,15 @@ captured without touching bench.py.  Methodology per query matches
 bench.py exactly (warmup + timed ``.collect()`` of the top-10 frame);
 additionally each timed query runs inside its own job group so the
 per-query Spark job count is exact.  Each shape's ``count(q)`` is
-timed and counted the same way, next to its ``search(q)``.
+timed and counted the same way, next to its ``search(q)``, and so is
+the planning alone (``engine.search(q)`` without the collect, no Spark
+job).  ``EXTRA_QUERIES`` (a 64-term ``match``) follow the bench shapes.
 
 Usage:
     python bench_extra.py [--plans-dir plans/r07 --suffix before]
 Outputs one JSON line per query:
     {"query": name, "median_sec": s, "runs": [...], "n_jobs": j,
-     "n_stages_total": st, "n_tasks_total": t,
+     "n_stages_total": st, "n_tasks_total": t, "plan_median_ms": ms,
      "count_median_sec": s, "count_n_jobs": j, ...}
 
 Write-path sweep (the evidence behind the driver write path):
@@ -39,6 +41,18 @@ resolve on the driver and through Spark (``delete.key_is_string``
 patched to False), three times each,
 interleaved.  One JSON line per call, with the bytes of the sidecar
 files the keys touch, wall time and Spark jobs.
+
+Decode-task sweep (the evidence behind
+``SearchEngine.POSTINGS_PER_DECODE_TASK``):
+    SPARK_GRAFT_CPUS=4 SPARK_GRAFT_SHUFFLE=4 \
+        python bench_extra.py --decode-sweep OUT.jsonl
+Builds indexes of the corpus x1, x4 and x16 and runs ``match`` queries
+of 1 to 31 of its words (postings read from disk) with the decode in
+one task, sized by the constant, and with the scan's own split (the
+constant patched to 2^62, as it is, and patched to 1), three times
+each, interleaved, after one warm-up of each.  One JSON line per
+call, with the query's postings (Σdf), wall time, and Spark jobs and
+tasks.
 """
 
 from __future__ import annotations
@@ -83,6 +97,16 @@ BENCH_QUERIES = [
                                  "fields": ["text^2", "lang"]}}),
     ("not", {"not": {"term": {"lang": "en"}}}),
     ("count_all", None),
+]
+
+#: past the bench shapes: a ``match`` of 64 distinct terms (the
+#: corpus's 31 words and 33 it lacks), one fused decode of 64 leaves
+EXTRA_QUERIES = [
+    ("match_64", {"match": {"text": " ".join(
+        "a agg batch big column customer data dup fast filter group hash "
+        "join key line merge order part query row scan slow small sort "
+        "spark stream table the value vector window".split()
+        + [f"unseen{i}" for i in range(33)])}}),
 ]
 
 
@@ -385,6 +409,75 @@ def resolve_sweep(spark, out_path: str) -> None:
         shutil.rmtree(work, ignore_errors=True)
 
 
+DECODE_REPLICATES = (1, 4, 16)
+DECODE_WORDS = (1, 2, 4, 8, 16, 31)
+DECODE_REPS = 3
+
+
+def decode_sweep(spark, out_path: str) -> None:
+    """See the module docstring: one decode task against the scan's
+    own split, by the query's posting count."""
+    from rusticsearch_spark.index.build import build_index
+    from rusticsearch_spark.index.layout import IndexConfig
+    from rusticsearch_spark.query.engine import SearchEngine
+    from rusticsearch_spark.synth.webtext import webtext_table
+
+    sc = spark.sparkContext
+    words = EXTRA_QUERIES[0][1]["match"]["text"].split()[:31]
+    work = f"/tmp/rusticsearch_decode_sweep_{CPUS}"
+    real = SearchEngine.POSTINGS_PER_DECODE_TASK
+    per_task = {"one": 1 << 62, "sized": real, "split": 1}
+    out = open(out_path, "w")
+    try:
+        for rep_corpus in DECODE_REPLICATES:
+            idx = os.path.join(work, f"x{rep_corpus}")
+            shutil.rmtree(idx, ignore_errors=True)
+            build_index(spark, webtext_table(spark, SF_DIR,
+                                             replicate=rep_corpus), idx,
+                        IndexConfig(key_col="url",
+                                    fields={"text": "standard",
+                                            "lang": None},
+                                    n_buckets=2 * CPUS, tbuckets=4,
+                                    shuffle_partitions=CPUS))
+            eng = SearchEngine(spark, idx)
+            for n_words in DECODE_WORDS:
+                q = {"match": {"text": " ".join(words[:n_words])}}
+                postings = sum(eng.dict_reader.lookup_one("text", w)[0]
+                               for w in words[:n_words])
+                for mode in per_task:
+                    SearchEngine.POSTINGS_PER_DECODE_TASK = per_task[mode]
+                    eng.search(q, size=10).collect()
+                for rep in range(DECODE_REPS):
+                    order = list(per_task)[rep % 3:] + \
+                        list(per_task)[:rep % 3]
+                    for mode in order:
+                        SearchEngine.POSTINGS_PER_DECODE_TASK = \
+                            per_task[mode]
+                        group = (f"decode_{rep_corpus}_{n_words}_{mode}"
+                                 f"_{rep}")
+                        _, wall, jobs = timed_jobs(
+                            sc, group,
+                            lambda: eng.search(q, size=10).collect())
+                        tracker = sc.statusTracker()
+                        tasks = sum(
+                            tracker.getStageInfo(st).numTasks
+                            for j in tracker.getJobIdsForGroup(group)
+                            for st in tracker.getJobInfo(j).stageIds)
+                        line = json.dumps({
+                            "sweep": "decode", "corpus_x": rep_corpus,
+                            "words": n_words, "postings": postings,
+                            "mode": mode, "rep": rep,
+                            "wall_s": round(wall, 4), "spark_jobs": jobs,
+                            "tasks": tasks, "cpus": CPUS})
+                        print(line, flush=True)
+                        out.write(line + "\n")
+            shutil.rmtree(idx, ignore_errors=True)
+    finally:
+        SearchEngine.POSTINGS_PER_DECODE_TASK = real
+        out.close()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def main() -> None:
     import argparse
     ap = argparse.ArgumentParser()
@@ -397,6 +490,9 @@ def main() -> None:
                     "JSON lines to OUT")
     ap.add_argument("--resolve-sweep", metavar="OUT", default=None,
                     help="run the key-resolve sweep instead, writing its "
+                    "JSON lines to OUT")
+    ap.add_argument("--decode-sweep", metavar="OUT", default=None,
+                    help="run the decode-task sweep instead, writing its "
                     "JSON lines to OUT")
     args = ap.parse_args()
 
@@ -412,6 +508,10 @@ def main() -> None:
         return
     if args.resolve_sweep:
         resolve_sweep(spark, args.resolve_sweep)
+        spark.stop()
+        return
+    if args.decode_sweep:
+        decode_sweep(spark, args.decode_sweep)
         spark.stop()
         return
 
@@ -432,7 +532,7 @@ def main() -> None:
     engine = SearchEngine(spark, idx_dir, cache_postings=True)
     engine.postings.count()
 
-    for name, q in BENCH_QUERIES:
+    for name, q in BENCH_QUERIES + EXTRA_QUERIES:
         # plan capture
         if args.plans_dir and q is not None:
             os.makedirs(args.plans_dir, exist_ok=True)
@@ -449,6 +549,13 @@ def main() -> None:
                           lambda: engine.search(q, size=10).collect())
             count = measure(sc, f"bx_count_{name}",
                             lambda: engine.count(q))
+            plans = []
+            for _ in range(RUNS):
+                t0 = time.monotonic()
+                engine.search(q, size=10)
+                plans.append(time.monotonic() - t0)
+            row["plan_median_ms"] = round(
+                1e3 * sorted(plans)[len(plans) // 2], 2)
         print(json.dumps({"query": name, **row,
                           **{f"count_{k}": v for k, v in count.items()}}),
               flush=True)

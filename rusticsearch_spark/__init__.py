@@ -20,4 +20,10 @@ pipelines:
   used to golden-test rank identity.
 """
 
+from ._spark_worker import install as _install_worker_imports
+
 __version__ = "0.1.0"
+
+# in a PySpark worker, the per-task importlib.invalidate_caches() stops
+# re-reading Spark's own archives (see _spark_worker)
+_install_worker_imports()

@@ -12,9 +12,9 @@ the probe — a few KB of IO however large the corpus — and returns
 
 Every committed job writes its sidecar before it commits (the
 ``IndexLayout.read_config`` format gate refuses indexes older than
-that), so this is the planner's only dictionary: it attaches
-``df_global`` to decode plans without spending a Spark metadata job
-per query — a term query is one decode job, full stop.  A small LRU
+that), so this is the planner's only dictionary: it hands
+``df_global`` to decode closures without spending a Spark metadata
+job per query — a term query is one decode job, full stop.  A small LRU
 memoizes repeated lookups per engine snapshot (the dictionary is
 immutable per committed lineage).
 """
@@ -187,9 +187,10 @@ class TermDictReader:
                         ) -> Tuple[int, List[int], Dict[str, int]]:
         """``prefix_stats`` plus the query field's per-term global df
         ({term: df}, summed across jobs) from the SAME dictionary
-        read — lets the planner attach ``df_global`` as a literal and
-        skip the per-query in-plan df aggregate (one fewer Exchange +
-        BroadcastExchange + postings scan per multi-term query)."""
+        read — lets the planner carry ``df_global`` in the decode's
+        closure and skip the per-query in-plan df aggregate (one fewer
+        Exchange + BroadcastExchange + postings scan per multi-term
+        query)."""
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
         f = ds.field("term") >= prefix

@@ -20,7 +20,12 @@ replacing the reference's two postfix stack machines
   leaves (``_term_tree``) runs as ONE decode job of every leaf and
   ONE groupBy(doc_id), each node a Column expression over it
   (``_fused_tree``); any other tree recurses through the generic
-  per-child frames and joins;
+  per-child frames and joins.  Every decode (``_decode``) carries its
+  per-query constants — leaf ordinal, dictionary df, boost, field
+  stats — in the mapInArrow closure, not as plan literals, and is
+  coalesced to ceil(Σdf / ``POSTINGS_PER_DECODE_TASK``) partitions:
+  a query over a small postings slice is one Python task, and its
+  groupBy(doc_id) then needs no Exchange;
 * the per-segment loop + TopScoreCollector become partition-parallel
   scans + ``ORDER BY score DESC, doc_id LIMIT k``
   (TakeOrderedAndProject), with doc_id as the deterministic
@@ -175,72 +180,69 @@ def _term_scores(tfs, lens, dfg, total_docs: int, total_tokens: int,
     return (s * np.float32(boost)).astype(np.float64)
 
 
-def _decode_score_fn(total_docs: int, total_tokens: int, similarity: str,
-                     boost: float, needs_score: bool,
-                     precision: str = "f32"):
-    """mapInArrow body: posting blocks → (doc_id, score) rows.
+def _decode_fn(leaves: List[Tuple[str, str, int, float, int, int]],
+               similarity: str, precision: str, needs_score: bool,
+               with_child: bool):
+    """mapInArrow body: posting blocks → (doc_id[, child], score) rows.
 
-    Expects columns (segment, doc_bytes, tf_bytes, len_bytes,
-    df_global).  The whole batch decodes in one numpy pass (df_global
-    is expanded per posting with ``np.repeat``) and scores through
-    ``_term_scores``."""
+    ``leaves`` lists each decoded (field, term) with its per-query
+    constants — (field, term, global df, boost, total_docs,
+    total_tokens) — and a leaf's list index is its ``child`` ordinal.
+    The constants travel in this closure, so the plan carries no
+    per-leaf Column literal: each block row finds its leaf by
+    (field, term), and rows of any pair not listed (the cross product
+    the scan's ``isin`` filters admit) are dropped before decoding.
+
+    The batch decodes in one numpy pass (doc ids only when
+    ``needs_score`` is False, scores then 0.0) and scores through
+    ``_term_scores`` once per distinct (boost, total_docs,
+    total_tokens), with df expanded per posting."""
     import pyarrow as pa
+    import pyarrow.compute as pc
+
+    fields = {f: i for i, f in enumerate(sorted({lf[0] for lf in leaves}))}
+    terms = {t: i for i, t in enumerate(sorted({lf[1] for lf in leaves}))}
+    consts = sorted({lf[3:] for lf in leaves})
+    group = {c: i for i, c in enumerate(consts)}
+    # child_of[field index, term index]; the extra last row and column
+    # catch a value outside the query's fields or terms
+    child_of = np.full((len(fields) + 1, len(terms) + 1), -1, np.int32)
+    for i, (f, t, *_) in enumerate(leaves):
+        child_of[fields[f], terms[t]] = i
+    group_of = np.array([group[lf[3:]] for lf in leaves], np.int32)
+    df_of = np.array([lf[2] for lf in leaves], np.int64)
+    field_set, term_set = pa.array(list(fields)), pa.array(list(terms))
+
+    def _ordinal(col, values):
+        return pc.fill_null(pc.index_in(col, value_set=values),
+                            len(values)).to_numpy()
 
     def _run(batches) -> Iterator["pa.RecordBatch"]:
         for rb in batches:
+            child_b = child_of[_ordinal(rb.column("field"), field_set),
+                               _ordinal(rb.column("term"), term_set)]
+            keep = child_b >= 0
+            if not keep.all():
+                rb, child_b = rb.filter(pa.array(keep)), child_b[keep]
             if rb.num_rows == 0:
                 continue
             doc_ids, tfs, lens, counts = _batch_decode(
                 rb, docs_only=not needs_score)
-            if not needs_score:
-                s = np.zeros(len(doc_ids), dtype=np.float64)
-            else:
-                dfg = np.repeat(
-                    rb.column("df_global").to_numpy(zero_copy_only=False),
-                    counts)
-                s = _term_scores(tfs, lens, dfg, total_docs, total_tokens,
-                                 similarity, boost, precision)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, type=pa.int64()),
-                 pa.array(s, type=pa.float64())],
-                names=["doc_id", "score"])
-
-    return _run
-
-
-def _fused_decode_fn(similarity: str, precision: str):
-    """mapInArrow body for the fused multi-term path: per-row stats
-    columns (df_global, boost, total_docs, total_tokens, child) instead
-    of closure constants — one decode job scores every term child.
-    The batch decodes in one numpy pass; scoring loops once per
-    DISTINCT child (each child's stats are constants)."""
-    import pyarrow as pa
-
-    def _run(batches) -> Iterator["pa.RecordBatch"]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            doc_ids, tfs, lens, counts = _batch_decode(rb)
-            child_b = rb.column("child").to_numpy(zero_copy_only=False)
-            child = np.repeat(child_b.astype(np.int32), counts)
-            dfg = np.repeat(
-                rb.column("df_global").to_numpy(zero_copy_only=False),
-                counts)
-            s = np.empty(len(doc_ids), dtype=np.float64)
-            boost_b = rb.column("boost").to_numpy(zero_copy_only=False)
-            td_b = rb.column("total_docs").to_numpy(zero_copy_only=False)
-            tt_b = rb.column("total_tokens").to_numpy(zero_copy_only=False)
-            for c in np.unique(child_b):
-                i = int(np.nonzero(child_b == c)[0][0])
-                m = child == c
-                s[m] = _term_scores(tfs[m], lens[m], dfg[m], int(td_b[i]),
-                                    int(tt_b[i]), similarity,
-                                    float(boost_b[i]), precision)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, type=pa.int64()),
-                 pa.array(child, type=pa.int32()),
-                 pa.array(s, type=pa.float64())],
-                names=["doc_id", "child", "score"])
+            s = np.zeros(len(doc_ids), dtype=np.float64)
+            if needs_score:
+                dfg = np.repeat(df_of[child_b], counts)
+                grp = np.repeat(group_of[child_b], counts)
+                for g in np.unique(grp):
+                    boost, td, tt = consts[g]
+                    m = slice(None) if len(consts) == 1 else grp == g
+                    s[m] = _term_scores(tfs[m], lens[m], dfg[m], td, tt,
+                                        similarity, boost, precision)
+            cols = {"doc_id": pa.array(doc_ids, type=pa.int64())}
+            if with_child:
+                cols["child"] = pa.array(np.repeat(child_b, counts),
+                                         type=pa.int32())
+            cols["score"] = pa.array(s, type=pa.float64())
+            yield pa.RecordBatch.from_pydict(cols)
 
     return _run
 
@@ -623,12 +625,15 @@ class SearchEngine:
             return None
         return tuple(leaves)
 
-    def _fused_tree(self, q: dsl.Query,
-                    leaves: Tuple[dsl.Term, ...]) -> DataFrame:
+    def _fused_tree(self, q: dsl.Query, leaves: Tuple[dsl.Term, ...],
+                    needs_score: bool = True) -> DataFrame:
         """(doc_id, score) of a ``_term_tree`` query: every leaf decodes
         in one ``_fused_frame`` (leaf ordinal = ``child``), then ONE
         groupBy(doc_id) folds the whole tree — a second grouping level
-        would cost a second Exchange per query.
+        would cost a second Exchange per query, and a decode of one
+        partition needs none (``_decode``).  Unscored, the decode
+        reads doc ids only and every score is 0.0: presence alone
+        decides the rows.
 
         Every node becomes a (score, present) pair of Column
         expressions over that aggregate; a node's score is null when
@@ -697,73 +702,36 @@ class SearchEngine:
                     present, lo)
 
         score, present, _ = node(q, 0)
-        return (self._fused_frame(leaves).groupBy("doc_id").agg(*aggs)
-                .where(present).select("doc_id", score.alias("score")))
+        return (self._fused_frame(leaves, needs_score).groupBy("doc_id")
+                .agg(*aggs).where(present)
+                .select("doc_id", score.alias("score")))
 
-    def _fused_frame(self, children) -> DataFrame:
+    def _fused_frame(self, children, needs_score: bool) -> DataFrame:
         """(doc_id, child, score): all Term children in one decode."""
-        sim = children[0].scorer.similarity
-        return self._fused_blocks(children).select(
-            "segment", "doc_bytes", "tf_bytes", "len_bytes", "df_global",
-            "boost", "total_docs", "total_tokens", "child"
-        ).mapInArrow(_fused_decode_fn(sim, self.precision),
-                      schema=_FUSED_SCHEMA)
+        looked = self.dict_reader.lookup([(c.field, c.term)
+                                          for c in children])
+        dfs = {p: df for p, (df, _) in looked.items()}
+        return self._decode(self._fused_blocks(children), [
+            (c.field, c.term, c.scorer.boost) for c in children],
+            children[0].scorer.similarity, needs_score, dfs,
+            with_child=True)
 
     def _fused_blocks(self, children) -> DataFrame:
-        """Block rows for fusable Term children with every per-child
-        constant attached: child ordinal, boost, field stats, df.
-
-        The per-child spec is driver-known, so it attaches as LITERAL
-        column expressions (a when-chain keyed on (field, term) +
-        element_at arrays) instead of a broadcast-joined
-        ``createDataFrame``: that spec materialized as a pickled
-        Python RDD scan plus a BroadcastExchange — one extra Spark job
-        and a Python worker round-trip on EVERY fused query (guide
-        §2.4: remove exchanges outright; §1 plan audit showed
-        `Scan ExistingRDD` + `BroadcastExchange` under every fused
-        plan).
-
-        df_global comes from the driver-side term dictionary — a
-        zero-job read (the same source the zero-job `_count` trusts;
-        the sidecar is maintained through merges,
-        `tests/test_term_dict.py`)."""
+        """Block rows of fusable Term children: the tbuckets, fields
+        and terms they name, pushed down to the postings scan.  The
+        filters admit the (field, term) cross product; ``_decode_fn``
+        drops the pairs no child asked for, and every per-child
+        constant (ordinal, df, boost, field stats) rides in its
+        closure, not in the plan: as Column literals (a when-chain on
+        (field, term) and ``element_at`` arrays) they cost a py4j
+        round trip each while the plan is built, without bound in the
+        child count."""
         tb = self.config.tbuckets
-        blocks = self.postings.where(
+        return self.postings.where(
             F.col("tbucket").isin(
                 sorted({term_bucket(c.term, tb) for c in children}))
             & F.col("field").isin(sorted({c.field for c in children}))
             & F.col("term").isin(sorted({c.term for c in children})))
-        child = None
-        for i, c in enumerate(children):
-            cond = (F.col("field") == c.field) & (F.col("term") == c.term)
-            child = (F.when(cond, F.lit(i)) if child is None
-                     else child.when(cond, F.lit(i)))
-        # the isin filters admit the (field, term) CROSS product; the
-        # when-chain leaves child null for pairs no child requested —
-        # dropped here exactly as the spec join dropped them
-        blocks = (blocks.withColumn("child", child.cast("int"))
-                  .where(F.col("child").isNotNull()))
-        idx = F.col("child") + F.lit(1)
-        boosts = F.array(*[F.lit(float(c.scorer.boost))
-                           for c in children])
-        tds = F.array(*[F.lit(self.field_stats.get(c.field, (0, 0))[0])
-                        .cast("long") for c in children])
-        tts = F.array(*[F.lit(self.field_stats.get(c.field, (0, 0))[1])
-                        .cast("long") for c in children])
-        blocks = (blocks
-                  .withColumn("boost", F.element_at(boosts, idx))
-                  .withColumn("total_docs", F.element_at(tds, idx))
-                  .withColumn("total_tokens", F.element_at(tts, idx)))
-        # A lookup miss yields df 0, which is safe by construction: the
-        # sidecar is derived from the same committed postings this
-        # frame scans, so a missing (field, term) has no block rows
-        # either — df 0 never reaches a scored posting
-        looked = self.dict_reader.lookup(
-            [(c.field, c.term) for c in children])
-        dfs = F.array(*[
-            F.lit(int(looked.get((c.field, c.term), (0, 0))[0]))
-            .cast("long") for c in children])
-        return blocks.withColumn("df_global", F.element_at(dfs, idx))
 
     # ---------------------------------------------------------------
     # term-level scoring
@@ -774,30 +742,49 @@ class SearchEngine:
             (F.col("tbucket") == tb) & (F.col("field") == field)
             & (F.col("term") == term))
 
-    def _decode(self, blocks: DataFrame, field: str, similarity: str,
-                boost: float, needs_score: bool) -> DataFrame:
-        """blocks (with df_global column) → (doc_id, score) frame."""
-        d, t = self.field_stats.get(field, (0, 0))
-        cols = ["segment", "doc_bytes", "tf_bytes", "len_bytes", "df_global"]
-        return blocks.select(*cols).mapInArrow(
-            _decode_score_fn(d, t, similarity, boost, needs_score,
-                             self.precision),
-            schema=_SCORE_SCHEMA)
+    #: postings one decode task takes: a decode coalesces its block
+    #: rows to ceil(Σdf / POSTINGS_PER_DECODE_TASK) partitions, Σdf
+    #: being the query's posting count from the dictionary.  Below it
+    #: the whole query is one Python task and its groupBy(doc_id)
+    #: needs no Exchange.  Measured on local[4] against the scan's own
+    #: split (BENCH/decode_tasks_r14.jsonl, docs/SCALE.md): one task
+    #: was faster up to 122,688 postings, the split (an Exchange and
+    #: 3-7 more tasks) from between 232k and 246k on.
+    POSTINGS_PER_DECODE_TASK = 1 << 17
 
-    def _with_global_df(self, blocks: DataFrame) -> DataFrame:
-        """Attach the across-segments document frequency (the global
-        ``tdf`` stat, statistics.rs:33-78) to every block row."""
-        agg = blocks.groupBy("field", "term").agg(
-            F.sum("df_block").cast("long").alias("df_global"))
-        return blocks.join(F.broadcast(agg), ["field", "term"])
+    def _decode(self, blocks: DataFrame,
+                leaves: List[Tuple[str, str, float]], similarity: str,
+                needs_score: bool, dfs: Dict[Tuple[str, str], int],
+                with_child: bool = False) -> DataFrame:
+        """Block rows of ``leaves`` ((field, term, boost) each) →
+        (doc_id[, child], score) in one mapInArrow.  Each leaf's
+        global df (the ``tdf`` statistic, statistics.rs:33-78) comes
+        from ``dfs``, read from the driver-side dictionary — a
+        zero-job read kept through merges (``tests/test_term_dict.py``)
+        — and rides in the closure with the leaf's boost and field
+        stats.  A pair missing from ``dfs`` is df 0, which never
+        reaches a scored posting: the dictionary is derived from the
+        same committed postings, so that pair has no block rows
+        either."""
+        spec = [(f, t, dfs.get((f, t), 0), float(b),
+                 *map(int, self.field_stats.get(f, (0, 0))))
+                for f, t, b in leaves]
+        tasks = -(-sum(lf[2] for lf in spec)
+                  // self.POSTINGS_PER_DECODE_TASK)
+        cols = ["field", "term", "segment", "doc_bytes", "tf_bytes",
+                "len_bytes"]
+        return blocks.select(*cols).coalesce(max(1, tasks)).mapInArrow(
+            _decode_fn(spec, similarity, self.precision, needs_score,
+                       with_child),
+            schema=_FUSED_SCHEMA if with_child else _SCORE_SCHEMA)
 
     def _score_term(self, field: str, term: str, scorer: dsl.TermScorer,
                     needs_score: bool = True) -> DataFrame:
         dfg, _ = self.dict_reader.lookup_one(field, term)
-        out = self._decode(
-            self._term_blocks(field, term)
-            .withColumn("df_global", F.lit(dfg).cast("long")),
-            field, scorer.similarity, scorer.boost, needs_score)
+        out = self._decode(self._term_blocks(field, term),
+                           [(field, term, scorer.boost)],
+                           scorer.similarity, needs_score,
+                           {(field, term): dfg})
         # exact cardinality from the dictionary (free) — lets a filter
         # branch's semi/anti join pick its strategy on real numbers
         # instead of Spark's blind estimate (``_sized``)
@@ -834,12 +821,6 @@ class SearchEngine:
         return self._multiterm_avg(blocks, q.field, q.scorer, nt,
                                    needs_score, dfmap)
 
-    #: a per-term df literal map attaches in-plan up to this many
-    #: matched terms; past it the plan falls back to the in-plan df
-    #: aggregate (a create_map literal lookup is a linear scan per
-    #: block row, and very large literal plans cost planning time)
-    DICT_DF_LITERAL_MAX = 1024
-
     def _multiterm_avg(self, blocks: DataFrame, field: str,
                        scorer: dsl.TermScorer, nt: int,
                        needs_score: bool, dfmap: Dict[str, int]
@@ -847,26 +828,16 @@ class SearchEngine:
         """Shared MultiTerm tail (score_function.rs:61-79): decode the
         selected blocks, then a per-doc Avg over ``nt``, the GLOBAL
         dictionary's matching-term count (a literal: zero extra
-        jobs).  ``dfmap`` (term → global df, from the same dictionary
-        read) attaches df as a literal map column, removing the
-        per-query in-plan df aggregate — an Exchange, a
-        BroadcastExchange and a second scan of the pruned blocks
-        (guide §2.4); score-elided paths never need df at all."""
-        if not needs_score:
-            withdf = blocks.withColumn("df_global",
-                                       F.lit(0).cast("long"))
-        elif len(dfmap) <= self.DICT_DF_LITERAL_MAX:
-            if not dfmap:
-                return self.spark.createDataFrame([], schema=_SCORE_SCHEMA)
-            df_col = F.create_map(
-                *[x for t, d in sorted(dfmap.items())
-                  for x in (F.lit(t), F.lit(int(d)))])[F.col("term")]
-            withdf = blocks.withColumn("df_global", df_col.cast("long"))
-        else:
-            withdf = self._with_global_df(blocks)
-        per_term = self._decode(withdf, field,
-                                scorer.similarity, scorer.boost,
-                                needs_score)
+        jobs).  ``dfmap`` (term → global df of ``field``'s matching
+        terms, from the same dictionary read) rides in the decode's
+        closure, so the plan has no per-query df aggregate and no
+        per-term literal; an empty one means no block row matches."""
+        if not dfmap:
+            return self.spark.createDataFrame([], schema=_SCORE_SCHEMA)
+        per_term = self._decode(
+            blocks, [(field, t, scorer.boost) for t in sorted(dfmap)],
+            scorer.similarity, needs_score,
+            {(field, t): int(d) for t, d in dfmap.items()})
         if not needs_score:
             return per_term.select("doc_id").distinct() \
                 .withColumn("score", F.lit(0.0))
@@ -1101,7 +1072,7 @@ class SearchEngine:
         algebra that a score would forbid (boolean_query.rs:131-321)."""
         leaves = self._term_tree(q)
         if leaves is not None:
-            return ("df", self._fused_tree(q, leaves))
+            return ("df", self._fused_tree(q, leaves, needs_score))
         if isinstance(q, dsl.All):
             return ("all", q.score)
         if isinstance(q, dsl.NoneQuery):

@@ -13,6 +13,12 @@ from pyspark.sql import functions as F
 
 _PREFIX = {"prefix": {"text": "sc"}}
 _LANG_EN = {"term": {"lang": "en"}}
+#: the corpus's 31 words and 33 it lacks: one fused tree of 64 leaves
+_MATCH_64 = {"match": {"text": " ".join(
+    "a agg batch big column customer data dup fast filter group hash "
+    "join key line merge order part query row scan slow small sort "
+    "spark stream table the value vector window".split()
+    + [f"unseen{i}" for i in range(33)])}}
 
 QUERIES = [
     ("match_or", {"match": {"text": "spark query"}}),
@@ -21,6 +27,7 @@ QUERIES = [
     ("match_single", {"match": {"text": "merge"}}),
     ("match_boost", {"match": {"text": {"query": "table scan",
                                         "boost": 2.5}}}),
+    ("match_64", _MATCH_64),
     ("term_exact", {"term": {"text": "window"}}),
     ("term_lang", {"term": {"lang": "en"}}),
     ("terms_in", {"terms": {"lang": ["en", "fr", "zh"]}}),
