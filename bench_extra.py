@@ -19,28 +19,26 @@ Outputs one JSON line per query:
      "n_stages_total": st, "n_tasks_total": t, "plan_median_ms": ms,
      "count_median_sec": s, "count_n_jobs": j, ...}
 
-Write-path sweep (the evidence behind the driver write path):
+Write-path sweep (the cost of the driver write path by batch size):
     SPARK_GRAFT_CPUS=4 SPARK_GRAFT_SHUFFLE=4 \
         python bench_extra.py --write-sweep OUT.jsonl
 Upserts batches of 250, 1k, 4k, 16k and 64k documents (~400 bytes, 90%
-updates) into copies of one base index, through the driver path and
-the Spark path (``StreamingIngester._on_driver`` patched to False),
-twice each, interleaved; then times a 10-key ``delete_documents`` on
-both paths (the Spark one forced by patching ``delete.key_is_string``
-to False) at 1, 5 and 17 committed jobs.
+updates) into copies of one base index, twice each; then times a
+10-key ``delete_documents`` at 1, 5 and 17 committed jobs.
 One JSON line per call, with its wall time and Spark jobs, printed
-and written to OUT.jsonl.
+and written to OUT.jsonl.  Every call runs on the driver (the Spark
+index half it was compared with is gone; BENCH/write_path_r13.jsonl
+holds both sides, ``"path": "driver"`` / ``"spark"``).
 
 Key-resolve sweep (how ``doc_index.resolve_keys_driver`` scales):
     SPARK_GRAFT_CPUS=4 SPARK_GRAFT_SHUFFLE=4 \
         python bench_extra.py --resolve-sweep OUT.jsonl
 Writes synthetic doc_index sidecars of 2^20 to 2^26 (key, doc_id)
 rows over 4 committed jobs and 64 kbuckets (~40-byte URL keys), then
-times ``delete_documents`` of 10 and 250 present string keys with the
-resolve on the driver and through Spark (``delete.key_is_string``
-patched to False), three times each,
-interleaved.  One JSON line per call, with the bytes of the sidecar
-files the keys touch, wall time and Spark jobs.
+times ``delete_documents`` of 10 and 250 present string keys, three
+times each.  One JSON line per call, with the bytes of the sidecar
+files the keys touch, wall time and Spark jobs
+(BENCH/resolve_keys_r13.jsonl also has the Spark resolve).
 
 Decode-task sweep (the evidence behind
 ``SearchEngine.POSTINGS_PER_DECODE_TASK``):
@@ -207,8 +205,8 @@ def timed_jobs(sc, group: str, fn):
 
 
 def write_sweep(spark, out_path: str) -> None:
-    """See the module docstring: upsert batches by size and path, then
-    deletes by committed job count and path."""
+    """See the module docstring: upsert batches by size, then deletes
+    by committed job count."""
     import random
 
     import pyarrow.parquet as pq
@@ -259,33 +257,24 @@ def write_sweep(spark, out_path: str) -> None:
         shutil.copytree(base, idx)
         return idx
 
-    real_on_driver = ingest.StreamingIngester._on_driver
-    real_is_string = delete.key_is_string
     try:
         for n in WRITE_SIZES:
             for rep in range(2):
-                for path in ("driver", "spark"):
-                    ingest.StreamingIngester._on_driver = (
-                        real_on_driver if path == "driver"
-                        else lambda *a: False)
-                    idx = fresh(f"upsert_{n}_{path}")
-                    ing = ingest.StreamingIngester(spark, idx, upsert=True)
-                    for b in range(2):
-                        rows = batch_rows(n, f"s{n}r{rep}b{b}")
-                        df = spark.createDataFrame(
-                            rows, "url string, text string, lang string")
-                        got, wall, jobs = timed_jobs(
-                            sc, f"sweep_{n}_{path}_{rep}_{b}",
-                            lambda: ing.process_batch(df, b))
-                        emit({"sweep": "upsert", "docs": n, "path": path,
-                              "rep": rep, "batch": b,
-                              "postings": got.postings,
-                              "wall_s": round(wall, 3),
-                              "spark_jobs": jobs,
-                              "bytes": sum(len(r[0]) + len(r[1].encode())
-                                           + len(r[2]) for r in rows)})
-                    shutil.rmtree(idx, ignore_errors=True)
-        ingest.StreamingIngester._on_driver = real_on_driver
+                idx = fresh(f"upsert_{n}")
+                ing = ingest.StreamingIngester(spark, idx, upsert=True)
+                for b in range(2):
+                    rows = batch_rows(n, f"s{n}r{rep}b{b}")
+                    df = spark.createDataFrame(
+                        rows, "url string, text string, lang string")
+                    _, wall, jobs = timed_jobs(
+                        sc, f"sweep_{n}_{rep}_{b}",
+                        lambda: ing.process_batch(df, b))
+                    emit({"sweep": "upsert", "docs": n, "path": "driver",
+                          "rep": rep, "batch": b,
+                          "wall_s": round(wall, 3), "spark_jobs": jobs,
+                          "bytes": sum(len(r[0]) + len(r[1].encode())
+                                       + len(r[2]) for r in rows)})
+                shutil.rmtree(idx, ignore_errors=True)
         idx = fresh("delete")
         ing = ingest.StreamingIngester(spark, idx, upsert=True)
         live = list(urls)
@@ -297,20 +286,15 @@ def write_sweep(spark, out_path: str) -> None:
                     batch_rows(20, f"d{b}"),
                     "url string, text string, lang string"), b)
                 b += 1
-            for path in ("driver", "spark"):
-                delete.key_is_string = (real_is_string if path == "driver"
-                                        else lambda *a: False)
-                keys = [live.pop() for _ in range(DELETE_KEYS)]
-                n_del, wall, jobs = timed_jobs(
-                    sc, f"sweep_delete_{at}_{path}",
-                    lambda: delete.delete_documents(spark, idx, keys=keys))
-                emit({"sweep": "delete", "committed_jobs": at,
-                      "path": path, "keys": DELETE_KEYS,
-                      "deleted": n_del, "wall_s": round(wall, 3),
-                      "spark_jobs": jobs})
+            keys = [live.pop() for _ in range(DELETE_KEYS)]
+            n_del, wall, jobs = timed_jobs(
+                sc, f"sweep_delete_{at}",
+                lambda: delete.delete_documents(spark, idx, keys=keys))
+            emit({"sweep": "delete", "committed_jobs": at,
+                  "path": "driver", "keys": DELETE_KEYS,
+                  "deleted": n_del, "wall_s": round(wall, 3),
+                  "spark_jobs": jobs})
     finally:
-        ingest.StreamingIngester._on_driver = real_on_driver
-        delete.key_is_string = real_is_string
         out.close()
         shutil.rmtree(work, ignore_errors=True)
 
@@ -323,9 +307,8 @@ RESOLVE_REPS = 3
 
 def resolve_sweep(spark, out_path: str) -> None:
     """See the module docstring: ``delete_documents`` by string keys
-    against synthetic sidecars of growing size, the resolve on the
-    driver and through Spark.  Only what the resolve and the deletion
-    write read is synthesized: config, lineage, a one-row docs file
+    against synthetic sidecars of growing size.  Only what the resolve
+    and the deletion write read is synthesized: config, lineage, a one-row docs file
     per job (the key type) and the doc_index files.  Filler keys sit
     in arbitrary kbuckets; each probe key sits once, in the kbucket
     it hashes to."""
@@ -340,7 +323,6 @@ def resolve_sweep(spark, out_path: str) -> None:
     sc = spark.sparkContext
     work = f"/tmp/rusticsearch_resolve_sweep_{CPUS}"
     out = open(out_path, "w")
-    real_is_string = delete.key_is_string
     try:
         for n_rows in RESOLVE_ROWS:
             shutil.rmtree(work, ignore_errors=True)
@@ -349,7 +331,7 @@ def resolve_sweep(spark, out_path: str) -> None:
             layout.write_config(cfg)
             kb = cfg.kbuckets
             per_file = n_rows // (RESOLVE_JOBS * kb)
-            n_probe = RESOLVE_REPS * 2 * sum(RESOLVE_KEYS)
+            n_probe = RESOLVE_REPS * sum(RESOLVE_KEYS)
             probes = [f"https://probe.example.org/{n_rows}/{i}"
                       for i in range(n_probe)]
             at = {}
@@ -382,29 +364,24 @@ def resolve_sweep(spark, out_path: str) -> None:
             jobs = layout.completed_jobs()
             for rep in range(RESOLVE_REPS):
                 for n_keys in RESOLVE_KEYS:
-                    for path in ("driver", "spark"):
-                        keys = [probes.pop() for _ in range(n_keys)]
-                        touched = sum(os.path.getsize(f) for _, f in
-                                      doc_index._touched_files(
-                                          layout, cfg, jobs, keys))
-                        delete.key_is_string = (
-                            real_is_string if path == "driver"
-                            else lambda *a: False)
-                        n_del, wall, n_jobs = timed_jobs(
-                            sc, f"resolve_{n_rows}_{n_keys}_{path}_{rep}",
-                            lambda: delete.delete_documents(
-                                spark, work, keys=keys))
-                        line = json.dumps({
-                            "sweep": "resolve", "sidecar_rows": n_rows,
-                            "sidecar_bytes": sidecar, "jobs": RESOLVE_JOBS,
-                            "keys": n_keys, "touched_bytes": touched,
-                            "path": path, "rep": rep, "deleted": n_del,
-                            "wall_s": round(wall, 3), "spark_jobs": n_jobs,
-                            "cpus": CPUS})
-                        print(line, flush=True)
-                        out.write(line + "\n")
+                    keys = [probes.pop() for _ in range(n_keys)]
+                    touched = sum(os.path.getsize(f) for _, f in
+                                  doc_index._touched_files(
+                                      layout, cfg, jobs, keys, pa.string()))
+                    n_del, wall, n_jobs = timed_jobs(
+                        sc, f"resolve_{n_rows}_{n_keys}_{rep}",
+                        lambda: delete.delete_documents(
+                            spark, work, keys=keys))
+                    line = json.dumps({
+                        "sweep": "resolve", "sidecar_rows": n_rows,
+                        "sidecar_bytes": sidecar, "jobs": RESOLVE_JOBS,
+                        "keys": n_keys, "touched_bytes": touched,
+                        "path": "driver", "rep": rep, "deleted": n_del,
+                        "wall_s": round(wall, 3), "spark_jobs": n_jobs,
+                        "cpus": CPUS})
+                    print(line, flush=True)
+                    out.write(line + "\n")
     finally:
-        delete.key_is_string = real_is_string
         out.close()
         shutil.rmtree(work, ignore_errors=True)
 

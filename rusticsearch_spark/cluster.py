@@ -16,7 +16,6 @@ import shutil
 from typing import Dict, List, Optional, Set
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .index.build import build_index
 from .index.layout import IndexConfig
@@ -167,7 +166,7 @@ class Cluster:
         return sum(self.engine(i).count(query_json)
                    for i in self.registry.resolve(name))
 
-    def get_document(self, index: str, key: str) -> Optional[dict]:
+    def get_document(self, index: str, key) -> Optional[dict]:
         """GET /:index/:mapping/:doc — returns the stored row as a
         dict (the reference stubs this with ``{}``,
         document_api.rs:30-49; ours is functional).
@@ -177,34 +176,22 @@ class Cluster:
         reference's O(1) ``k<doc_key>`` lookup
         (document_index.rs:71-91): one kbucket partition resolves the
         doc_id, then one row-group-pruned read of that job's docs dir
-        fetches the stored row.  While deletions are pending, the hits
-        are checked against the engine's deletion lists (read once,
-        on the driver): an upserted key has two hits until the merge,
-        and only the live one is returned.  A key column or a key that
-        is not a string goes to the Spark scan instead (as does a
-        torn sidecar, whose hit has no docs row).  Both paths return
-        the same keys: every column of the engine's docs frame, None
-        where the document's job did not store it."""
-        eng = self.engine(index)
-        row = self._get_document_driver(eng, key)
-        if row is not NotImplemented:
-            return row
-        frame = eng._live(eng.docs.where(F.col(eng.config.key_col) == key))
-        row = frame.limit(1).collect()
-        return row[0].asDict() if row else None
+        fetches the stored row.  The key is cast to the key column's
+        type, so an integer key may come as an int or as its string
+        spelling.  While deletions are pending, the hits are checked
+        against the engine's deletion lists (read once, on the
+        driver): an upserted key has two hits until the merge, and
+        only the live one is returned.  The row has every column of
+        the engine's docs frame, as ``Row.asDict`` gives it: None
+        where the document's job did not store one, binary cells as
+        bytearray."""
+        return self._get_document(self.engine(index), key)
 
     @staticmethod
-    def _get_document_driver(eng: SearchEngine, key: str):
-        """Zero-Spark-job GET through the doc_index sidecar; returns
-        NotImplemented when the driver path cannot serve (caller
-        falls back to the Spark scan)."""
+    def _get_document(eng: SearchEngine, key) -> Optional[dict]:
         import pyarrow.dataset as ds
 
         from .index.doc_index import lookup_key_driver
-        if not (isinstance(key, str) and eng.key_is_string):
-            # kbucket is Spark's hash of the native key type, which
-            # the driver's string hash does not reproduce
-            return NotImplemented
         hits = lookup_key_driver(eng.layout, eng.config, eng._jobs, key)
         if eng.deletions is not None:
             hits = [h for h in hits if not eng.is_deleted(h[1])]
@@ -214,12 +201,11 @@ class Cluster:
         tbl = ds.dataset(eng.layout.job_dir("docs", job),
                          format="parquet").to_table(
             filter=ds.field("doc_id") == doc_id)
-        if tbl.num_rows == 0:      # torn sidecar — let Spark decide
-            return NotImplemented
+        if tbl.num_rows == 0:      # a sidecar row with no docs row
+            return None
         row = {c: tbl.column(c)[0].as_py() for c in tbl.column_names}
-        # match the Spark path's Row.asDict exactly: the basePath
-        # partition column rides along, columns this job did not
-        # store read as None, and binary cells surface as bytearray
+        # the basePath partition column rides along, as in the docs
+        # frame
         row["job"] = job
         row = {c: row.get(c) for c in eng.docs.columns}
         return {k: (bytearray(v) if isinstance(v, bytes) else v)

@@ -54,6 +54,16 @@ def _doc_date_col():
         F.lit("Z"))
 
 
+def _is_built(layout: IndexLayout) -> bool:
+    """Whether the cached index at ``layout`` has committed jobs and
+    passes the format gate (``IndexLayout.read_config``): an index
+    built by other code is built again."""
+    try:
+        return bool(layout.completed_jobs()) and bool(layout.read_config())
+    except (OSError, ValueError):
+        return False
+
+
 def get_engine(spark: SparkSession, sf_dir: str) -> SearchEngine:
     key = os.path.normpath(sf_dir)
     if key in _engines:
@@ -352,12 +362,7 @@ def q_fts_nested(spark, sf_dir):
                               prepare_docs)
         idx_dir = os.path.join(_CACHE_ROOT, os.path.basename(key),
                                "nested_idx")
-        layout = IndexLayout(idx_dir)
-        try:
-            ok = bool(layout.completed_jobs(spark))
-        except Exception:
-            ok = False
-        if not ok:
+        if not _is_built(IndexLayout(idx_dir)):
             fields = parse_mapping({"properties": {"meta": {
                 "properties": {"source": {"type": "string",
                                           "index": "not_analyzed"}}}}})
@@ -406,12 +411,7 @@ def _nested_type_engine(spark, sf_dir) -> SearchEngine:
                               prepare_docs)
         idx_dir = os.path.join(_CACHE_ROOT, os.path.basename(key),
                                "nested_type_idx")
-        layout = IndexLayout(idx_dir)
-        try:
-            ok = bool(layout.completed_jobs(spark))
-        except Exception:
-            ok = False
-        if not ok:
+        if not _is_built(IndexLayout(idx_dir)):
             fields = parse_mapping({"properties": {"comments": {
                 "type": "nested", "properties": {
                     "author": {"type": "string",
@@ -518,12 +518,7 @@ def _nested_deep_engine(spark, sf_dir) -> SearchEngine:
                               prepare_docs)
         idx_dir = os.path.join(_CACHE_ROOT, os.path.basename(key),
                                "nested_deep_idx")
-        layout = IndexLayout(idx_dir)
-        try:
-            ok = bool(layout.completed_jobs(spark))
-        except Exception:
-            ok = False
-        if not ok:
+        if not _is_built(IndexLayout(idx_dir)):
             fields = parse_mapping({"properties": {"posts": {
                 "type": "nested", "properties": {
                     "topic": {"type": "string",
@@ -661,12 +656,7 @@ def _exists_engine(spark, sf_dir) -> SearchEngine:
     if eng is None:
         idx_dir = os.path.join(_CACHE_ROOT, os.path.basename(key),
                                "exists_idx")
-        layout = IndexLayout(idx_dir)
-        try:
-            ok = bool(layout.completed_jobs(spark))
-        except Exception:
-            ok = False
-        if not ok:
+        if not _is_built(IndexLayout(idx_dir)):
             docs = (_docs(spark, sf_dir)
                     .withColumnRenamed("doc_id", "src_doc_id")
                     .withColumn("maybe_lang", F.when(

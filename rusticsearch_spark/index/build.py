@@ -52,6 +52,7 @@ from pyspark.sql import types as T
 from ..analysis.analyzers import Analyzer, AnalyzerRegistry, parse_analysis_settings
 from .codec import (BUCKET_SHIFT, LOCAL_MASK, SEGMENT_BITS,
                     varbyte_encode_offsets)
+from .doc_index import check_key_type
 from .layout import IndexConfig, IndexLayout, qname, term_bucket_col
 
 POSTINGS_SCHEMA = T.StructType([
@@ -295,10 +296,9 @@ def _encode_partitions_arrow(field_names: List[str]):
 
 
 def _posting_rows(ids: DataFrame, config: IndexConfig,
-                  registry: AnalyzerRegistry,
-                  precount: bool = True) -> DataFrame:
-    """Raw (field_ord, term, doc_id, len_byte) occurrence rows,
-    unioned over fields.  Length quantization runs as a native SQL
+                  registry: AnalyzerRegistry) -> DataFrame:
+    """(field_ord, term, doc_id, len_byte, tf) posting rows, unioned
+    over fields.  Length quantization runs as a native SQL
     expression (agrees exactly with the f32 reference quantization
     for every count up to 200,000 — pinned by
     tests/test_codec_similarity.py::test_length_byte_matches_the_sql_expression);
@@ -362,8 +362,9 @@ def _posting_rows(ids: DataFrame, config: IndexConfig,
             sql_col = (F.flatten(F.transform(
                 items, lambda x: sql_terms_column(analyzer.sql_kind, x)))
                 if analyzer.sql_kind else None)
-            unsafe = F.exists(F.col(qname(fname)),
-                              lambda x: x.rlike(SQL_UNSAFE_CHAR))
+            # over the non-null items: a null item would make exists()
+            # null, and the row would pass neither branch's filter
+            unsafe = F.exists(items, lambda x: x.rlike(SQL_UNSAFE_CHAR))
             tok = tokenize_array_udf(analyzer)
         else:
             sql_col = (sql_terms_column(analyzer.sql_kind, F.col(qname(fname)))
@@ -396,18 +397,11 @@ def _posting_rows(ids: DataFrame, config: IndexConfig,
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    if precount:
-        # map-side combine: partial agg dedups (doc, term) before the
-        # exchange (×2.3 fewer shuffled rows on web text); len_byte is
-        # constant per (doc, field) so it rides as a group key free
-        return (out.groupBy("field_ord", "term", "doc_id", "len_byte")
-                .agg(F.count(F.lit(1)).cast("int").alias("tf")))
-    # raw occurrences: the encoder run-length-merges duplicates after
-    # the sort — no hash-aggregation state anywhere in the build (the
-    # agg's random-access hash table is the one non-streaming memory
-    # pattern, and it is the first thing to stop scaling when cores
-    # share a memory subsystem)
-    return out.withColumn("tf", F.lit(1))
+    # map-side combine: partial agg dedups (doc, term) before the
+    # exchange (×2.3 fewer shuffled rows on web text); len_byte is
+    # constant per (doc, field) so it rides as a group key free
+    return (out.groupBy("field_ord", "term", "doc_id", "len_byte")
+            .agg(F.count(F.lit(1)).cast("int").alias("tf")))
 
 
 def _write_field_stats(path: str, stats_rows: List[dict]) -> None:
@@ -445,6 +439,7 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
     Returns a report dict with per-job lineage rows.
     """
     config = config or IndexConfig()
+    check_key_type(docs.schema, config.key_col)
     layout = IndexLayout(index_dir)
     registry = _registry(config)
     for a in config.fields.values():
@@ -658,29 +653,86 @@ def write_postings(spark: SparkSession, rows: DataFrame, docs: DataFrame,
             {f: int(tok_m[a] or 0) for f, a in tok_alias.items()})
 
 
-def write_postings_driver(docs, layout: IndexLayout, config: IndexConfig,
-                          registry: AnalyzerRegistry, job: int
-                          ) -> Tuple[int, Dict[str, int]]:
-    """``write_postings`` on the driver, for a job small enough that
-    Spark's fixed per-job and per-task costs outweigh its data:
-    pyarrow and numpy, zero Spark jobs.  ``docs`` is the job's written
-    docs table read back with pyarrow (doc_id, the key, and every
-    field as a scalar string column).
+#: field column types the driver index half renders as Spark's
+#: ``cast("string")``, besides ``array<string>``
+_DRIVER_FIELD_TYPES = (T.StringType, T.ByteType, T.ShortType,
+                       T.IntegerType, T.LongType, T.BooleanType)
 
-    Every function that decides bytes is the Spark path's: the
-    analyzer chain (``Analyzer.terms``, which the SQL tokenizer path
-    is pinned equal to), ``similarity.length_byte``,
-    ``layout.term_bucket``, the doc_index kbucket hash and the
-    build's encoder (``_encode_partitions_arrow``).  The encoder gets
-    rows sorted as the Spark path sorts them, (tbucket, field_ord,
-    term, segment, doc_id), with a group ordinal for ``gkey``: it only
-    compares adjacent keys.  Writes the postings per ``tbucket=``, the
-    term_dict and the doc_index per ``kbucket=``, in the layout Spark
-    writes.  Returns ``(n_blocks, total_tokens per field)``."""
+
+def check_field_types(schema: T.StructType, config: IndexConfig) -> None:
+    """Raise ValueError for a field column of ``schema`` that
+    :func:`write_postings_driver` cannot render as Spark's
+    ``cast("string")``: a field must be a string, integer or boolean
+    column, or an ``array<string>``."""
+    for name in config.fields:
+        if name not in schema.names:
+            continue
+        dtype = schema[name].dataType
+        if isinstance(dtype, T.ArrayType):
+            dtype = dtype.elementType
+            ok = isinstance(dtype, T.StringType)
+        else:
+            ok = isinstance(dtype, _DRIVER_FIELD_TYPES)
+        if not ok:
+            raise ValueError(
+                f"field {name!r} has type "
+                f"{schema[name].dataType.simpleString()}: a field must be "
+                "a string, integer, boolean or array<string> column")
+
+
+def _field_terms(column, analyzer: Optional[Analyzer]
+                 ) -> Tuple[List[List[str]], np.ndarray]:
+    """Each document's terms of one field column and its length byte,
+    as :func:`_posting_rows` makes them.  A scalar is rendered as a
+    string (``cast("string")``), then is the one term of a plain field
+    (length byte 0, schema.rs:72-78) or is analyzed.  An
+    ``array<string>`` contributes every non-null item, as a term each
+    (plain) or analyzed and concatenated in item order
+    (mapping/mod.rs:192-227).  Otherwise the length byte is that of
+    the document's term count."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from ..similarity import length_byte
+    if pa.types.is_list(column.type) or pa.types.is_large_list(column.type):
+        items = [[x for x in a if x is not None] if a is not None else []
+                 for a in column.to_pylist()]
+        toks = (items if analyzer is None else
+                [[t for x in a for t in analyzer.terms(x)] for a in items])
+    else:
+        values = pc.cast(column, pa.string()).to_pylist()
+        if analyzer is None:
+            toks = [[v] if v is not None else [] for v in values]
+            return toks, np.zeros(len(toks), dtype=np.int32)
+        toks = [analyzer.terms(v) if v is not None else [] for v in values]
+    return toks, np.fromiter((length_byte(len(t)) for t in toks),
+                             dtype=np.int32, count=len(toks))
+
+
+def write_postings_driver(docs, layout: IndexLayout, config: IndexConfig,
+                          registry: AnalyzerRegistry, job: int
+                          ) -> Tuple[int, Dict[str, int]]:
+    """``write_postings`` on the driver, for a streaming batch, where
+    Spark's fixed per-job and per-task costs outweigh its data:
+    pyarrow and numpy, zero Spark jobs.  ``docs`` is the job's written
+    docs table read back with pyarrow (doc_id, the key, and every
+    field, each of a type :func:`check_field_types` accepts).
+
+    Every function that decides bytes is the build's: the
+    analyzer chain (``Analyzer.terms``, which the SQL tokenizer path
+    is pinned equal to), ``similarity.length_byte``,
+    ``layout.term_bucket``, the doc_index kbucket hash and the
+    build's encoder (``_encode_partitions_arrow``); the terms and
+    length bytes are :func:`_posting_rows`' (:func:`_field_terms`).
+    The encoder gets rows sorted as ``write_postings`` sorts them,
+    (tbucket, field_ord, term, segment, doc_id), with a group ordinal
+    for ``gkey``: it only compares adjacent keys.  Writes the postings
+    per ``tbucket=``, the term_dict and the doc_index per
+    ``kbucket=``, in the layout Spark writes.  Returns ``(n_blocks,
+    total_tokens per field)``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     from .doc_index import write_doc_index_driver
     from .layout import term_bucket, write_arrow_table
 
@@ -690,19 +742,10 @@ def write_postings_driver(docs, layout: IndexLayout, config: IndexConfig,
     row_docs: List[np.ndarray] = []
     row_lens: List[np.ndarray] = []
     for ford, (fname, analyzer_name) in enumerate(config.fields.items()):
-        values = docs.column(fname).to_pylist()
-        if analyzer_name is None:
-            # PlainString: the raw value is the one term, len_byte 0
-            toks = [[v] if v is not None else [] for v in values]
-        else:
-            analyze = registry.get(analyzer_name).terms
-            toks = [analyze(v) if v is not None else [] for v in values]
+        toks, lens = _field_terms(docs.column(fname), analyzer_name
+                                  and registry.get(analyzer_name))
         counts = np.fromiter(map(len, toks), dtype=np.int64,
                              count=len(toks))
-        lens = (np.zeros(len(toks), dtype=np.int32)
-                if analyzer_name is None else
-                np.fromiter(map(length_byte, counts.tolist()),
-                            dtype=np.int32, count=len(toks)))
         terms.extend(t for ts in toks for t in ts)
         row_docs.append(np.repeat(doc_ids, counts))
         row_lens.append(np.repeat(lens, counts))
@@ -763,8 +806,8 @@ def write_postings_driver(docs, layout: IndexLayout, config: IndexConfig,
         }, schema=term_dict.schema)
     write_arrow_table(layout.job_dir("term_dict", job), term_dict.sort_by(
         [("field", "ascending"), ("term", "ascending")]))
-    write_doc_index_driver(docs.column(config.key_col).to_pylist(), doc_ids,
-                           layout, config, job)
+    write_doc_index_driver(docs.column(config.key_col).combine_chunks(),
+                           doc_ids, layout, config, job)
     return n_blocks, tokens
 
 
@@ -811,6 +854,5 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
     t0 = time.monotonic()
     written = write_docs(spark, doc_columns(ids, config), layout, config,
                          job)
-    rows = _posting_rows(written.docs, config, registry,
-                         precount=config.precount)
+    rows = _posting_rows(written.docs, config, registry)
     return finish_job(spark, rows, written, layout, config, job, t0, extra)

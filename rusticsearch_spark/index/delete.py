@@ -18,14 +18,13 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import List, Optional
+from typing import Any, List, Optional
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .doc_index import key_is_string, resolve_keys, resolve_keys_driver
-from .layout import IndexLayout
+from .doc_index import resolve_keys_driver
+from .layout import IndexConfig, IndexLayout
 
 
 def load_deletions(spark: SparkSession, layout: IndexLayout,
@@ -50,22 +49,6 @@ def deleted_doc_ids(dirs: List[str]) -> np.ndarray:
     return np.unique(np.concatenate(
         [pq.read_table(d, columns=["doc_id"]).column("doc_id")
          .to_numpy().astype(np.int64) for d in dirs]))
-
-
-def write_deletions(layout: IndexLayout, target: DataFrame) -> int:
-    """Append ``target`` (a ``doc_id`` frame) as a new deletion list in
-    ONE Spark job: the row count rides the write as an observe()
-    metric, and a list that came out empty is removed again.  Returns
-    the number of doc ids written."""
-    from pyspark.sql import Observation
-    obs = Observation()
-    path = layout.next_deletion_dir()
-    (target.coalesce(1).observe(obs, F.count(F.lit(1)).alias("n"))
-     .write.mode("overwrite").parquet(path))
-    n = int(obs.get["n"])
-    if not n:
-        shutil.rmtree(path, ignore_errors=True)
-    return n
 
 
 def write_deletion_ids(layout: IndexLayout, doc_ids: np.ndarray) -> int:
@@ -99,93 +82,70 @@ def retire_doc_ids(layout: IndexLayout, doc_ids) -> int:
     return write_deletion_ids(layout, ids)
 
 
-def committed_docs(spark: SparkSession, layout: IndexLayout,
-                   jobs: List[int]) -> Optional[DataFrame]:
-    """The docs tables of the committed ``jobs``, or None if none
-    has one."""
+def nested_cascade(layout: IndexLayout, config: IndexConfig,
+                   jobs: List[int], keys: Optional[List[Any]] = None,
+                   doc_ids: Optional[np.ndarray] = None) -> np.ndarray:
+    """``doc_id`` of every committed nested child row (any depth) of
+    the root documents keyed ``keys``, or of the root documents among
+    ``doc_ids`` — the cascade of deleting or replacing a parent.  On
+    the driver with pyarrow, zero Spark jobs: one filtered read of the
+    ``doc_id``, ``_nested_parent`` and ``_nested_root`` columns of
+    each committed docs dir (and, for ``doc_ids``, one of the key
+    column first, to name the roots).  ``_nested_root`` reaches every
+    descendant level; the key column of a nested index is a string
+    (``mapping.prepare_docs``), so the keys compare as strings."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
     dirs = layout.committed_dirs("docs", jobs=jobs)
+
+    def _read(columns, where):
+        return pa.concat_tables(
+            [ds.dataset(d, format="parquet").to_table(columns=columns,
+                                                      filter=where)
+             for d in dirs])
+
     if not dirs:
-        return None
-    return spark.read.option("basePath", layout.table("docs")).parquet(*dirs)
-
-
-def nested_children(docs: DataFrame, key_col: str,
-                    parent_keys: DataFrame) -> DataFrame:
-    """``doc_id`` of every nested child row (any depth) in ``docs`` of
-    the documents keyed ``parent_keys`` (a one-column frame named
-    ``key_col``) — the cascade of deleting or replacing a parent."""
-    # _nested_root reaches EVERY descendant level in one semi-join
-    return (docs.where(F.col("_nested_parent").isNotNull())
-            .join(parent_keys.select(F.col(key_col).cast("string")
-                                     .alias("_nested_root")),
-                  "_nested_root", "left_semi")
-            .select("doc_id"))
+        return np.zeros(0, dtype=np.int64)
+    if doc_ids is not None:
+        keys = _read([config.key_col],
+                     ds.field("doc_id").isin(pa.array(doc_ids, pa.int64()))
+                     & ds.field("_nested_parent").is_null()) \
+            .column(config.key_col).to_pylist()
+    roots = pa.array(sorted({str(k) for k in keys if k is not None}),
+                     pa.string())
+    return _read(["doc_id"], ds.field("_nested_parent").is_valid()
+                 & ds.field("_nested_root").isin(roots)) \
+        .column("doc_id").to_numpy().astype(np.int64)
 
 
 def delete_documents(spark: SparkSession, index_dir: str,
-                     keys: Optional[List[str]] = None,
+                     keys: Optional[List[Any]] = None,
                      doc_ids: Optional[List[int]] = None) -> int:
-    """Mark documents deleted by key (PK lookup) or by doc_id.
+    """Mark documents deleted by key (PK lookup) or by doc_id: exactly
+    one of ``keys`` and ``doc_ids``, else ValueError.  A nested
+    parent takes its child rows with it (:func:`nested_cascade`).
 
-    Returns the number of newly resolved doc ids written (0 if no
-    key matched — deleting a missing key is a no-op, as in
-    document_index.rs:96-110).
+    Runs on the driver, zero Spark jobs (``spark`` is not used): keys
+    resolve through the doc_index sidecar, reading only the kbucket
+    dirs they hash into (document_index.rs ``k<doc_key>`` point
+    lookup, ``doc_index.resolve_keys_driver``), and the ids are
+    written as one deletion list.  Returns the number of newly deleted
+    doc ids (0 if no key matched — deleting a missing key is a no-op,
+    as in document_index.rs:96-110).
     """
+    if (keys is None) == (doc_ids is None):
+        raise ValueError("delete_documents takes exactly one of keys= "
+                         "and doc_ids=")
     layout = IndexLayout(index_dir)
     config = layout.read_config()
     jobs = layout.completed_jobs()        # the one lineage snapshot
-    if not config.nested_paths:
-        # no child rows to cascade to: resolve and write on the driver
-        # (zero Spark jobs) when the ids are given, or the keys are
-        # strings the driver hashes as Spark does
-        if keys is None and doc_ids is not None:
-            return retire_doc_ids(layout, doc_ids)
-        if keys is not None and key_is_string(layout, config, jobs):
-            hits = resolve_keys_driver(layout, config, jobs,
-                                       [str(k) for k in keys])
-            return retire_doc_ids(layout, hits.column("doc_id").to_numpy())
     if keys is not None:
-        # PK lookup through the doc_index sidecar: reads only the
-        # kbucket partitions the keys hash into (document_index.rs
-        # k<doc_key> point lookup), not every docs dir.  Probe values
-        # are shipped as strings; resolve_keys casts them back to the
-        # INDEXED key type before hashing so non-string keys (e.g. a
-        # long PK) land in the right kbucket partitions.
-        probe = [str(k) for k in keys]
-        keys_df = spark.createDataFrame(
-            [(k,) for k in probe], f"{config.key_col} string")
-        resolved = resolve_keys(spark, layout, config, keys_df, jobs=jobs,
-                                key_values=probe)
-        if resolved is None:
-            return 0
-        target = resolved.select("doc_id")
-        if config.nested_paths:
-            # cascade: a parent's child rows (nested-type array
-            # elements) die with it — a two-column docs projection;
-            # deletes are rare and off the query hot path (the same
-            # cost class as the merge that later applies them)
-            docs = committed_docs(spark, layout, jobs)
-            if docs is not None:
-                target = target.unionByName(
-                    nested_children(docs, config.key_col, keys_df))
-    elif doc_ids is not None:
-        target = spark.createDataFrame(
-            [(int(d),) for d in doc_ids], "doc_id long")
-        docs = (committed_docs(spark, layout, jobs)
-                if config.nested_paths else None)
-        if docs is not None:
-            # same cascade as the keys= path: a parent deleted by raw
-            # doc_id must take its child rows with it, or they stay
-            # live forever (and merges would re-encode orphans).
-            # Resolve the parents' KEYS from the docs table first.
-            pkeys = (docs.join(target, "doc_id", "left_semi")
-                     .where(F.col("_nested_parent").isNull())
-                     .select(config.key_col))
-            target = target.unionByName(
-                nested_children(docs, config.key_col, pkeys))
-    target = target.distinct()
-    already = load_deletions(spark, layout)
-    if already is not None:
-        # deleting a deleted doc is a no-op (document_index.rs:96-110)
-        target = target.join(already, "doc_id", "left_anti")
-    return write_deletions(layout, target)
+        ids = resolve_keys_driver(layout, config, jobs,
+                                  keys).column("doc_id").to_numpy()
+    else:
+        ids = np.asarray(doc_ids, dtype=np.int64)
+    if config.nested_paths:
+        ids = np.concatenate([ids, nested_cascade(
+            layout, config, jobs, keys=keys,
+            doc_ids=None if keys is not None else ids)])
+    return retire_doc_ids(layout, ids)

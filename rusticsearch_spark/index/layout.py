@@ -44,7 +44,10 @@ from ..analysis import ANALYSIS_VERSION
 #: bucket with their root document; posting blocks carry
 #: ``(df_block, sum_tf)`` metadata only.  Indexes without a stamp
 #: predate it.
-INDEX_FORMAT = 1
+#: Format 2: ``config.json`` loses format 1's switch for the term
+#: frequency pre-count (the build always pre-counts map-side); the
+#: data files are format 1's.
+INDEX_FORMAT = 2
 
 
 def qname(col: str) -> str:
@@ -86,10 +89,6 @@ class IndexConfig:
     #: both sides
     search_analyzers: Dict[str, str] = field(default_factory=dict)
     stored: List[str] = field(default_factory=list)
-    #: map-side tf pre-count (partial hash agg) before the shuffle;
-    #: False = ship raw occurrences and run-length-merge in the
-    #: encoder after the sort (no hash-agg state in the whole build)
-    precount: bool = True
     n_buckets: int = 32          # url-hash buckets (doc-id namespace)
     tbuckets: int = 8            # term-hash partition dirs of `postings`
     #: key-hash partition dirs of the `doc_index` PK sidecar.  Unlike

@@ -387,14 +387,6 @@ class SearchEngine:
             self._local = ShardedSearcher(index_dir, lazy=serving_lazy)
 
     @cached_property
-    def key_is_string(self) -> bool:
-        """Whether the key column is a string — decided once per
-        engine, so a point GET pays no schema read (see
-        index.doc_index.lookup_key_driver)."""
-        from ..index.doc_index import key_is_string
-        return key_is_string(self.layout, self.config, self._jobs)
-
-    @cached_property
     def _deleted_ids(self) -> np.ndarray:
         from ..index.delete import deleted_doc_ids
         return deleted_doc_ids(self._deletion_dirs)

@@ -26,6 +26,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from ..index.codec import decode_blocks_concat
+from ..index.delete import deleted_doc_ids
 from ..index.layout import IndexConfig, IndexLayout
 from ..similarity import bm25_f32, lengths_from_bytes, tfidf_f32
 from ..analysis.analyzers import AnalyzerRegistry, parse_analysis_settings
@@ -285,11 +286,8 @@ class LocalSearcher:
                 for d in docs_dirs] or
                 [np.empty(0, dtype=np.int64)]))
         ddirs = layout.deletion_dirs()
-        self.deleted: Optional[np.ndarray] = None
-        if ddirs:
-            self.deleted = np.unique(np.concatenate([
-                pq.read_table(d, columns=["doc_id"])
-                .column("doc_id").to_numpy() for d in ddirs]))
+        self.deleted: Optional[np.ndarray] = (
+            deleted_doc_ids(ddirs) if ddirs else None)
 
     # -- public API ---------------------------------------------------
     def parse(self, query_json: dict) -> dsl.Query:

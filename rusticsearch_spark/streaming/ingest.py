@@ -18,58 +18,45 @@ each batch gets a disjoint bucket namespace
 (``STREAM_BUCKET_BASE + batch_id * n_buckets``).
 
 Small batches pay for their data, not for Spark.  Every batch is
-evaluated once, by its Spark docs write.  A batch whose key and fields
-are scalar strings, with no nested paths, then does everything else
-on the driver with pyarrow and numpy: key resolution and the deletion
-list of an upsert, the postings, the term_dict and the doc_index
-sidecar — one Spark job per batch instead of seven, because each of
-the Spark path's jobs moved well under a megabyte and paid Spark's
-fixed per-job and per-task (Python worker) costs.  Both paths call
-the same byte-deciding functions (analyzer chain, length byte, term
-and key hashes, the build's encoder) and write the same rows
-(tests/test_driver_ingest.py).  There is no batch-size gate:
-BENCH/write_path_r13.jsonl (``local[4]``, ~400-byte docs) has the
-driver path faster at every size measured, 250 to 65,536 docs
-(0.8-1.2 s against 4.1-6.0 s at 250-1k docs, 11.7-12.1 s against
-17.7-21.0 s at 64k), and the driver's key resolve faster up to 0.99
-GB of touched sidecar (``doc_index.resolve_keys_driver``).  The Spark
-path stays for what the driver does not reproduce — non-string keys,
-array fields, nested paths — and is what the build and the merge
-run.  ``process_batch`` returns which path ran.
+evaluated once, by its Spark docs write; everything else runs on the
+driver with pyarrow and numpy: key resolution and the deletion list of
+an upsert (the nested cascade included, ``delete.nested_cascade``),
+the postings, the term_dict and the doc_index sidecar — one Spark job
+per batch, because each of the seven jobs a Spark index half ran moved
+well under a megabyte and paid Spark's fixed per-job and per-task
+(Python worker) costs.  The driver calls the build's byte-deciding
+functions (analyzer chain, length byte, term and key hashes, the
+encoder) and writes the rows the build's Spark index half writes for
+the same docs (tests/test_driver_ingest.py).  There is no batch-size
+gate: BENCH/write_path_r13.jsonl (``local[4]``, ~400-byte docs) has
+the driver faster at every size measured, 250 to 65,536 docs (0.8-1.2
+s against 4.1-6.0 s at 250-1k docs, 11.7-12.1 s against 17.7-21.0 s at
+64k), and the driver's key resolve faster up to 0.99 GB of touched
+sidecar (``doc_index.resolve_keys_driver``).  The key column must be a
+string or an integer, and every field a string, integer, boolean or
+``array<string>`` column (what the driver renders as Spark's
+``cast("string")``); a batch with another type is refused before
+anything is written.  The insert-only dedup stays a Spark anti-join.
 """
 
 from __future__ import annotations
 
 import time
-from typing import List, NamedTuple, Optional
+from typing import Optional
 
+import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..index.build import (WrittenDocs, _posting_rows, _registry,
-                           assign_doc_ids, commit_written, doc_columns,
-                           finish_job, write_docs, write_postings_driver)
-from ..index.delete import (committed_docs, nested_children, retire_doc_ids,
-                            write_deletions)
-from ..index.doc_index import (_is_string, key_arrow_type, resolve_keys,
-                               resolve_keys_driver)
+from ..index.build import (_registry, assign_doc_ids, check_field_types,
+                           commit_written, doc_columns, write_docs,
+                           write_postings_driver)
+from ..index.delete import nested_cascade, retire_doc_ids
+from ..index.doc_index import check_key_type, resolve_keys, resolve_keys_driver
 from ..index.layout import IndexConfig, IndexLayout
 
 STREAM_JOB_BASE = 100_000
 STREAM_BUCKET_BASE = 1_000_000
-
-class BatchResult(NamedTuple):
-    """What ``process_batch`` did."""
-
-    #: the batch's committed lineage row (for a replayed batch, the row
-    #: its first run committed)
-    lineage: dict
-    #: where the postings, term_dict and doc_index were written:
-    #: ``"driver"`` or ``"spark"``; None when the batch indexed nothing
-    #: (a replay, or no documents)
-    postings: Optional[str]
-
 
 class StreamingIngester:
     def __init__(self, spark: SparkSession, index_dir: str,
@@ -88,16 +75,20 @@ class StreamingIngester:
         self.dedup_keys = dedup_keys
         self.upsert = upsert
 
-    def process_batch(self, batch_df: DataFrame,
-                      batch_id: int) -> BatchResult:
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
+        """Index one micro-batch as job ``STREAM_JOB_BASE + batch_id``
+        and return its committed lineage row (for a replayed batch,
+        the row its first run committed)."""
         job = STREAM_JOB_BASE + int(batch_id)
         # the one lineage snapshot
         committed = {r["job"]: r for r in self.layout.lineage()}
         if job in committed:
             # replayed batch: lineage says done → idempotent skip
-            return BatchResult(committed[job], None)
+            return committed[job]
         jobs = sorted(committed)
         key = self.config.key_col
+        check_key_type(batch_df.schema, key)
+        check_field_types(batch_df.schema, self.config)
         batch_df = batch_df.dropDuplicates([key])
         if self.dedup_keys and not self.upsert:
             # first-writer-wins insert: skip keys already indexed
@@ -125,97 +116,35 @@ class StreamingIngester:
             self.layout.clear_incomplete_job(job)
             row = {"job": job, "n_docs": 0, "status": "done", **extra}
             self.layout.commit_job(self.spark, row)
-            return BatchResult(row, None)
-        if self._on_driver(written, jobs):
-            return BatchResult(self._index_on_driver(written, jobs, job, t0,
-                                                     extra), "driver")
-        if self.upsert:
-            self._retire_replaced(written.docs, jobs, job)
-        rows = _posting_rows(written.docs, self.config, self.registry,
-                             precount=self.config.precount)
-        return BatchResult(finish_job(self.spark, rows, written, self.layout,
-                                      self.config, job, t0, extra), "spark")
-
-    def _on_driver(self, written: WrittenDocs, jobs: List[int]) -> bool:
-        """Whether the batch's index half runs on the driver: a batch
-        with no nested paths whose key and fields are scalar strings
-        (what the driver's analysis and key hash reproduce), against
-        an index whose stored keys are strings too."""
-        schema = written.docs.schema
-        if (self.config.nested_paths
-                or not all(isinstance(schema[c].dataType, T.StringType)
-                           for c in [self.config.key_col,
-                                     *self.config.fields])):
-            return False
-        stored_key = key_arrow_type(self.layout, self.config, jobs)
-        return stored_key is None or _is_string(stored_key)
-
-    def _index_on_driver(self, written: WrittenDocs, jobs: List[int],
-                         job: int, t0: float, extra: dict) -> dict:
-        """Everything after the docs write, with pyarrow and numpy on
-        the driver (zero Spark jobs): the upsert's deletion list, then
-        ``build.write_postings_driver``, then the field stats and the
-        lineage commit."""
-        import pyarrow.parquet as pq
-        key = self.config.key_col
+            return row
         docs = pq.read_table(
             self.layout.job_dir("docs", job),
             columns=list(dict.fromkeys(["doc_id", key, *self.config.fields])))
         if self.upsert:
-            # insert_or_update semantics: see _retire_replaced
-            hits = resolve_keys_driver(self.layout, self.config, jobs,
-                                       docs.column(key).to_pylist())
-            retire_doc_ids(self.layout, hits.column("doc_id").to_numpy())
+            # insert_or_update semantics (rocksdb/mod.rs:212-226): every
+            # committed doc whose key the batch carries is marked
+            # deleted; the batch's docs become the live versions under
+            # fresh doc_ids at the commit.  Committed jobs only: an
+            # orphan dir from a crashed job must not source delete
+            # marks.
+            keys = docs.column(key).to_pylist()
+            retired = resolve_keys_driver(self.layout, self.config, jobs,
+                                          keys).column("doc_id").to_numpy()
+            if self.config.nested_paths:
+                # ALL committed children of the batch's parents die
+                # too: a new version with FEWER array elements would
+                # otherwise leave the removed elements' child rows live
+                # (their synthetic "<parent>#<path>#<pos>" keys are not
+                # in the batch).  The batch re-creates the survivors.
+                # Its child keys cascade to nothing: no row has one as
+                # its _nested_root.
+                retired = np.concatenate([retired, nested_cascade(
+                    self.layout, self.config, jobs, keys=keys)])
+            retire_doc_ids(self.layout, retired)
         n_blocks, tokens = write_postings_driver(
             docs, self.layout, self.config, self.registry, job)
         return commit_written(self.spark, written, self.layout, self.config,
                               job, t0, n_blocks, tokens, extra)
-
-    def _retire_replaced(self, docs: DataFrame, jobs: List[int],
-                         job: int) -> None:
-        """insert_or_update semantics (rocksdb/mod.rs:212-226): mark
-        every committed doc whose key the batch carries deleted; the
-        batch's docs (``docs``, job ``job``'s written table) become
-        the live versions under fresh doc_ids at the commit.  The
-        lookup goes through the doc_index PK sidecar — only the
-        kbucket partitions the batch's keys hash into are scanned
-        (document_index.rs point-lookup analogue), and those buckets
-        are hashed on the driver from the written parquet.  Committed
-        jobs only: an orphan dir from a crashed job must not source
-        delete marks."""
-        import pyarrow.dataset as ds
-        key = self.config.key_col
-
-        def _probe():
-            for rb in ds.dataset(self.layout.job_dir("docs", job),
-                                 format="parquet").to_batches(
-                                     columns=[key]):
-                yield from rb.column(0).to_pylist()
-
-        existing = resolve_keys(self.spark, self.layout, self.config,
-                                docs.select(key), jobs=jobs,
-                                key_values=_probe())
-        targets = (existing.select("doc_id")
-                   if existing is not None else None)
-        if self.config.nested_paths:
-            # cascade to nested child rows: an upsert whose new version
-            # has FEWER array elements would otherwise leave the
-            # removed elements' child rows live (their synthetic
-            # "<parent>#<path>#<pos>" keys are absent from the batch,
-            # so the key-level lookup above never sees them).  ALL
-            # committed children of the batch's parent keys die; the
-            # batch re-creates the surviving elements under fresh
-            # doc_ids.
-            committed = committed_docs(self.spark, self.layout, jobs)
-            if committed is not None:
-                kids = nested_children(
-                    committed, key,
-                    docs.where(F.col("_nested_parent").isNull())
-                    .select(key))
-                targets = (kids if targets is None
-                           else targets.unionByName(kids))
-        if targets is not None:
-            write_deletions(self.layout, targets.distinct())
 
 
 def ingest_stream(spark: SparkSession, stream_df: DataFrame,

@@ -200,13 +200,18 @@ def test_merge_preserves_sidecar(spark, webtext, tmp_path):
 def test_xxhash64_parity(spark):
     """Driver-side XXH64 must agree bit-for-bit with Spark's
     xxhash64 over strings — every length class (empty, <4, <8, <32,
-    >=32 incl. multi-stripe) plus non-ASCII."""
+    >=32 incl. multi-stripe) plus non-ASCII — and over int64 and int32
+    values (0, ±1, the extremes, random), as the key hash encodes
+    them."""
     import random
     import string as _string
 
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
-    from rusticsearch_spark.index.doc_index import xxhash64_str
+    from rusticsearch_spark.index.doc_index import (key_encoder,
+                                                    xxhash64_bytes,
+                                                    xxhash64_str)
     rng = random.Random(7)
     cases = ["", "a", "abc", "abcd", "abcdefg", "abcdefgh",
              "x" * 31, "y" * 32, "z" * 100,
@@ -218,6 +223,18 @@ def test_xxhash64_parity(spark):
         .select("s", F.xxhash64("s").alias("h"))
     for r in df.collect():
         assert xxhash64_str(r.s) == r.h, r.s
+    for arrow_type, spark_type in ((pa.int64(), "long"), (pa.int32(), "int")):
+        bits = arrow_type.bit_width
+        lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
+        values = [0, 1, -1, lo, hi, lo + 1, hi - 1]
+        values += [rng.randint(lo, hi) for _ in range(40)]
+        encode = key_encoder(arrow_type)
+        rows = spark.createDataFrame([(v,) for v in values],
+                                     f"v {spark_type}") \
+            .select("v", F.xxhash64("v").alias("h")).collect()
+        assert len(rows) == len(values)
+        for r in rows:
+            assert xxhash64_bytes(encode(r.v)) == r.h, (spark_type, r.v)
 
 
 def test_get_document_zero_spark_jobs(spark, webtext, tmp_path):
@@ -257,10 +274,10 @@ def test_get_document_zero_spark_jobs(spark, webtext, tmp_path):
 
 def test_get_document_non_string_key(spark, tmp_path):
     """A long key column is kbucketed by Spark's hash of the native
-    type, which the driver's string hash cannot reproduce: GET must
-    go straight to the Spark scan and find every document, whether
-    the key arrives as an int or as its string form — including keys
-    whose string-hash bucket holds no sidecar partition at all."""
+    type, which the driver reproduces: GET finds every document with
+    zero Spark jobs, whether the key arrives as an int or as its
+    string form — including keys whose string-hash bucket holds no
+    sidecar partition at all."""
     from rusticsearch_spark.cluster import Cluster
     from rusticsearch_spark.index.doc_index import xxhash64_str
     c = Cluster(spark, str(tmp_path / "intkey_cluster"))
@@ -270,18 +287,27 @@ def test_get_document_non_string_key(spark, tmp_path):
     c.bulk("nums", spark.createDataFrame(rows, "id long, text string"),
            key_col="id", n_buckets=2, tbuckets=2, shuffle_partitions=2)
     eng = c.engine("nums")
-    assert not eng.key_is_string
     present = {int(d.split("=")[1]) for j in eng._jobs
                for d in os.listdir(eng.layout.job_dir("doc_index", j))
                if d.startswith("kbucket=")}
     assert any(xxhash64_str(str(i)) % eng.config.kbuckets not in present
                for i, _ in rows)
+    sc = spark.sparkContext
+    group = "getdoc_long_key"
+    sc.setJobGroup(group, "get_document")
+    try:
+        got = {(i, key): c.get_document("nums", key)
+               for i, _ in rows for key in (i, str(i))}
+        missing = (c.get_document("nums", 99),
+                   c.get_document("nums", "not a number"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
     for i, text in rows:
         for key in (i, str(i)):
-            got = c.get_document("nums", key)
-            assert got is not None, key
-            assert (got["id"], got["text"]) == (i, text)
-    assert c.get_document("nums", 99) is None
+            assert got[(i, key)] is not None, key
+            assert (got[(i, key)]["id"], got[(i, key)]["text"]) == (i, text)
+    assert missing == (None, None)
 
 
 def test_get_document_same_keys_across_job_schemas(spark, tmp_path):
@@ -310,7 +336,6 @@ def test_get_document_same_keys_across_job_schemas(spark, tmp_path):
             [("https://b.example/2", "second job text", "fr", "ann")],
             "url string, text string, lang string, author string"), 1)
     eng = c.engine("pages")
-    assert eng.key_is_string
     for key, author in (("https://a.example/1", None),
                         ("https://b.example/2", "ann")):
         want = eng.docs.where(F.col("url") == key).limit(1).collect()

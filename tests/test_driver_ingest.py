@@ -1,18 +1,23 @@
-"""Small upsert batches index on the driver, writing what Spark writes.
+"""Upsert batches and deletes run on the driver, writing what Spark writes.
 
 ``StreamingIngester.process_batch`` runs everything after a batch's
-docs write on the driver (``build.write_postings_driver``) when its key
-and fields are scalar strings and the index has no nested paths.  The
-same batch goes through both paths here, on two copies of one index;
-the Spark path is forced by patching ``StreamingIngester._on_driver``.
-The batch carries non-ASCII text (the rows the SQL tokenizer hands to the
-Python analyzer), a null text, a plain-string field, a duplicated key
-and a null key.  Every table the index half writes must hold the same
-rows, and both query lanes must return the same top-k.
+docs write on the driver: ``build.write_postings_driver`` for the
+postings, term_dict and doc_index, ``doc_index.resolve_keys_driver``
+and ``delete.nested_cascade`` for the upsert's deletion ids.  The
+reference is Spark, computed here over the same written docs: the
+build's ``_posting_rows`` through ``build.finish_job``, and
+``resolve_keys`` plus a DataFrame cascade over the committed docs for
+the deletion ids.  Batch shapes: string keys (non-ASCII text — the
+rows the SQL tokenizer hands to the Python analyzer — a null text, a
+plain-string field, a duplicated key and a null key); ``array<string>``
+fields with null items; a long key with integer and boolean plain
+fields; and a nested index whose upsert shrinks an array.  Every table
+the index half writes must hold the same rows, and both query lanes
+must return the same top-k.
 
 A batch with no tokens at all leaves the tables the Spark path
-leaves, so a full merge reads it; a delete by key resolved on the
-driver writes the ids Spark's resolve writes.
+leaves, so a full merge reads it; a delete by key or doc id on the
+driver writes the ids the Spark reference resolves.
 
 Also pinned: the driver writer crashing after its deletion list and
 postings are on disk (in the doc_index write, or at the lineage
@@ -24,15 +29,22 @@ from __future__ import annotations
 import os
 import shutil
 
+import time
+
 import numpy as np
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from rusticsearch_spark.index import doc_index
-from rusticsearch_spark.index.build import build_index
-from rusticsearch_spark.index.delete import deleted_doc_ids
-from rusticsearch_spark.index.layout import IndexConfig, IndexLayout
+from rusticsearch_spark.index.build import (WrittenDocs, _posting_rows,
+                                            _registry, build_index,
+                                            finish_job)
+from rusticsearch_spark.index.delete import (delete_documents,
+                                             deleted_doc_ids, load_deletions,
+                                             write_deletion_ids)
+from rusticsearch_spark.index.layout import IndexConfig, IndexLayout, qname
 from rusticsearch_spark.query.engine import SearchEngine
 from rusticsearch_spark.query.local import LocalSearcher
 from rusticsearch_spark.streaming import ingest
@@ -85,18 +97,74 @@ def _copy(base, name):
     return out
 
 
+def _spark_deletion_ids(spark, layout, config, jobs, keys=None,
+                        doc_ids=None):
+    """The doc ids a delete by ``keys`` (a one-column frame) or by
+    ``doc_ids`` (a ``doc_id`` frame) retires, resolved on Spark:
+    ``resolve_keys``, then a nested index's cascade over the committed
+    docs, minus the ids already on a deletion list."""
+    from rusticsearch_spark.index.doc_index import resolve_keys
+    key = config.key_col
+    if keys is not None:
+        resolved = resolve_keys(spark, layout, config, keys, jobs=jobs)
+        target = resolved.select("doc_id")
+        roots = keys
+    else:
+        target = doc_ids
+    if config.nested_paths:
+        committed = (spark.read.option("basePath", layout.table("docs"))
+                     .parquet(*layout.committed_dirs("docs", jobs=jobs)))
+        if keys is None:
+            roots = (committed.join(doc_ids, "doc_id", "left_semi")
+                     .where(F.col("_nested_parent").isNull()).select(key))
+        target = target.unionByName(
+            committed.where(F.col("_nested_parent").isNotNull())
+            .join(roots.select(F.col(key).cast("string")
+                               .alias("_nested_root")),
+                  "_nested_root", "left_semi").select("doc_id"))
+    already = load_deletions(spark, layout)
+    if already is not None:
+        target = target.join(already, "doc_id", "left_anti")
+    return np.array(sorted({r.doc_id for r in target.distinct().collect()}),
+                    dtype=np.int64)
+
+
+def _spark_reference(spark, drv, out, upsert=True):
+    """``out`` (a copy of the index ``drv`` was before its batch) given
+    the batch's docs as ``drv``'s driver path wrote them, then its
+    index half on Spark: the upsert's deletion ids from
+    :func:`_spark_deletion_ids`, the postings, term_dict, doc_index
+    and field stats from the build's ``_posting_rows`` through
+    ``finish_job``."""
+    layout = IndexLayout(out)
+    config = layout.read_config()
+    jobs = layout.completed_jobs()
+    shutil.copytree(IndexLayout(drv).job_dir("docs", JOB),
+                    layout.job_dir("docs", JOB))
+    docs = spark.read.parquet(layout.job_dir("docs", JOB))
+    counts = docs.agg(F.count(F.lit(1)).alias("n"),
+                      *[F.count(F.col(qname(f))).alias(f"f{i}")
+                        for i, f in enumerate(config.fields)]).first()
+    written = WrittenDocs(docs, counts["n"],
+                          {f: counts[f"f{i}"]
+                           for i, f in enumerate(config.fields)})
+    if upsert:
+        write_deletion_ids(layout, _spark_deletion_ids(
+            spark, layout, config, jobs, keys=docs.select(config.key_col)))
+    return finish_job(spark, _posting_rows(docs, config, _registry(config)),
+                      written, layout, config, JOB, time.monotonic(),
+                      {"batch_id": 0})
+
+
 @pytest.fixture(scope="module")
 def both(spark, base):
-    """The batch upserted on the driver into one copy and through Spark
-    into another."""
+    """The batch upserted on the driver into one copy, and its Spark
+    reference in another."""
     urls = base[2]
     drv, spk = _copy(base, "driver"), _copy(base, "spark")
     got_drv = StreamingIngester(spark, drv, upsert=True).process_batch(
         _batch(spark, urls), 0)
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(StreamingIngester, "_on_driver", lambda *a: False)
-        got_spk = StreamingIngester(spark, spk, upsert=True).process_batch(
-            _batch(spark, urls), 0)
+    got_spk = _spark_reference(spark, drv, spk)
     return drv, spk, got_drv, got_spk
 
 
@@ -111,7 +179,7 @@ def _rows(path, sort):
 
 _TABLES = {"postings": ["field", "term", "segment"],
            "term_dict": ["field", "term"],
-           "doc_index": ["kbucket", "url", "doc_id"],
+           "doc_index": ["kbucket", "doc_id"],
            "field_stats": ["field"],
            "docs": ["doc_id"]}
 
@@ -124,12 +192,14 @@ def _state(idx):
 
 
 def test_paths_taken(both):
+    """``process_batch`` returns the committed lineage row, which
+    agrees with the Spark reference's."""
     _, _, got_drv, got_spk = both
-    assert got_drv.postings == "driver"
-    assert got_spk.postings == "spark"
     for got in (got_drv, got_spk):
-        assert got.lineage["job"] == JOB
-        assert got.lineage["n_docs"] == 18       # the duplicate collapsed
+        assert got["job"] == JOB
+        assert got["batch_id"] == 0
+        assert got["n_docs"] == 18       # the duplicate collapsed
+    assert IndexLayout(both[0]).completed_jobs()[-1] == JOB
 
 
 def test_driver_path_writes_the_spark_rows(both):
@@ -141,8 +211,7 @@ def test_driver_path_writes_the_spark_rows(both):
     # 15 replaced documents: urls[:15] are in the base index
     assert len(del_drv) == 15
     assert del_drv == del_spk
-    assert (got_drv.lineage["n_posting_blocks"]
-            == got_spk.lineage["n_posting_blocks"])
+    assert got_drv["n_posting_blocks"] == got_spk["n_posting_blocks"]
 
 
 def test_null_key_lands_in_sparks_kbucket(both):
@@ -174,7 +243,7 @@ def test_pending_upsert_replaces_old_versions(spark, both, base):
     from rusticsearch_spark.cluster import Cluster
     eng = SearchEngine(spark, both[0])
     assert eng.count() == 60 + 2 + 1     # two new keys and the null key
-    doc = Cluster._get_document_driver(eng, base[2][0])
+    doc = Cluster._get_document(eng, base[2][0])
     assert doc["text"].startswith("updated café")
 
 
@@ -189,12 +258,8 @@ def test_batch_without_tokens_writes_what_spark_writes(spark, base):
          ("https://new.example/empty", None, None)],
         "url string, text string, lang string")
     drv, spk = _copy(base, "empty_driver"), _copy(base, "empty_spark")
-    assert StreamingIngester(spark, drv, upsert=True).process_batch(
-        batch, 0).postings == "driver"
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(StreamingIngester, "_on_driver", lambda *a: False)
-        assert StreamingIngester(spark, spk, upsert=True).process_batch(
-            batch, 0).postings == "spark"
+    StreamingIngester(spark, drv, upsert=True).process_batch(batch, 0)
+    _spark_reference(spark, drv, spk)
     (t_drv, del_drv), (t_spk, del_spk) = _state(drv), _state(spk)
     assert t_drv == t_spk
     assert del_drv == del_spk and len(del_drv) == 3
@@ -213,7 +278,7 @@ def test_batch_without_tokens_writes_what_spark_writes(spark, base):
 
 def test_delete_by_key_on_the_driver_matches_spark(spark, base, both):
     """``delete_documents`` by string keys resolves on the driver and
-    writes the ids Spark's ``resolve_keys`` path writes — keys
+    writes the ids Spark's ``resolve_keys`` resolves — keys
     upserted by the batch (two versions, one already deleted), base
     keys and a missing key."""
     from rusticsearch_spark.index import delete
@@ -225,9 +290,11 @@ def test_delete_by_key_on_the_driver_matches_spark(spark, base, both):
         shutil.rmtree(idx, ignore_errors=True)
         shutil.copytree(both[0], idx)
     assert delete.delete_documents(spark, drv, keys=keys) == 6
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(delete, "key_is_string", lambda *a: False)
-        assert delete.delete_documents(spark, spk, keys=keys) == 6
+    layout = IndexLayout(spk)
+    ids = _spark_deletion_ids(
+        spark, layout, layout.read_config(), layout.completed_jobs(),
+        keys=spark.createDataFrame([(k,) for k in keys], "url string"))
+    assert write_deletion_ids(layout, ids) == 6
     assert _state(drv) == _state(spk)
     assert len(_state(drv)[1]) == len(_state(both[0])[1]) + 6
 
@@ -249,7 +316,7 @@ def _crash_then_replay(spark, base, name, target, attr):
     assert JOB not in IndexLayout(idx).completed_jobs()
     got = StreamingIngester(spark, idx, upsert=True).process_batch(
         _batch(spark, base[2]), 0)
-    assert got.postings == "driver"
+    assert got["job"] == JOB
     return idx
 
 
@@ -290,3 +357,215 @@ def test_deletion_list_appears_whole(tmp_path):
     assert [os.path.basename(d) for d in dirs] == ["d000000"]
     assert sorted(pq.read_table(dirs[0]).column("doc_id").to_pylist()) \
         == [3, 5]
+
+
+NESTED_MAPPING = {"properties": {
+    "text": {"type": "string"},
+    "comments": {"type": "nested", "properties": {
+        "author": {"type": "string", "index": "not_analyzed"},
+        "stars": {"type": "integer"},
+    }},
+}}
+NESTED_SCHEMA = ("url string, text string, "
+                 "comments array<struct<author:string, stars:long>>")
+
+
+def _array_shape(spark, webtext, base):
+    """``array<string>`` fields, analyzed and plain, with null items,
+    an empty array and a null array."""
+    none = F.lit(None).cast("string")
+    build_index(spark, webtext.limit(40).select(
+        "url", F.array("text", none, F.lit("naïve résumé")).alias("text"),
+        F.array("lang", "lang", none).alias("lang")), base, _cfg())
+    urls = sorted(r.url for r in webtext.limit(40).select("url").collect())
+    batch = spark.createDataFrame(
+        [(k, [f"updated café text {i}", None, "Zürich straße"],
+          ["en", None, "en"]) for i, k in enumerate(urls[:6])]
+        + [(urls[6], None, None), (urls[7], [], []), (urls[8], [None], [None]),
+           ("https://new.example/arr", ["fresh spark data"], ["fr", "de"])],
+        "url string, text array<string>, lang array<string>")
+    queries = [{"match": {"text": "updated café"}},
+               {"match": {"text": "zürich naïve"}},
+               {"term": {"lang": "en"}}, {"term": {"lang": "de"}}]
+    deletes = [("keys", urls[:2] + urls[20:22] + ["https://missing.example/"])]
+    return batch, queries, deletes
+
+
+def _long_shape(spark, webtext, base):
+    """A long key (negative and wide values, a null) with integer and
+    boolean plain fields."""
+    rows = [((i - 20) * 7919 if i < 39 else 1 << 40, r.text, r.lang,
+             i % 7, i % 3 == 0)
+            for i, r in enumerate(webtext.orderBy("url").limit(40).collect())]
+    schema = "id long, text string, lang string, n int, flag boolean"
+    build_index(spark, spark.createDataFrame(rows, schema), base,
+                IndexConfig(key_col="id",
+                            fields={"text": "standard", "lang": None,
+                                    "n": None, "flag": None},
+                            n_buckets=4, tbuckets=2, shuffle_partitions=4))
+    ids = [r[0] for r in rows]
+    batch = spark.createDataFrame(
+        [(k, f"updated café text {i}", "en", None if i == 2 else i,
+          None if i == 3 else i % 2 == 0) for i, k in enumerate(ids[:6])]
+        + [(10 ** 12, "fresh spark data", "fr", 3, True),
+           (-(1 << 62), "fresh naïve text", "de", -1, False),
+           (None, "a document with a null key", "en", 0, None)], schema)
+    queries = [{"match": {"text": "updated café"}},
+               {"match": {"text": "spark query data"}},
+               {"term": {"n": "3"}}, {"term": {"flag": "true"}},
+               {"term": {"lang": "fr"}}]
+    deletes = [("keys", [ids[0], str(ids[1]), ids[20], str(ids[39]),
+                         123456789])]
+    return batch, queries, deletes
+
+
+def _nested_shape(spark, webtext, base):
+    """A nested index: the upsert shrinks one document's array, grows
+    another's and adds a document."""
+    from rusticsearch_spark.mapping import (mapping_to_config,
+                                            parse_mapping, prepare_docs)
+    fields = parse_mapping(NESTED_MAPPING)
+    cfg = mapping_to_config(fields, key_col="url", n_buckets=4, tbuckets=2,
+                            shuffle_partitions=4)
+    build_index(spark, prepare_docs(spark.createDataFrame(
+        [("u1", "spark engine", [("alice", 5), ("bob", 1)]),
+         ("u2", "table scan", [("alice", 1), ("bob", 5)]),
+         ("u3", "hash join", []),
+         ("u4", "sort merge", [("alice", 5)])], NESTED_SCHEMA),
+        fields, key_col="url"), base, cfg)
+    batch = prepare_docs(spark.createDataFrame(
+        [("u1", "spark engine updated", [("alice", 2)]),
+         ("u3", "hash join", [("carol", 4), ("dave", 5)]),
+         ("u9", "new doc", [("erin", 1)])], NESTED_SCHEMA),
+        fields, key_col="url")
+    nested = [{"term": {"comments.author": "alice"}},
+              {"term": {"comments.stars": 5}},
+              {"match_all": {}}]
+    queries = ([{"nested": {"path": "comments", "query": q}}
+                for q in nested] + [{"match": {"text": "spark hash"}}])
+    deletes = [("keys", ["u2", "u1", "u9#comments#0", "missing"]),
+               ("doc_ids", ["u2", "u4#comments#0"])]
+    return batch, queries, deletes
+
+
+SHAPES = {"array": _array_shape, "long": _long_shape,
+          "nested": _nested_shape}
+
+
+@pytest.fixture(scope="module", params=sorted(SHAPES))
+def shape(request, spark, webtext, tmp_path_factory):
+    """One batch shape upserted on the driver into a copy of its base
+    index, and its Spark reference in another."""
+    root = str(tmp_path_factory.mktemp(f"shape_{request.param}"))
+    base = os.path.join(root, "base")
+    batch, queries, deletes = SHAPES[request.param](spark, webtext, base)
+    drv, spk = os.path.join(root, "driver"), os.path.join(root, "spark")
+    for idx in (drv, spk):
+        shutil.copytree(base, idx)
+    got_drv = StreamingIngester(spark, drv, upsert=True).process_batch(
+        batch, 0)
+    got_spk = _spark_reference(spark, drv, spk)
+    return {"name": request.param, "root": root, "drv": drv, "spk": spk,
+            "got": (got_drv, got_spk), "queries": queries,
+            "deletes": deletes}
+
+
+def test_every_batch_shape_writes_the_spark_rows(shape):
+    (t_drv, del_drv), (t_spk, del_spk) = (_state(shape["drv"]),
+                                          _state(shape["spk"]))
+    for name in _TABLES:
+        assert t_drv[name], name
+        assert t_drv[name] == t_spk[name], name
+    assert del_drv and del_drv == del_spk
+    if shape["name"] == "array":
+        # an analyzed array's items beside a null item are indexed (six
+        # batch documents carry "Zürich straße" next to a None)
+        assert [r["df"] for r in t_drv["term_dict"]
+                if r["term"] == "zurich"] == [6]
+    got_drv, got_spk = shape["got"]
+    assert got_drv["n_posting_blocks"] == got_spk["n_posting_blocks"]
+
+
+def test_every_batch_shape_top_k_matches_spark(spark, shape):
+    drv, spk = shape["drv"], shape["spk"]
+    e_drv, e_spk = SearchEngine(spark, drv), SearchEngine(spark, spk)
+    l_drv, l_spk = LocalSearcher(drv), LocalSearcher(spk)
+    for q in shape["queries"]:
+        want = [(r.doc_id, r.score) for r in
+                e_spk.search(q, size=20).collect()]
+        assert want, q
+        assert [(r.doc_id, r.score) for r in
+                e_drv.search(q, size=20).collect()] == want, q
+        assert l_drv.search(q, size=20) == l_spk.search(q, size=20), q
+        assert e_drv.count(q) == e_spk.count(q), q
+    assert e_drv.count() == e_spk.count() == l_drv.count()
+
+
+def test_every_delete_form_matches_spark(spark, shape):
+    """``delete_documents`` by keys (long keys as ints and as strings,
+    nested keys) and by doc ids (a nested parent and a child) writes
+    the ids the Spark reference resolves, a nested parent's child rows
+    included."""
+    for form, which in shape["deletes"]:
+        drv = os.path.join(shape["root"], f"delete_{form}_driver")
+        spk = os.path.join(shape["root"], f"delete_{form}_spark")
+        for idx in (drv, spk):
+            shutil.rmtree(idx, ignore_errors=True)
+            shutil.copytree(shape["drv"], idx)
+        layout = IndexLayout(spk)
+        config = layout.read_config()
+        jobs = layout.completed_jobs()
+        if form == "keys":
+            n = delete_documents(spark, drv, keys=which)
+            ids = _spark_deletion_ids(
+                spark, layout, config, jobs, keys=spark.createDataFrame(
+                    [(str(k),) for k in which],
+                    f"{config.key_col} string"))
+        else:
+            docs = SearchEngine(spark, drv).docs
+            pick = [r.doc_id for r in docs.where(
+                F.col(config.key_col).isin(which)).collect()]
+            assert len(pick) == 2
+            n = delete_documents(spark, drv, doc_ids=pick)
+            ids = _spark_deletion_ids(
+                spark, layout, config, jobs, doc_ids=spark.createDataFrame(
+                    [(d,) for d in pick], "doc_id long"))
+        assert write_deletion_ids(layout, ids) == n > 0
+        assert _state(drv) == _state(spk), form
+
+
+@pytest.mark.parametrize("both_given", [False, True])
+def test_delete_documents_takes_exactly_one_of_keys_and_doc_ids(
+        spark, base, both_given):
+    """Neither ``keys`` nor ``doc_ids``, or both (on an index without
+    nested paths, where ``doc_ids`` used to be ignored): ValueError,
+    and no deletion list."""
+    idx = _copy(base, "delete_args")
+    kwargs = ({"keys": [base[2][0]], "doc_ids": [1]} if both_given else {})
+    with pytest.raises(ValueError, match="exactly one of"):
+        delete_documents(spark, idx, **kwargs)
+    assert IndexLayout(idx).deletion_dirs() == []
+
+
+@pytest.mark.parametrize("column", ["key", "field"])
+def test_unsupported_column_type_is_refused(spark, base, column):
+    """A double key column, or a map field the driver cannot render as
+    Spark's ``cast("string")``: ``process_batch`` (and, for the key,
+    ``build_index``) raises ValueError before writing anything."""
+    idx = _copy(base, f"bad_{column}")
+    if column == "key":
+        bad = spark.createDataFrame([(1.5, "some text", "en")],
+                                    "url double, text string, lang string")
+        with pytest.raises(ValueError, match="key column 'url'"):
+            build_index(spark, bad, os.path.join(base[0], "bad_build"),
+                        _cfg())
+        assert not os.path.exists(os.path.join(base[0], "bad_build"))
+    else:
+        bad = spark.createDataFrame(
+            [("https://new.example/m", "some text", {"a": "b"})],
+            "url string, text string, lang map<string,string>")
+    before = sorted(os.listdir(idx))
+    with pytest.raises(ValueError, match="must be"):
+        StreamingIngester(spark, idx, upsert=True).process_batch(bad, 0)
+    assert sorted(os.listdir(idx)) == before
+    assert not os.path.exists(IndexLayout(idx).job_dir("docs", JOB))

@@ -6,15 +6,14 @@ depend on the host).  Each call here should run only the jobs that
 write data, plus the few reads no driver-side read can replace:
 
 * ``write_job``: the docs, doc_index, postings and term_dict writes;
-* an upsert batch whose key and fields are scalar strings: its docs
-  write only.  Key resolution, the deletion list, postings, term_dict
-  and the doc_index sidecar are written on the driver;
-* an upsert batch with an array field, which only the Spark path
-  analyzes: ``write_job``'s four, the kbucket listing of the doc_index
-  sidecar, the broadcast of the written keys and the deletion-list
-  write;
-* ``delete_documents`` by key: none — keys resolve through the
-  doc_index sidecar on the driver, which writes the list too;
+* an upsert batch, whatever its key type (string or integer), field
+  types (an ``array<string>`` field included) or nested paths: its
+  docs write only.  Key resolution, the deletion list (a nested
+  parent's child rows included), postings, term_dict and the
+  doc_index sidecar are written on the driver;
+* ``delete_documents`` by key (string, long, nested) or by doc id:
+  none — keys resolve through the doc_index sidecar on the driver,
+  which writes the list too;
 * a full merge: the schema-merging docs read, the broadcast of the
   deletion lists, then ``write_job``'s four writes;
 * ``SearchEngine`` open: the postings and docs schema reads — lineage,
@@ -104,7 +103,7 @@ def write_path(spark, webtext, tmp_path_factory):
                 [(k, f"updated text {i}", "en") for i, k in enumerate(upd)]
                 + [(k, "fresh text", "fr") for k in new],
                 "url string, text string, lang string")
-            upserted, jobs["upsert_batch"] = _count_jobs(
+            _, jobs["upsert_batch"] = _count_jobs(
                 spark, lambda: StreamingIngester(
                     spark, idx, upsert=True).process_batch(batch, 0))
             gone = urls[20:25]
@@ -128,14 +127,12 @@ def write_path(spark, webtext, tmp_path_factory):
                 [(k, f"array text {i}", ["en", "fr"])
                  for i, k in enumerate(upd + new)],
                 "url string, text string, lang array<string>")
-            array_batch, jobs["upsert_batch_array_field"] = _count_jobs(
+            _, jobs["upsert_batch_array_field"] = _count_jobs(
                 spark, lambda: StreamingIngester(
                     spark, idx, upsert=True).process_batch(arrays, 1))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     return {"jobs": jobs, "gets": gets, "read_paths": read_paths,
-            "paths": {"upsert_batch": upserted.postings,
-                      "upsert_batch_array_field": array_batch.postings},
             "n_deleted": n_deleted, "upd": upd, "gone": gone,
             "pending_counts": pending,
             "merged_counts": merged_counts}
@@ -146,13 +143,80 @@ def test_write_job_runs_only_its_four_writes(write_path):
 
 
 def test_upsert_batch_jobs(write_path):
-    assert write_path["paths"]["upsert_batch"] == "driver"
     assert write_path["jobs"]["upsert_batch"] == 1
 
 
 def test_upsert_batch_with_an_array_field_runs_the_spark_path(write_path):
-    assert write_path["paths"]["upsert_batch_array_field"] == "spark"
-    assert write_path["jobs"]["upsert_batch_array_field"] == 7
+    """An ``array<string>`` field used to send the batch's index half
+    to Spark (7 jobs); the driver indexes it now."""
+    assert write_path["jobs"]["upsert_batch_array_field"] == 1
+
+
+@pytest.fixture(scope="module")
+def typed_write_path(spark, tmp_path_factory):
+    """Spark jobs of the calls a long key or a nested index used to
+    send to Spark: a nested upsert batch, and deletes by long key, by
+    nested key and by nested doc id."""
+    from rusticsearch_spark.mapping import (mapping_to_config,
+                                            parse_mapping, prepare_docs)
+    root = str(tmp_path_factory.mktemp("typed_write_path"))
+    longs, nested = os.path.join(root, "longs"), os.path.join(root, "nested")
+    build_index(spark, spark.createDataFrame(
+        [(i * 1000, f"document number {i}") for i in range(8)],
+        "id long, text string"), longs,
+        IndexConfig(key_col="id", fields={"text": "standard"},
+                    n_buckets=2, tbuckets=2, shuffle_partitions=2))
+    fields = parse_mapping({"properties": {
+        "text": {"type": "string"},
+        "comments": {"type": "nested", "properties": {
+            "author": {"type": "string", "index": "not_analyzed"}}}}})
+    cfg = mapping_to_config(fields, key_col="url", n_buckets=2, tbuckets=2,
+                            shuffle_partitions=2)
+    schema = "url string, text string, comments array<struct<author:string>>"
+
+    def _docs(rows):
+        return prepare_docs(spark.createDataFrame(rows, schema), fields,
+                            key_col="url")
+
+    build_index(spark, _docs([("u1", "spark", [("alice",), ("bob",)]),
+                              ("u2", "scan", [("carol",)]),
+                              ("u3", "join", [("dave",)])]), nested, cfg)
+    batch = _docs([("u1", "spark again", [("alice",)])])
+    jobs = {}
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, jobs["upsert_batch_nested"] = _count_jobs(
+            spark, lambda: StreamingIngester(
+                spark, nested, upsert=True).process_batch(batch, 0))
+        n_long, jobs["delete_long_key"] = _count_jobs(
+            spark, lambda: delete_documents(spark, longs,
+                                            keys=[1000, "2000"]))
+        n_key, jobs["delete_nested_key"] = _count_jobs(
+            spark, lambda: delete_documents(spark, nested, keys=["u2"]))
+        root_id = SearchEngine(spark, nested).docs.where(
+            F.col("url") == "u3").first().doc_id
+        n_id, jobs["delete_nested_doc_id"] = _count_jobs(
+            spark, lambda: delete_documents(spark, nested,
+                                            doc_ids=[root_id]))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    return {"jobs": jobs, "deleted": (n_long, n_key, n_id),
+            "live": SearchEngine(spark, nested).count()}
+
+
+def test_upsert_batch_nested_jobs(typed_write_path):
+    assert typed_write_path["jobs"]["upsert_batch_nested"] == 1
+
+
+def test_delete_documents_typed_keys_and_nested_jobs(typed_write_path):
+    jobs = typed_write_path["jobs"]
+    assert jobs["delete_long_key"] == 0
+    assert jobs["delete_nested_key"] == 0
+    assert jobs["delete_nested_doc_id"] == 0
+    # two long keys; u2 and u3 each with their one child
+    assert typed_write_path["deleted"] == (2, 2, 2)
+    assert typed_write_path["live"] == 1          # the upserted u1
 
 
 def test_delete_documents_jobs(write_path):
